@@ -52,11 +52,6 @@ def main() -> None:
             pass
 
     qs = dict(E.queries())
-    if hasattr(E, "queries_staged"):
-        # staged queries (window-overflow queue) are timed like live
-        # ones — their r9 cost lands in this round's detail instead of
-        # arriving unmeasured at their r10 window promotion
-        qs.update(E.queries_staged())
     bench_names = list(qs)
     timings: dict[str, float] = {}
     n_events = None

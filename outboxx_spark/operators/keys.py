@@ -14,7 +14,7 @@ fallback stringifier; the int fast path is moot under Tungsten codegen.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -30,5 +30,19 @@ def partition_key(key_col: Column, *, fail_on_null: bool = True) -> Column:
     ).otherwise(key)
 
 
-def with_partition_key(df: DataFrame, routing_key: str = "user_id", *, fail_on_null: bool = True) -> DataFrame:
-    return df.withColumn("key", partition_key(F.col(routing_key), fail_on_null=fail_on_null))
+def routed_key(routing_keys: list[str], data_cols: list[str]) -> Column:
+    """R3 per stream, for a routed frame: each row is keyed on the
+    payload column its stream names in ``routing_key``. One distinct key
+    in the config is a plain column read; several are one CASE on the
+    ``routing_key`` column. A key that is not a payload column yields
+    null and so fails fast like a null key."""
+    keys = list(dict.fromkeys(routing_keys))
+    if len(keys) == 1 and keys[0] in data_cols:
+        return partition_key(F.col(keys[0]))
+    present = [k for k in keys if k in data_cols]
+    if not present:
+        return partition_key(F.lit(None))
+    choice = F.when(F.col("routing_key") == present[0], F.col(present[0]).cast("string"))
+    for k in present[1:]:
+        choice = choice.when(F.col("routing_key") == k, F.col(k).cast("string"))
+    return partition_key(choice)

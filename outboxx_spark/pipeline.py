@@ -1,43 +1,53 @@
-"""End-to-end batch CDC pipeline: feed -> route -> key -> envelope -> sink.
+"""The CDC delivery frame, shared by batch, stream and snapshot.
 
-The batch shape of the reference's hot path (`src/processor/
-processor.zig:150-184`): receive batch, match streams, serialize once,
-fan out per stream with a partition key, deliver. In Spark the whole
-thing is one declarative plan:
+The reference's hot path (`src/processor/processor.zig:150-184`):
+receive batch, match streams, serialize once, fan out per stream with a
+partition key, deliver. ``delivery_frame`` is that path, built once and
+called by every caller — the batch pipeline (``routed_envelopes``), the
+streaming micro-batch body and the snapshot phase
+(``streaming/job.py``):
 
-    parquet scan (pruned)            -- S1 analog
-      -> project feed columns        -- S8 converter
+    flat feed frame                  -- S8 converter output
       -> to_json envelope            -- F1, serialize ONCE
       -> explode(config map lookup)  -- R1/R2, fan-out, no join at all
-      -> partition key               -- R3
-      -> sink (per-destination)      -- K1
+      -> partition key               -- R3, per-stream ``routing_key``
 
-Routing is a plan-constant map literal probed per event
+Each routed row is keyed on the payload column its own stream names in
+``routing_key`` (`processor.zig:231-252`), so batch and stream agree for
+any config. Routing is a plan-constant map literal probed per event
 (`operators/routing.py:route_config`) — no broadcast exchange, no
 per-plan createDataFrame. Catalyst keeps everything in one
-WholeStageCodegen span up to the sink; the only shuffle in the entire
-pipeline is the optional repartition by destination before a
-partitioned write.
+WholeStageCodegen span up to the sink.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from outboxx_spark.config import PipelineConfig
+from outboxx_spark.config import PipelineConfig, StreamConfig
 from outboxx_spark.dataops.util import parallelized
 from outboxx_spark.functions.envelope import serialize_feed
-from outboxx_spark.operators.keys import partition_key
+from outboxx_spark.operators.keys import routed_key
 from outboxx_spark.operators.routing import route_config
 from outboxx_spark.sources.feed import read_feed
 
 FEED_DATA_COLS = ["user_id", "event_type", "value", "props"]
 
+# what a sink receives: one row per (event, matched stream)
+DELIVERY_COLS = ["destination", "key", "value", "resource", "op", "lsn"]
 
-def routed_envelopes(
-    spark: SparkSession, sf_dir: str, config: PipelineConfig, *, fail_on_null_key: bool = True
-) -> DataFrame:
+
+def delivery_frame(feed: DataFrame, streams: list[StreamConfig], data_cols: list[str]) -> DataFrame:
+    """Flat feed frame -> serialized, routed, keyed frame: the feed's
+    columns plus ``value``, ``stream``, ``destination``, ``routing_key``
+    and ``key``. ``data_cols`` is the envelope payload and the set of
+    columns a ``routing_key`` may name."""
+    serialized = serialize_feed(feed, data_cols)  # once per event (F1)
+    routed = route_config(serialized, streams)  # fan-out (R1/R2)
+    return routed.withColumn("key", routed_key([s.routing_key for s in streams], data_cols))
+
+
+def routed_envelopes(spark: SparkSession, sf_dir: str, config: PipelineConfig) -> DataFrame:
     """The full routed, serialized, keyed output: one row per
     (event, matched stream) with columns (stream, destination, key, value,
     resource, op, lsn)."""
@@ -46,15 +56,4 @@ def routed_envelopes(
     # a single core. Spread it when under-partitioned; a real deployment
     # feed (Kafka / many files) skips this — inputFiles >= cores.
     feed = parallelized(read_feed(spark, sf_dir))
-    serialized = serialize_feed(feed, FEED_DATA_COLS)  # once per event
-    routed = route_config(serialized, config.streams)
-    return routed.withColumn(
-        "key", partition_key(F.col("user_id"), fail_on_null=fail_on_null_key)
-    ).select("stream", "destination", "key", "value", "resource", "op", "lsn")
-
-
-def write_routed(routed: DataFrame, out_dir: str) -> None:
-    """Batch sink: partition output files by destination (the per-topic
-    fan-out, K1 analog). A single partitioned write — not a per-stream
-    driver loop — so 1000 destinations still produce one job."""
-    routed.write.mode("overwrite").partitionBy("destination").parquet(out_dir)
+    return delivery_frame(feed, config.streams, FEED_DATA_COLS).select("stream", *DELIVERY_COLS)

@@ -37,24 +37,20 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
+from outboxx_spark.sources.feed import N_VIRTUAL_TABLES, OP_BY_EVENT_TYPE
+
 FEED_SCHEMA_DDL = (
     "op string, resource string, lsn long, commit_ts long, "
     "user_id long, event_type string, value double, props string"
 )
 
-_OP_BY_EVENT_TYPE = {
-    "signup": "INSERT",
-    "purchase": "INSERT",
-    "click": "UPDATE",
-    "view": "READ",
-}
 
 
 def _to_feed_row(event_id, ts_ns, user_id, event_type, value, props):
     # mirrors sources/feed.py: op CASE, virtual resource, ns -> unix s
     return (
-        _OP_BY_EVENT_TYPE.get(event_type, "DELETE"),
-        f"public.t{user_id % 4}",
+        OP_BY_EVENT_TYPE.get(event_type, "DELETE"),
+        f"public.t{user_id % N_VIRTUAL_TABLES}",
         event_id,
         ts_ns // 1_000_000_000,
         user_id,
@@ -97,15 +93,16 @@ class OutboxxCdcBatchReader(DataSourceReader):
         )
         event_type = table.column("event_type").combine_chunks()
         # op: dictionary lookup event_type -> op, unknowns -> DELETE
-        keys = pa.array(list(_OP_BY_EVENT_TYPE), type=pa.string())
-        vals = pa.array(list(_OP_BY_EVENT_TYPE.values()), type=pa.string())
+        keys = pa.array(list(OP_BY_EVENT_TYPE), type=pa.string())
+        vals = pa.array(list(OP_BY_EVENT_TYPE.values()), type=pa.string())
         idx = pc.index_in(event_type, value_set=keys)
         op = pc.fill_null(pc.take(vals, idx), "DELETE")
         user_id = pc.cast(table.column("user_id"), pa.int64())
         resource = pc.binary_join_element_wise(
             pa.array(["public.t"] * len(table), type=pa.string()),
-            # user_id % 4 (this pyarrow has no modulo kernel; 4 is a power of 2)
-            pc.cast(pc.bit_wise_and(user_id, 3), pa.string()),
+            # user_id % N_VIRTUAL_TABLES (this pyarrow has no modulo
+            # kernel; the table count is a power of 2)
+            pc.cast(pc.bit_wise_and(user_id, N_VIRTUAL_TABLES - 1), pa.string()),
             "",
         )
         ts = table.column("ts")

@@ -33,13 +33,16 @@ from outboxx_spark.sources.tables import read_table
 #   lsn      : event_id (monotonic, the dedup key, O4)
 #   key      : user_id  (routing_key column)
 #   commit ts: ts -> Unix seconds
+OP_BY_EVENT_TYPE = {
+    "signup": "INSERT",
+    "purchase": "INSERT",
+    "click": "UPDATE",
+    "view": "READ",
+}  # any other event_type -> DELETE
 OP_CASE_SQL = (
     "CASE event_type "
-    "WHEN 'signup' THEN 'INSERT' "
-    "WHEN 'purchase' THEN 'INSERT' "
-    "WHEN 'click' THEN 'UPDATE' "
-    "WHEN 'view' THEN 'READ' "
-    "ELSE 'DELETE' END"
+    + "".join(f"WHEN '{et}' THEN '{op}' " for et, op in OP_BY_EVENT_TYPE.items())
+    + "ELSE 'DELETE' END"
 )
 
 N_VIRTUAL_TABLES = 4
@@ -63,14 +66,9 @@ WITH feed AS (
 """
 
 
-def read_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events parquet -> flat change-feed DataFrame.
-
-    Kept flat (not yet the nested ChangeEvent struct) so Catalyst can
-    push column pruning into the parquet scan; the nested envelope is
-    built only at serialization (F1).
-    """
-    ev = read_table(spark, sf_dir, "events")
+def _to_feed(ev: DataFrame) -> DataFrame:
+    """The converter (S8 analog): events rows -> flat change-feed rows.
+    Shared by the batch and streaming readers."""
     return ev.select(
         F.expr(OP_CASE_SQL).alias("op"),
         F.concat(
@@ -84,6 +82,16 @@ def read_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("value"),
         F.col("props"),
     )
+
+
+def read_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """events parquet -> flat change-feed DataFrame.
+
+    Kept flat (not yet the nested ChangeEvent struct) so Catalyst can
+    push column pruning into the parquet scan; the nested envelope is
+    built only at serialization (F1).
+    """
+    return _to_feed(read_table(spark, sf_dir, "events"))
 
 
 def _streamable_dir(path: str) -> str:
@@ -135,16 +143,4 @@ def read_feed_stream(spark: SparkSession, sf_dir: str, max_files_per_trigger: in
     ts_field = static.schema["ts"]
     if isinstance(ts_field.dataType, T.LongType):
         ev = ev.withColumn("ts", F.timestamp_micros((F.col("ts") / 1000).cast("long")))
-    return ev.select(
-        F.expr(OP_CASE_SQL).alias("op"),
-        F.concat(
-            F.lit("public.t"),
-            (F.col("user_id") % N_VIRTUAL_TABLES).cast("string"),
-        ).alias("resource"),
-        F.col("event_id").alias("lsn"),
-        F.unix_timestamp("ts").alias("commit_ts"),
-        F.col("user_id"),
-        F.col("event_type"),
-        F.col("value"),
-        F.col("props"),
-    )
+    return _to_feed(ev)

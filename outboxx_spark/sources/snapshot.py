@@ -24,6 +24,18 @@ from outboxx_spark.schemas import OP_READ
 from outboxx_spark.sources.tables import read_table
 
 
+def _stamp_read(df: DataFrame, resource: str, start_lsn: int, snapshot_ts: int) -> DataFrame:
+    """Table rows -> READ change events: literal op/resource/lsn/commit_ts
+    ahead of the table's own columns (the payload)."""
+    return df.select(
+        F.lit(OP_READ).alias("op"),
+        F.lit(resource).alias("resource"),
+        F.lit(start_lsn).cast("long").alias("lsn"),
+        F.lit(snapshot_ts).cast("long").alias("commit_ts"),
+        "*",
+    )
+
+
 def snapshot_table(
     spark: SparkSession,
     sf_dir: str,
@@ -38,13 +50,8 @@ def snapshot_table(
     Returns a flat frame: op, resource, lsn, commit_ts + the table's own
     columns as the payload (typed path; the envelope builder nests them).
     """
-    df = read_table(spark, sf_dir, table)
-    return df.select(
-        F.lit(OP_READ).alias("op"),
-        F.lit(resource or f"public.{table}").alias("resource"),
-        F.lit(start_lsn).cast("long").alias("lsn"),
-        F.lit(snapshot_ts).cast("long").alias("commit_ts"),
-        "*",
+    return _stamp_read(
+        read_table(spark, sf_dir, table), resource or f"public.{table}", start_lsn, snapshot_ts
     )
 
 
@@ -79,27 +86,5 @@ def snapshot_table_jdbc(
         )
     for k, v in (properties or {}).items():
         reader = reader.option(k, v)
-    df = reader.load()
-    return df.select(
-        F.lit(OP_READ).alias("op"),
-        F.lit(f"public.{table}").alias("resource"),
-        F.lit(start_lsn).cast("long").alias("lsn"),
-        F.lit(snapshot_ts).cast("long").alias("commit_ts"),
-        "*",
-    )
+    return _stamp_read(reader.load(), f"public.{table}", start_lsn, snapshot_ts)
 
-
-def snapshot_resources(
-    spark: SparkSession,
-    sf_dir: str,
-    tables: list[str],
-    *,
-    start_lsn: int,
-    snapshot_ts: int,
-) -> dict[str, DataFrame]:
-    """Snapshot a deduped resource set (O5) — each table once, even when
-    several streams read it (`processor.zig:280-298`)."""
-    return {
-        t: snapshot_table(spark, sf_dir, t, start_lsn=start_lsn, snapshot_ts=snapshot_ts)
-        for t in dict.fromkeys(tables)
-    }

@@ -16,9 +16,10 @@ Reproduces the reference's orchestration (SURVEY §2.6/§3):
 - O6 graceful shutdown: ``query.stop()``; checkpoint makes restart safe.
 - M1/M4: per-batch tally + lag into the MetricsRegistry.
 
-Sink: partitioned parquet per destination here (the testbed has no
-Kafka broker); `df.write.format("kafka")` with the reference's producer
-options is a one-line swap (see ``kafka_writer_options``).
+Every micro-batch and the snapshot build their output with
+``pipeline.delivery_frame``, the same frame the batch pipeline uses.
+Sink: ``sink_fn`` delivers to Kafka (``kafka_sink.make_kafka_sink``);
+without it the output is partitioned parquet per destination.
 """
 
 from __future__ import annotations
@@ -31,10 +32,7 @@ from pyspark.sql import functions as F
 
 from outboxx_spark.config import PipelineConfig
 from outboxx_spark.fsutil import fs_exists
-from outboxx_spark.functions.envelope import serialize_feed
-from outboxx_spark.operators.keys import partition_key
-from outboxx_spark.operators.routing import route_config
-from outboxx_spark.pipeline import FEED_DATA_COLS
+from outboxx_spark.pipeline import DELIVERY_COLS, FEED_DATA_COLS, delivery_frame
 from outboxx_spark.sources.feed import read_feed_stream
 from outboxx_spark.sources.snapshot import snapshot_table
 from outboxx_spark.streaming.metrics import MetricsRegistry
@@ -70,22 +68,6 @@ def kafka_writer_options(
 
         opts.update(kafka_security_options(security))
     return opts
-
-
-def _dynamic_key(data_cols: list[str]) -> F.Column:
-    """R3 with per-stream routing_key: the configured column name (a
-    *value* in the routed row) selects the payload column. A literal
-    name->value map keeps this codegen'd; missing/null key fails fast."""
-    kv = []
-    for c in data_cols:
-        kv += [F.lit(c), F.col(c).cast("string")]
-    return partition_key(F.create_map(*kv)[F.col("routing_key")])
-
-
-def _route_and_serialize(batch: DataFrame, streams: list) -> DataFrame:
-    serialized = serialize_feed(batch, FEED_DATA_COLS)  # once per event (F1)
-    routed = route_config(serialized, streams)  # fan-out (R1/R2)
-    return routed.withColumn("key", _dynamic_key(FEED_DATA_COLS))  # R3
 
 
 def snapshot_tables_preflight(
@@ -134,7 +116,7 @@ def run_snapshot_phase(
 ) -> int:
     """Bootstrap: write READ events for every read-opted resource before
     streaming starts (O3). The write is the flush barrier — any failure
-    aborts the job before an offset is ever committed. Returns rows
+    aborts the job before an offset is ever committed. Returns tables
     written."""
     total = 0
     for resource in snapshot_tables_preflight(sf_dir, config, spark):
@@ -143,10 +125,7 @@ def run_snapshot_phase(
             spark, sf_dir, table, start_lsn=start_lsn, snapshot_ts=snapshot_ts
         )
         data_cols = [c for c in snap.columns if c not in ("op", "resource", "lsn", "commit_ts")]
-        serialized = serialize_feed(snap, data_cols)
-        routed = route_config(serialized, config.streams)
-        keyed = routed.withColumn("key", _dynamic_key(data_cols))
-        out = keyed.select("destination", "key", "value", "resource", "op", "lsn")
+        out = delivery_frame(snap, config.streams, data_cols).select(*DELIVERY_COLS)
         out.write.mode("append").partitionBy("destination").parquet(out_dir)
         total += 1
     return total
@@ -171,66 +150,55 @@ def start_stream(
     with dynamic partition overwrite, so a replayed micro-batch
     *replaces* its own epoch partition instead of appending duplicates —
     idempotent-producer semantics for files (the Kafka path gets the
-    same from ``enable.idempotence`` + checkpoint replay)."""
+    same from ``enable.idempotence`` + checkpoint replay). It is a file
+    sink mode, so it cannot be combined with ``sink_fn``."""
+    if exactly_once and sink_fn is not None:
+        raise ValueError("exactly_once is a file-sink mode; it cannot be combined with sink_fn")
     registry = registry or MetricsRegistry()
     streams = config.streams
 
     def process_batch(batch: DataFrame, epoch_id: int) -> None:
-        if exactly_once:
-            out = _route_and_serialize(batch, streams).withColumn("epoch", F.lit(epoch_id))
-            (
-                out.select("epoch", "destination", "key", "value", "resource", "op", "lsn")
-                .write.mode("overwrite")
-                # per-write option, not session conf: a session-global
-                # partitionOverwriteMode=dynamic would silently change every
-                # later mode("overwrite") in the same SparkSession
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("epoch", "destination")
-                .parquet(out_dir)
-            )
-            if registry is not None:
-                for r in out.groupBy("stream", "op").agg(F.count("*").alias("n")).collect():
-                    registry.add_processed(r["stream"], r["op"], r["n"])
-            return
-        out = _route_and_serialize(batch, streams)
-        if registry is not None:
-            # cache so the post-write tally doesn't recompute the
-            # serialize+route plan (micro-batch lifetime = arena, O1)
-            out = out.persist()
+        # cache so the post-write tally doesn't recompute the
+        # serialize+route plan (micro-batch lifetime = arena, O1)
+        out = delivery_frame(batch, streams, FEED_DATA_COLS).persist()
         try:
-            # Single partitioned append per micro-batch: one job regardless
-            # of destination count (no per-stream driver loop).
+            # One write per micro-batch, one job regardless of
+            # destination count (no per-stream driver loop).
             # ``sink_fn`` is the producer-injection seam (the reference
             # tests its producer against a mock cluster the same way,
             # producer.zig:431-502); a raise here fails the micro-batch
             # BEFORE the checkpoint commit -> fail-fast + replay (K6/O2).
-            delivery = out.select("destination", "key", "value", "resource", "op", "lsn")
+            delivery = out.select(*DELIVERY_COLS)
             if sink_fn is not None:
                 sink_fn(delivery, epoch_id)
-            else:
+            elif exactly_once:
                 (
-                    delivery
-                    .write.mode("append")
-                    .partitionBy("destination")
+                    delivery.select(F.lit(epoch_id).alias("epoch"), *DELIVERY_COLS)
+                    .write.mode("overwrite")
+                    # per-write option, not session conf: a session-global
+                    # partitionOverwriteMode=dynamic would silently change every
+                    # later mode("overwrite") in the same SparkSession
+                    .option("partitionOverwriteMode", "dynamic")
+                    .partitionBy("epoch", "destination")
                     .parquet(out_dir)
                 )
+            else:
+                delivery.write.mode("append").partitionBy("destination").parquet(out_dir)
             # A1 tally + M4 lag: tiny aggregates, computed after the sink
             # write like the reference (metrics reflect *delivered* events).
-            if registry is not None:
-                rows = (
-                    out.groupBy("stream", "op")
-                    .agg(F.count("*").alias("n"), F.max("commit_ts").alias("head"))
-                    .collect()
-                )
-                head = None
-                for r in rows:
-                    registry.add_processed(r["stream"], r["op"], r["n"])
-                    head = max(head or 0, r["head"] or 0)
-                if head:
-                    registry.set_lag(time.time() - head)
+            rows = (
+                out.groupBy("stream", "op")
+                .agg(F.count("*").alias("n"), F.max("commit_ts").alias("head"))
+                .collect()
+            )
+            head = None
+            for r in rows:
+                registry.add_processed(r["stream"], r["op"], r["n"])
+                head = max(head or 0, r["head"] or 0)
+            if head:
+                registry.set_lag(time.time() - head)
         finally:
-            if registry is not None:
-                out.unpersist()
+            out.unpersist()
 
     return (
         read_feed_stream(spark, sf_dir, max_files_per_trigger)

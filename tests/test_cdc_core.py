@@ -23,7 +23,7 @@ from outboxx_spark.functions.typemap import (
     pg_int_typed,
     toast_or_value,
 )
-from outboxx_spark.operators.keys import partition_key
+from outboxx_spark.operators.keys import partition_key, routed_key
 from outboxx_spark.operators.routing import route, streams_dim
 from outboxx_spark.operators.dedup import dedup_events
 from outboxx_spark.testbed import DEFAULT_STREAMS
@@ -56,6 +56,20 @@ def test_partition_key_null_allowed_when_disabled(spark):
     df = spark.createDataFrame([(None,)], "k long")
     out = df.select(partition_key(F.col("k"), fail_on_null=False)).collect()
     assert out[0][0] is None
+
+
+def test_routed_key_reads_each_rows_own_routing_key(spark):
+    # R3 per stream: a routed row is keyed on the column its stream
+    # names; a key that is not a payload column fails fast
+    df = spark.createDataFrame(
+        [(1, "x", "a"), (2, "y", "b"), (3, "z", "a")], "a long, b string, routing_key string"
+    )
+    out = df.select(routed_key(["a", "b", "a"], ["a", "b"])).collect()
+    assert [r[0] for r in out] == ["1", "y", "3"]
+    with pytest.raises(Exception, match="PartitionKeyUnavailable"):
+        df.select(routed_key(["a", "b"], ["a"])).collect()
+    with pytest.raises(Exception, match="PartitionKeyUnavailable"):
+        df.select(routed_key(["c"], ["a", "b"])).collect()
 
 
 def test_float_json_safe_nonfinite(spark):

@@ -1,8 +1,8 @@
 """Driver-contract invariants over __spark_entry__ — pure dict checks,
 no Spark session. These pin the properties the driver's correctness
 pass depends on (and that a future queries() rotation could silently
-break): oracle coverage, name uniqueness, and the staged r5 queue
-staying disjoint from the live surface until its promotion."""
+break): oracle coverage, name uniqueness, and the driver window
+rotation."""
 
 from __future__ import annotations
 
@@ -270,13 +270,6 @@ def test_oracle_snapshot_is_current():
     )
 
 
-def test_staged_queue_is_disjoint_and_oracle_complete():
-    staged_q, staged_o = E.queries_staged(), E.oracle_sql_staged()
-    assert set(staged_q) == set(staged_o)
-    live = set(E.queries())
-    assert not (set(staged_q) & live), "staged name collides with queries()"
-
-
 def test_touched_tool_sees_constant_and_function_changes():
     # unit-level pin of the derivation's three entry-file signals:
     # function-body diffs, module-constant diffs, and the co_names
@@ -324,7 +317,7 @@ def test_externally_defined_queries_carry_their_home_module():
 
 
 def test_all_callables():
-    for name, fn in {**E.queries(), **E.queries_staged()}.items():
+    for name, fn in E.queries().items():
         assert callable(fn), name
 
 

@@ -10,6 +10,7 @@ import pytest
 
 from outboxx_spark.pipeline import routed_envelopes
 from outboxx_spark.streaming.job import start_stream
+from outboxx_spark.streaming.metrics import MetricsRegistry
 from outboxx_spark.testbed import default_config
 
 SF = "/root/testdata/sf0.001"
@@ -47,3 +48,25 @@ def test_exactly_once_no_duplicates_across_restart(spark, multi_file_feed, tmp_p
     got_set = {tuple(r) for r in got.select("destination", "lsn").collect()}
     exp_set = {tuple(r) for r in expect.select("destination", "lsn").collect()}
     assert got_set == exp_set
+
+
+def test_exactly_once_tally_counts_delivered_rows(spark, multi_file_feed, tmp_path):
+    out_dir = str(tmp_path / "out")
+    reg = MetricsRegistry()
+    q = start_stream(
+        spark, multi_file_feed, default_config(), out_dir, str(tmp_path / "ckpt"), reg,
+        exactly_once=True,
+    )
+    q.awaitTermination(120)
+    assert sum(reg.events_processed.values()) == spark.read.parquet(out_dir).count()
+    assert reg.replication_lag_seconds > 0  # M4 lag, as on the other sinks
+
+
+def test_exactly_once_rejects_sink_fn(spark, tmp_path):
+    # exactly_once is a file-sink mode: combining it with a producer
+    # must fail loudly, not silently drop the sink
+    with pytest.raises(ValueError, match="sink_fn"):
+        start_stream(
+            spark, SF, default_config(), str(tmp_path / "out"), str(tmp_path / "ckpt"),
+            exactly_once=True, sink_fn=lambda df, epoch: None,
+        )

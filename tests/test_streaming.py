@@ -15,7 +15,7 @@ from outboxx_spark.operators.dedup import dedup_events
 from outboxx_spark.pipeline import routed_envelopes
 from outboxx_spark.streaming.job import run_snapshot_phase, start_stream
 from outboxx_spark.streaming.metrics import CdcQueryListener, MetricsRegistry
-from outboxx_spark.testbed import default_config
+from outboxx_spark.testbed import DEFAULT_STREAMS, default_config
 
 SF = "/root/testdata/sf0.001"
 
@@ -35,15 +35,29 @@ def _read_out(spark, out_dir):
     return spark.read.parquet(out_dir)
 
 
-def test_stream_matches_batch_pipeline(spark, multi_file_feed, tmp_path):
+def _keyed_on(keys):
+    """The testbed streams, stream i keyed on keys[i % len(keys)]."""
+    return validate(PipelineConfig(streams=[
+        make_stream(s.name, s.resource, s.operations, s.destination, keys[i % len(keys)])
+        for i, s in enumerate(DEFAULT_STREAMS)
+    ]))
+
+
+@pytest.mark.parametrize(
+    "cfg",
+    [default_config(), _keyed_on(["event_type"]), _keyed_on(["event_type", "user_id"])],
+    ids=["user_id", "event_type", "mixed"],
+)
+def test_stream_matches_batch_pipeline(spark, multi_file_feed, tmp_path, cfg):
+    # batch and stream honour each stream's routing_key identically
     out_dir = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
     reg = MetricsRegistry()
-    q = start_stream(spark, multi_file_feed, default_config(), out_dir, ckpt, reg)
+    q = start_stream(spark, multi_file_feed, cfg, out_dir, ckpt, reg)
     q.awaitTermination(120)
 
     got = _read_out(spark, out_dir)
-    expect = routed_envelopes(spark, multi_file_feed, default_config())
+    expect = routed_envelopes(spark, multi_file_feed, cfg)
     key_cols = ["destination", "key", "lsn", "op"]
     got_set = {tuple(r) for r in got.select(*key_cols).collect()}
     exp_set = {tuple(r) for r in expect.select(*key_cols).collect()}

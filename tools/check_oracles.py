@@ -161,12 +161,6 @@ def run_gate(sf_dir: str, only: set[str]) -> int:
 
     t_build0 = time.monotonic()
     qs, oracles = E.queries(), E.oracle_sql()
-    # staged queries (the r5 promotion queue) are invisible to the driver
-    # but held to the same gate locally, so promotion is a pure dict move
-    if hasattr(E, "queries_staged"):
-        for name, fn in E.queries_staged().items():
-            qs[f"{name}"] = fn
-        oracles.update(E.oracle_sql_staged())
     t_build = time.monotonic() - t_build0
     print(f"# queries()+oracle_sql() build: {t_build:.2f}s")
     failures = typewarns = 0

@@ -40,9 +40,8 @@ def main() -> int:
     from pyspark.sql import functions as F
 
     from outboxx_spark.functions.envelope import serialize_feed
-    from outboxx_spark.operators.keys import partition_key
     from outboxx_spark.operators.routing import route_config
-    from outboxx_spark.pipeline import FEED_DATA_COLS
+    from outboxx_spark.pipeline import FEED_DATA_COLS, delivery_frame
     from outboxx_spark.session import get_spark
     from outboxx_spark.sources.feed import read_feed
     from outboxx_spark.sources.pgoutput import decode_stream, encode_feed_as_pgoutput
@@ -81,9 +80,7 @@ def main() -> int:
             "converter": feed,  # op mapping, resource, lsn, commit_ts (S8/S9)
             "serialize": lambda: serialize_feed(feed(), FEED_DATA_COLS),  # F1
             "route": lambda: route_config(serialize_feed(feed(), FEED_DATA_COLS), streams),  # R1/R2
-            "key": lambda: route_config(serialize_feed(feed(), FEED_DATA_COLS), streams).withColumn(
-                "key", partition_key(F.col("user_id"))
-            ),  # R3
+            "key": lambda: delivery_frame(feed(), streams, FEED_DATA_COLS),  # R3
         }
         cumulative = {}
         spreads = {}

@@ -169,10 +169,7 @@ def audit(sf_dir: str) -> dict[str, dict]:
 
     spark = get_spark("plan-audit")
     out: dict[str, dict] = {}
-    live = dict(E.queries())
-    if hasattr(E, "queries_staged"):  # staged queries get the same audit
-        live.update(E.queries_staged())
-    for name, fn in live.items():
+    for name, fn in E.queries().items():
         try:
             buf = io.StringIO()
             with contextlib.redirect_stdout(buf):

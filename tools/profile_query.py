@@ -31,9 +31,7 @@ def main() -> None:
     sc = spark.sparkContext
     import __spark_entry__ as E
 
-    qs = dict(E.queries())
-    if hasattr(E, "queries_staged"):
-        qs.update(E.queries_staged())
+    qs = E.queries()
 
     # warm the session the same way bench.py does
     spark.range(1000).selectExpr("sum(id)").collect()
