@@ -8,7 +8,9 @@ routing (R1/R2), key extraction (R3), envelope serialization (F1) and
 the Kafka producer configs (K1); the checkpoint commits offsets only
 after the sink write returns (K3/O2 — a produce failure fails the
 micro-batch BEFORE the commit, so restart replays it). The per-batch
-tally/lag pattern mirrors streaming/job.py's process_batch.
+tally/lag is a groupBy over the persisted frame after the write, not
+streaming/metrics.tally_delivered: the Kafka connector's batch write
+runs its query as a bare RDD job, which never reports observed metrics.
 Configuration is the same TOML shape the reference uses
 (config_toml.load_config).
 

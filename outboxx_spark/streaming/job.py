@@ -6,17 +6,18 @@ Reproduces the reference's orchestration (SURVEY §2.6/§3):
   (op=READ, shared start LSN) FIRST, with a hard barrier (the batch write
   either completes or the job fails — the flush-barrier analog), then
   start the streaming query.
-- O1 batch loop: each micro-batch routes, serializes once, fans out
-  per-destination — the body of `processChangesToKafka`
+- O1 batch loop: routing is declared once per query; each micro-batch
+  body only delivers — the body of `processChangesToKafka`
   (`src/processor/processor.zig:150-184`).
 - O2 at-least-once: Structured Streaming's checkpoint commits offsets
   only after the foreachBatch body returns — exactly the reference's
   'confirm LSN to Postgres only after Kafka flush' contract. Replays
   re-produce a suffix; consumers dedup on (resource, lsn) (O4).
 - O6 graceful shutdown: ``query.stop()``; checkpoint makes restart safe.
-- M1/M4: per-batch tally + lag into the MetricsRegistry.
+- M1/M4: per-batch tally + lag observed on the delivering write
+  (``metrics.tally_delivered``), for stream and snapshot alike.
 
-Every micro-batch and the snapshot build their output with
+The stream and the snapshot build their output with
 ``pipeline.delivery_frame``, the same frame the batch pipeline uses.
 Sink: ``sink_fn`` delivers to Kafka (``kafka_sink.make_kafka_sink``);
 without it the output is partitioned parquet per destination.
@@ -35,7 +36,7 @@ from outboxx_spark.fsutil import fs_exists
 from outboxx_spark.pipeline import DELIVERY_COLS, FEED_DATA_COLS, delivery_frame
 from outboxx_spark.sources.feed import read_feed_stream
 from outboxx_spark.sources.snapshot import snapshot_table
-from outboxx_spark.streaming.metrics import MetricsRegistry
+from outboxx_spark.streaming.metrics import MetricsRegistry, tally_delivered
 
 
 def kafka_writer_options(
@@ -113,11 +114,12 @@ def run_snapshot_phase(
     *,
     start_lsn: int,
     snapshot_ts: int,
+    registry: MetricsRegistry,
 ) -> int:
     """Bootstrap: write READ events for every read-opted resource before
     streaming starts (O3). The write is the flush barrier — any failure
     aborts the job before an offset is ever committed. Returns tables
-    written."""
+    written; their READ events are tallied into ``registry``."""
     total = 0
     for resource in snapshot_tables_preflight(sf_dir, config, spark):
         table = resource.split(".", 1)[1]
@@ -125,8 +127,15 @@ def run_snapshot_phase(
             spark, sf_dir, table, start_lsn=start_lsn, snapshot_ts=snapshot_ts
         )
         data_cols = [c for c in snap.columns if c not in ("op", "resource", "lsn", "commit_ts")]
-        out = delivery_frame(snap, config.streams, data_cols).select(*DELIVERY_COLS)
-        out.write.mode("append").partitionBy("destination").parquet(out_dir)
+        tally_delivered(
+            registry,
+            delivery_frame(snap, config.streams, data_cols),
+            config.streams,
+            lambda out: out.select(*DELIVERY_COLS)
+            .write.mode("append")
+            .partitionBy("destination")
+            .parquet(out_dir),
+        )
         total += 1
     return total
 
@@ -142,8 +151,17 @@ def start_stream(
     exactly_once: bool = False,
     sink_fn=None,
 ):
-    """The streaming query. foreachBatch body = the reference's hot path;
-    checkpoint commit after the body = the at-least-once core (O2).
+    """The streaming query: the delivery frame is declared once over
+    the stream, the foreachBatch body only delivers it; checkpoint
+    commit after the body = the at-least-once core (O2).
+
+    ``sink_fn(delivery, epoch_id)``'s first DataFrame action on
+    ``delivery`` must consume every row (write, ``count``, ``collect``,
+    ``mapInPandas``), as every in-repo sink does: the tally is observed
+    on that action and read after the sink returns. A leading
+    ``isEmpty``/``take`` guard undercounts; a sink that runs no
+    DataFrame action fails the micro-batch before its commit
+    (``metrics.tally_delivered``).
 
     ``exactly_once=True`` upgrades the file sink beyond the reference's
     guarantee: output is partitioned by (epoch, destination) and written
@@ -158,10 +176,7 @@ def start_stream(
     streams = config.streams
 
     def process_batch(batch: DataFrame, epoch_id: int) -> None:
-        # cache so the post-write tally doesn't recompute the
-        # serialize+route plan (micro-batch lifetime = arena, O1)
-        out = delivery_frame(batch, streams, FEED_DATA_COLS).persist()
-        try:
+        def write(out: DataFrame) -> None:
             # One write per micro-batch, one job regardless of
             # destination count (no per-stream driver loop).
             # ``sink_fn`` is the producer-injection seam (the reference
@@ -184,24 +199,13 @@ def start_stream(
                 )
             else:
                 delivery.write.mode("append").partitionBy("destination").parquet(out_dir)
-            # A1 tally + M4 lag: tiny aggregates, computed after the sink
-            # write like the reference (metrics reflect *delivered* events).
-            rows = (
-                out.groupBy("stream", "op")
-                .agg(F.count("*").alias("n"), F.max("commit_ts").alias("head"))
-                .collect()
-            )
-            head = None
-            for r in rows:
-                registry.add_processed(r["stream"], r["op"], r["n"])
-                head = max(head or 0, r["head"] or 0)
-            if head:
-                registry.set_lag(time.time() - head)
-        finally:
-            out.unpersist()
 
+        tally_delivered(registry, batch, streams, write)
+
+    feed = read_feed_stream(spark, sf_dir, max_files_per_trigger)
     return (
-        read_feed_stream(spark, sf_dir, max_files_per_trigger)
+        delivery_frame(feed, streams, FEED_DATA_COLS)
+        .select("stream", "commit_ts", *DELIVERY_COLS)
         .writeStream.foreachBatch(process_batch)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
@@ -222,10 +226,12 @@ def run_pipeline(
 ) -> None:
     """Full bootstrap-then-stream ordering (O3): snapshot write completes
     (or fails the job) before the first streaming offset commits."""
+    registry = registry or MetricsRegistry()
     if config.snapshot_resources():
         snap_ts = snapshot_ts if snapshot_ts is not None else int(time.time())
         run_snapshot_phase(
-            spark, sf_dir, config, out_dir, start_lsn=snapshot_lsn, snapshot_ts=snap_ts
+            spark, sf_dir, config, out_dir,
+            start_lsn=snapshot_lsn, snapshot_ts=snap_ts, registry=registry,
         )
     q = start_stream(
         spark, sf_dir, config, out_dir, checkpoint_dir, registry

@@ -38,10 +38,8 @@ def make_kafka_sink(
     host: str,
     port: int,
     *,
-    acks: int = -1,
     retries: int = 3,
     retry_backoff_ms: int = 500,
-    n_partitions: int | None = None,
     bootstrap: list[tuple[str, int]] | None = None,
     sink_parallelism: int | None = None,
     tls_ca: str | None = None,
@@ -89,7 +87,6 @@ def make_kafka_sink(
             producer = WireProducer(
                 host,
                 port,
-                acks=acks,
                 retries=retries,
                 retry_backoff_ms=retry_backoff_ms,
                 bootstrap=bootstrap,
@@ -104,12 +101,7 @@ def make_kafka_sink(
                         pdf["key"].values,
                         pdf["value"].values,
                     ):
-                        send(
-                            dest,
-                            key if key is not None else None,
-                            value if value is not None else None,
-                            n_partitions=n_partitions,
-                        )
+                        send(dest, key, value)
                 producer.flush()  # the task-local flush barrier (K3)
             finally:
                 producer.close()

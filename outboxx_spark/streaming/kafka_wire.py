@@ -15,8 +15,8 @@ Reference parity (`src/sink/kafka/producer.zig`):
   retried up to ``retries`` times; exhaustion increments
   ``delivery_errors`` and raises (K6 fail-fast — the supervisor
   restarts and the checkpoint replays, at-least-once).
-- **acks=all** (-1) is the default, like ``enable.idempotence`` forces
-  in the reference.
+- **acks=all** (-1, ``ACKS_ALL``) on every produce, like
+  ``enable.idempotence`` forces in the reference.
 - **default partitioner** = murmur2(key) & 0x7fffffff mod n — the same
   function librdkafka and the Java client use, so partition placement
   matches what the reference's producer would do for the same key.
@@ -64,6 +64,10 @@ ERR_UNSUPPORTED_SASL_MECHANISM = 33
 ERR_SASL_AUTHENTICATION_FAILED = 58
 
 RETRIABLE_ERRORS = {ERR_REQUEST_TIMED_OUT, ERR_NOT_LEADER, ERR_CORRUPT_MESSAGE}
+
+# every Produce request: acks=all, 30 s broker-side timeout
+ACKS_ALL = -1
+PRODUCE_TIMEOUT_MS = 30000
 
 # key->partition memo bound (see WireProducer._part_cache)
 _PART_CACHE_MAX = 1 << 17
@@ -267,15 +271,14 @@ def scram_hmac(mechanism: str, key: bytes, msg: bytes) -> bytes:
     return hmac_mod.new(key, msg, SCRAM_HASHES[mechanism]).digest()
 
 
-def encode_produce_payload(
-    batches: list[tuple[str, int, bytes]], acks: int, timeout_ms: int
-) -> bytes:
+def encode_produce_payload(batches: list[tuple[str, int, bytes]]) -> bytes:
     """Produce v2 request body for ``(topic, partition, message_set)``
-    batches — the protocol's native multi-partition form."""
+    batches — the protocol's native multi-partition form, so a flush
+    costs one round trip per BROKER rather than one per partition."""
     by_topic: dict[str, list[tuple[int, bytes]]] = {}
     for t, p, ms in batches:
         by_topic.setdefault(t, []).append((p, ms))
-    payload = struct.pack(">hi", acks, timeout_ms) + struct.pack(
+    payload = struct.pack(">hi", ACKS_ALL, PRODUCE_TIMEOUT_MS) + struct.pack(
         ">i", len(by_topic)
     )
     for t, parts in by_topic.items():
@@ -457,37 +460,13 @@ class KafkaConnection:
             out["topics"][tname] = {"error": terr, "partitions": parts}
         return out
 
-    # -- Produce v2 (acks, timeout; one or many topic-partition batches) --
+    # -- Produce v2 (one topic-partition batch, synchronous) --
 
-    def produce_multi(
-        self,
-        batches: list[tuple[str, int, bytes]],
-        *,
-        acks: int = -1,
-        timeout_ms: int = 30000,
-    ) -> dict[tuple[str, int], dict]:
-        """One Produce request carrying every ``(topic, partition,
-        message_set)`` batch — the protocol's native multi-partition
-        form, so a flush costs one round trip per BROKER rather than
-        one per partition. -> {(topic, partition): {error, base_offset}}
-        with per-partition error codes (a mixed response is normal
-        after a leadership move)."""
-        r = self.request(
-            API_PRODUCE, 2, encode_produce_payload(batches, acks, timeout_ms)
-        )
-        return parse_produce_response(r)
-
-    def produce(
-        self,
-        topic: str,
-        partition: int,
-        message_set: bytes,
-        *,
-        acks: int = -1,
-        timeout_ms: int = 30000,
-    ) -> dict:
-        res = self.produce_multi(
-            [(topic, partition, message_set)], acks=acks, timeout_ms=timeout_ms
+    def produce(self, topic: str, partition: int, message_set: bytes) -> dict:
+        res = parse_produce_response(
+            self.request(
+                API_PRODUCE, 2, encode_produce_payload([(topic, partition, message_set)])
+            )
         )
         val = res.get((topic, partition))
         if val is None:
@@ -558,7 +537,6 @@ class WireProducer:
 
     host: str
     port: int
-    acks: int = -1  # acks=all
     retries: int = 3
     retry_backoff_ms: int = 500
     batch_max_messages: int = 5000  # BATCH_SIZE analog (constants.zig:21)
@@ -723,36 +701,34 @@ class WireProducer:
         key: bytes | None,
         value: bytes | None,
         *,
-        partition: int | None = None,
         n_partitions: int | None = None,
-        timestamp_ms: int | None = None,
     ) -> None:
-        """Buffer one record. Partition = explicit, else murmur2 of the
-        key over ``n_partitions`` (metadata-resolved when absent).
+        """Buffer one record, placed by murmur2 of the key over
+        ``n_partitions`` (metadata-resolved when absent), stamped with
+        the current time.
         Buffering past batch_max_messages flushes inline — the
         queue-full-is-backpressure contract (K2, `producer.zig:286`)."""
-        if partition is None:
+        if n_partitions is None:
+            n_partitions = self._npart.get(topic)
             if n_partitions is None:
+                self._refresh_metadata(topic)
                 n_partitions = self._npart.get(topic)
-                if n_partitions is None:
-                    self._refresh_metadata(topic)
-                    n_partitions = self._npart.get(topic)
-                if n_partitions is None:
-                    # a successful refresh that omits the topic is an
-                    # anomaly (no auto-create / ACL hole) — surface it
-                    # instead of silently funneling every record to
-                    # partition 0 (r11 advice)
-                    raise KafkaWireError(
-                        f"topic {topic!r} absent from metadata response"
-                    )
-            ck = (key or b"", n_partitions)
-            partition = self._part_cache.get(ck)
-            if partition is None:
-                partition = partition_for(ck[0], n_partitions)
-                if len(self._part_cache) >= _PART_CACHE_MAX:
-                    self._part_cache.clear()
-                self._part_cache[ck] = partition
-        ts = timestamp_ms if timestamp_ms is not None else int(time.time() * 1000)
+            if n_partitions is None:
+                # a successful refresh that omits the topic is an
+                # anomaly (no auto-create / ACL hole) — surface it
+                # instead of silently funneling every record to
+                # partition 0 (r11 advice)
+                raise KafkaWireError(
+                    f"topic {topic!r} absent from metadata response"
+                )
+        ck = (key or b"", n_partitions)
+        partition = self._part_cache.get(ck)
+        if partition is None:
+            partition = partition_for(ck[0], n_partitions)
+            if len(self._part_cache) >= _PART_CACHE_MAX:
+                self._part_cache.clear()
+            self._part_cache[ck] = partition
+        ts = int(time.time() * 1000)
         self._buf.setdefault((topic, partition), []).append((key, value, ts))
         self._buf_n += 1
         if self._buf_n >= self.batch_max_messages:
@@ -821,7 +797,7 @@ class WireProducer:
                 corr = conn.send_request(
                     API_PRODUCE,
                     2,
-                    encode_produce_payload(batches, self.acks, 30000),
+                    encode_produce_payload(batches),
                 )
             except (OSError, KafkaWireError):
                 self._drop_node_connection(node)
@@ -904,7 +880,7 @@ class WireProducer:
                 )
             try:
                 res = self._leader_connection(topic, partition).produce(
-                    topic, partition, message_set, acks=self.acks
+                    topic, partition, message_set
                 )
                 err = res["error"]
             except (OSError, KafkaWireError):

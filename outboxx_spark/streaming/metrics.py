@@ -8,12 +8,14 @@ plus liveness: no wire activity for 90 s => stalled
 (`src/constants.zig:43-53`, `processor.zig:393-399`) and health
 endpoints (`src/observability/http.zig`).
 
-Spark rebuild: a ``StreamingQueryListener`` feeds the same three
-instruments from query progress events; the tally itself is computed
-inside ``foreachBatch`` (one groupBy per micro-batch — the reference's
-per-batch metrics coalescing, `processor.zig:18-28`). Health = listener
-state, exposed as properties a /healthz HTTP thread can read; rendering
-to Prometheus text format is a straight serialization of the registry.
+Spark rebuild: a ``StreamingQueryListener`` feeds liveness and errors
+from query progress events; the tally itself is observed on the
+delivering write (``tally_delivered``: ``df.observe`` of one count per
+(stream, op) plus ``max(commit_ts)``, read after the write — the
+reference's per-batch metrics coalescing, `processor.zig:18-28`, done
+by the write's own job). Health = listener state, exposed as properties a
+/healthz HTTP thread can read; rendering to Prometheus text format is a
+straight serialization of the registry.
 """
 
 from __future__ import annotations
@@ -21,10 +23,18 @@ from __future__ import annotations
 import threading
 import time
 from collections import defaultdict
+from collections.abc import Callable
 
+from pyspark.sql import DataFrame, Observation
+from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQueryListener
 
+from outboxx_spark.config import StreamConfig
+
 LIVENESS_WINDOW_S = 90  # reference: src/constants.zig:52
+# observed metrics land a few ms after the action; this only bounds a
+# write that broke tally_delivered's contract
+OBSERVE_TIMEOUT_S = 60.0
 
 
 class MetricsRegistry:
@@ -79,6 +89,55 @@ class MetricsRegistry:
             lines.append("# TYPE outboxx_replication_lag_seconds gauge")
             lines.append(f"outboxx_replication_lag_seconds {self.replication_lag_seconds}")
         return "\n".join(lines) + "\n"
+
+
+def tally_delivered(
+    registry: MetricsRegistry,
+    frame: DataFrame,
+    streams: list[StreamConfig],
+    write: Callable[[DataFrame], None],
+) -> None:
+    """Run ``write`` on ``frame`` with the A1 tally (per configured
+    (stream, op), uppercase op labels) and the M4 lag (``commit_ts`` in
+    epoch seconds) attached as observed metrics; fold them into
+    ``registry`` after ``write`` returns, so only delivered events count
+    and a raising write tallies nothing.
+
+    Only the first DataFrame action on the observed frame reports, so
+    that action must consume every row (a write, ``count``, ``collect``,
+    ``mapInPandas``): a leading ``isEmpty``/``take``/``first`` fixes a
+    partial tally. A write that runs no DataFrame action (``.rdd``,
+    ``foreachPartition``, a connector that runs its query as a bare RDD)
+    never reports; after ``OBSERVE_TIMEOUT_S`` this raises, so the
+    micro-batch fails before its offset commit instead of hanging."""
+    pairs = [(s.name, op) for s in streams for op in s.operations]
+    obs = Observation()
+    write(
+        frame.observe(
+            obs,
+            *[
+                F.count_if((F.col("stream") == name) & (F.lower("op") == op)).alias(f"n{i}")
+                for i, (name, op) in enumerate(pairs)
+            ],
+            F.max("commit_ts").alias("head"),
+        )
+    )
+    # Observation.get has no timeout; wait on it from a daemon thread
+    got: list[dict] = []
+    reader = threading.Thread(target=lambda: got.append(obs.get), daemon=True)
+    reader.start()
+    reader.join(OBSERVE_TIMEOUT_S)
+    if not got:
+        raise RuntimeError(
+            f"no observed metrics {OBSERVE_TIMEOUT_S}s after the write returned: "
+            "it ran no DataFrame action on the frame, so the tally cannot be read"
+        )
+    row = got[0]
+    for i, (name, op) in enumerate(pairs):
+        if row[f"n{i}"]:
+            registry.add_processed(name, op.upper(), row[f"n{i}"])
+    if row["head"]:
+        registry.set_lag(time.time() - row["head"])
 
 
 class CdcQueryListener(StreamingQueryListener):

@@ -10,16 +10,21 @@ stub that can fail on command, proving
   error (M1),
 - a restart after the failure re-delivers the failed batch and drains
   the rest with no gaps (at-least-once, O2),
-- maxFilesPerTrigger bounds every micro-batch (backpressure, K2).
+- maxFilesPerTrigger bounds every micro-batch (backpressure, K2),
+- the tally is observed on the sink's first DataFrame action: a partial
+  first action undercounts, and a sink with no DataFrame action fails
+  the micro-batch before its commit instead of hanging it.
 """
 
 from __future__ import annotations
 
+import os
 import time
 
 import pytest
 
 from outboxx_spark.pipeline import routed_envelopes
+from outboxx_spark.streaming import metrics
 from outboxx_spark.streaming.job import start_stream
 from outboxx_spark.streaming.metrics import CdcQueryListener, MetricsRegistry
 from outboxx_spark.testbed import default_config
@@ -77,6 +82,7 @@ def test_sink_failure_fails_fast_and_counts(spark, multi_file_feed, tmp_path):
             time.sleep(0.2)
         assert listener.terminated_with_error
         assert reg.produce_errors == 1  # delivery-report accounting (M1)
+        assert not reg.events_processed  # a failed batch tallies nothing
     finally:
         spark.streams.removeListener(listener)
 
@@ -123,11 +129,14 @@ def test_backpressure_bounds_every_micro_batch(spark, multi_file_feed, tmp_path)
     ckpt = str(tmp_path / "ckpt")
     cfg = default_config()
     sink = RecordingSink(out_dir)
+    reg = MetricsRegistry()
     q = start_stream(
-        spark, multi_file_feed, cfg, out_dir, ckpt, max_files_per_trigger=1, sink_fn=sink
+        spark, multi_file_feed, cfg, out_dir, ckpt, reg, max_files_per_trigger=1, sink_fn=sink
     )
     q.awaitTermination(120)
     total = sum(sink.batch_rows)
+    # the sink runs two actions (count, then write); each row is tallied once
+    assert sum(reg.events_processed.values()) == total
     delivered = [n for n in sink.batch_rows if n > 0]
     assert len(delivered) >= 4
     assert total == routed_envelopes(spark, multi_file_feed, cfg).count()
@@ -135,3 +144,45 @@ def test_backpressure_bounds_every_micro_batch(spark, multi_file_feed, tmp_path)
     # (one file per trigger), so the producer queue can never see the
     # whole backlog at once
     assert max(delivered) <= total - 2 * min(delivered)
+
+
+class GuardedSink(RecordingSink):
+    """A sink with the common empty-batch guard in front of its write."""
+
+    def __call__(self, delivery, epoch_id: int) -> None:
+        if delivery.isEmpty():
+            return
+        super().__call__(delivery, epoch_id)
+
+
+def test_partial_first_action_fixes_a_partial_tally(spark, multi_file_feed, tmp_path):
+    # the sink contract pinned: only the first action reports, and
+    # isEmpty reads one row, so the tally is short of what was delivered
+    out_dir = str(tmp_path / "out")
+    sink = GuardedSink(out_dir)
+    reg = MetricsRegistry()
+    q = start_stream(
+        spark, multi_file_feed, default_config(), out_dir, str(tmp_path / "ckpt"), reg,
+        max_files_per_trigger=1, sink_fn=sink,
+    )
+    q.awaitTermination(120)
+    assert 0 < sum(reg.events_processed.values()) < sum(sink.batch_rows)
+
+
+def test_sink_without_dataframe_action_fails_before_commit(
+    spark, multi_file_feed, tmp_path, monkeypatch
+):
+    # an RDD-only sink never reports observed metrics: the bounded wait
+    # fails the micro-batch instead of blocking it forever
+    monkeypatch.setattr(metrics, "OBSERVE_TIMEOUT_S", 2.0)
+    ckpt = str(tmp_path / "ckpt")
+    reg = MetricsRegistry()
+    q = start_stream(
+        spark, multi_file_feed, default_config(), str(tmp_path / "out"), ckpt, reg,
+        sink_fn=lambda delivery, epoch_id: delivery.rdd.foreachPartition(lambda rows: None),
+    )
+    with pytest.raises(Exception, match="no observed metrics"):
+        q.awaitTermination(120)
+    assert not reg.events_processed
+    commits = os.path.join(ckpt, "commits")
+    assert not os.path.isdir(commits) or not os.listdir(commits)

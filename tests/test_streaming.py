@@ -62,8 +62,11 @@ def test_stream_matches_batch_pipeline(spark, multi_file_feed, tmp_path, cfg):
     got_set = {tuple(r) for r in got.select(*key_cols).collect()}
     exp_set = {tuple(r) for r in expect.select(*key_cols).collect()}
     assert got_set == exp_set
-    # tally totals match delivered rows (A1)
+    # tally totals match delivered rows (A1), per (stream, op)
     assert sum(reg.events_processed.values()) == got.count()
+    assert reg.events_processed == {
+        (r.stream, r.op): r["count"] for r in expect.groupBy("stream", "op").count().collect()
+    }
     # prometheus rendering includes the three instruments (M1/M2)
     text = reg.render_prometheus()
     assert "outboxx_events_processed_total" in text
@@ -116,8 +119,13 @@ def test_snapshot_phase_before_stream(spark, tmp_path):
             ]
         )
     )
-    n = run_snapshot_phase(spark, SF, cfg, out_dir, start_lsn=7, snapshot_ts=1704067200)
+    reg = MetricsRegistry()
+    n = run_snapshot_phase(
+        spark, SF, cfg, out_dir, start_lsn=7, snapshot_ts=1704067200, registry=reg
+    )
     assert n == 1
+    # the bootstrap's READ events are tallied like any delivered batch (A1)
+    assert reg.events_processed == {("cust_reader", "READ"): 150}
     out = spark.read.parquet(out_dir)
     rows = out.collect()
     assert all(r["op"] == "READ" for r in rows)
