@@ -11,6 +11,18 @@ Local testing runs on ``local[N]`` but every knob here is chosen for the
   Arrow-batched, never row-at-a-time pickling.
 - UTC session timezone so results compare bit-stable against the DuckDB
   oracle and across clusters.
+- Python workers fork from ``outboxx_spark.pyworker_daemon``, not
+  ``pyspark.daemon``. PySpark's worker calls ``importlib.invalidate_caches()``
+  at the start of every task, and on CPython 3.11.7 and 3.12.1 that re-reads
+  the whole index of every zip on the worker's path (``pyspark.zip``, once
+  per imported sub-package, and the Spark jar): 55-147 ms per task in a
+  reused worker on 4 vCPUs. The daemon's wrapper re-reads an archive only
+  when its stat stamp changed (or changed too recently to trust), so an
+  ``addPyFile`` zip rewritten under the same name is still re-read. 3.13.0
+  drops the cache entry instead of re-reading; the wrapper's re-read rule
+  was checked on all three versions. The JVM starts the daemon before any
+  task runs, so the package's parent directory is appended to
+  ``spark.executorEnv.PYTHONPATH``.
 """
 
 from __future__ import annotations
@@ -18,6 +30,10 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+import outboxx_spark
+
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(outboxx_spark.__file__)))
 
 
 def get_spark(app_name: str = "outboxx_spark", extra_conf: dict | None = None) -> SparkSession:
@@ -39,9 +55,14 @@ def get_spark(app_name: str = "outboxx_spark", extra_conf: dict | None = None) -
         # no nanos timestamp type, so read as long and convert centrally
         # (sources/tables.py).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config("spark.python.daemon.module", "outboxx_spark.pyworker_daemon")
     )
-    for k, v in (extra_conf or {}).items():
+    extra_conf = extra_conf or {}
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
+    # Appended, not replaced, so a caller's entries stay first.
+    path = os.pathsep.join(filter(None, [extra_conf.get("spark.executorEnv.PYTHONPATH"), _PACKAGE_PARENT]))
+    builder = builder.config("spark.executorEnv.PYTHONPATH", path)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
