@@ -7,16 +7,30 @@ warm-up run of a trivial action to amortize JVM/session startup.
 The headline metric is the full CDC pipeline's wall time; throughput in
 events/sec is derived for comparison with the reference's ev/s numbers
 (BASELINE.md: outboxx 127k ev/s single-node).
+
+Beyond the query passes, ``LEGS`` declares the probe legs: each names
+the ``extra`` keys it owns, a measure function and an optional
+re-measure function. ``LegRunner`` runs them all the same way (a
+failing leg leaves its keys None, temp dirs are made and removed for
+it, a drift flag re-measures a leg once) and ``derive`` computes the
+ratios and throughputs from whatever was measured last. Kafka delivery
+is measured on the served path by ``perfbench/``; only the
+leader-rotation leg, which perfbench has no workload for, stays here.
 """
 
 from __future__ import annotations
 
+import gc
 import json
 import os
 import re
+import shutil
 import sys
+import tempfile
 import time
+from dataclasses import dataclass
 from pathlib import Path
+from typing import Callable
 
 REPO = Path(__file__).resolve().parent
 sys.path.insert(0, str(REPO))
@@ -26,6 +40,660 @@ def _timed(fn) -> float:
     t0 = time.perf_counter()
     fn()
     return time.perf_counter() - t0
+
+
+def _timings(steps: dict[str, Callable[[], object]]) -> dict[str, float]:
+    """Run the steps in order, each under its own clock."""
+    return {key: _timed(fn) for key, fn in steps.items()}
+
+
+def best_of(n: int, trial, *args) -> dict:
+    """``n`` calls of ``trial(*args) -> {key: value}``: the min of every
+    ``*_sec`` key, the first call's value for any other key. Probes get
+    the queries' own noise policy: a single sample on this shared host
+    can sit inside an ambient-load window."""
+    runs = [trial(*args) for _ in range(n)]
+    return {
+        k: min(r[k] for r in runs) if k.endswith("_sec") else v
+        for k, v in runs[0].items()
+    }
+
+
+def _noop(df) -> None:
+    df.write.format("noop").mode("overwrite").save()
+
+
+# ---------------------------------------------------------------------------
+# The leg runner
+# ---------------------------------------------------------------------------
+
+
+class Probe:
+    """What a leg's measure and re-measure functions get: the session,
+    the scale-factor dir, the feed size, state the measure function
+    leaves for the re-measure one, and fresh temp paths that the runner
+    removes."""
+
+    def __init__(self, spark, sf_dir, n_events, root: str):
+        self.spark, self.sf_dir, self.n_events = spark, sf_dir, n_events
+        self.root = root
+        self.state: dict = {}
+        self._n = 0
+
+    def tmpdir(self) -> str:
+        """A path under the leg's temp root that nothing has used yet
+        (not created: the writers create their own output dirs)."""
+        self._n += 1
+        return os.path.join(self.root, str(self._n))
+
+
+@dataclass(frozen=True)
+class Leg:
+    name: str
+    keys: tuple[str, ...]  # the ``extra`` keys this leg owns
+    measure: Callable[[Probe], dict]
+    # one more trial, run only when the drift guard flags one of ``keys``
+    remeasure: Callable[[Probe], dict] | None = None
+
+
+class LegRunner:
+    """Runs declared legs. A leg that raises is reported on stderr and
+    leaves its keys None; the legs after it still run. A leg's temp
+    root lives as long as the leg can still be re-measured, and every
+    root is gone once the runner closes."""
+
+    def __init__(self, legs, spark=None, sf_dir=None, n_events=None):
+        self.legs = list(legs)
+        self.n_events = n_events
+        self._ctx = (spark, sf_dir, n_events)
+        self.values: dict = {}
+        self._probes: dict[str, Probe] = {}
+        self._roots: list[str] = []
+
+    def __enter__(self) -> LegRunner:
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.close()
+
+    def _attempt(self, leg: Leg, fn, probe: Probe) -> dict | None:
+        try:
+            return fn(probe)
+        except Exception as e:  # a probe must never sink the bench
+            print(f"# {leg.name} probe failed: {type(e).__name__}: {e}", file=sys.stderr)
+            return None
+
+    def run(self) -> None:
+        for leg in self.legs:
+            self.values.update(dict.fromkeys(leg.keys))
+            root = tempfile.mkdtemp(prefix=f"bench_{leg.name}_")
+            self._roots.append(root)
+            probe = Probe(*self._ctx, root)
+            got = self._attempt(leg, leg.measure, probe)
+            if got is not None:
+                self.values.update(got)
+            if got is not None and leg.remeasure is not None:
+                self._probes[leg.name] = probe
+            else:
+                shutil.rmtree(root, ignore_errors=True)
+
+    def rerun(self, flagged) -> list[str]:
+        """Re-measure once every leg that owns a flagged key, keeping the
+        best of both passes: min for ``*_sec``, max for ``*_per_sec``.
+        -> the timed keys of the legs that were re-measured."""
+        resampled: list[str] = []
+        for leg in self.legs:
+            probe = self._probes.get(leg.name)
+            if probe is None or not set(leg.keys) & set(flagged):
+                continue
+            got = self._attempt(leg, leg.remeasure, probe)
+            if got is None:
+                continue
+            for k, v in got.items():
+                old = self.values.get(k)
+                if not isinstance(old, (int, float)):
+                    self.values[k] = v
+                elif k.endswith("_per_sec"):
+                    self.values[k] = max(old, v)
+                elif k.endswith("_sec"):
+                    self.values[k] = min(old, v)
+            resampled += [k for k in leg.keys if k.endswith("_sec")]
+        return resampled
+
+    def extra(self) -> dict:
+        """Every leg's keys in declaration order, derived metrics
+        computed from the current values."""
+        d = derive(self.values, self.n_events)
+        return {k: d.get(k) for leg in self.legs for k in leg.keys}
+
+    def close(self) -> None:
+        self._probes.clear()
+        for root in self._roots:
+            shutil.rmtree(root, ignore_errors=True)
+
+
+def _rate(n, sec):
+    return round(n / sec) if n and sec else None
+
+
+def derive(values: dict, n_events) -> dict:
+    """Leg values -> reported values: timings rounded, throughputs and
+    the 4x scale ratios computed from the (possibly re-measured)
+    timings."""
+    v = {
+        k: round(x, 4) if k.endswith("_sec") and isinstance(x, float) else x
+        for k, x in values.items()
+    }
+    v["scaleup_events_per_sec"] = _rate(v.get("scaleup_events"), v.get("scaleup_sec"))
+    v["tablesink_events_per_sec"] = _rate(n_events, v.get("tablesink_load_sec"))
+    for fam in ("dedup", "emb_lsh", "emb_ivf"):
+        a, b = v.get(f"{fam}_1x_sec"), v.get(f"{fam}_4x_sec")
+        v[f"{fam}_4x_time_ratio"] = round(b / a, 2) if a and b else None
+    return v
+
+
+# ---------------------------------------------------------------------------
+# The legs
+# ---------------------------------------------------------------------------
+
+ALPHA = "abcdefghijklmnopqrstuvwxyz"
+
+
+def _rotated_docs(docs, n_docs: int, r: int):
+    """Copy ``r`` of the documents corpus: ids shifted past the
+    original, text alphabet-rotated, so the copy has the corpus's
+    shingle statistics but no shingle in common with it (volume, not
+    planted clone clusters)."""
+    from pyspark.sql import functions as F
+
+    return docs.select(
+        (F.col("doc_id") + r * n_docs).alias("doc_id"),
+        F.translate("text", ALPHA, ALPHA[r:] + ALPHA[:r]).alias("text"),
+    )
+
+
+def _read_docs(p: Probe):
+    from outboxx_spark.sources.tables import read_table
+
+    return read_table(p.spark, p.sf_dir, "documents").select("doc_id", "text")
+
+
+SCALEUP_COPIES = 10
+
+
+def _scaleup(p: Probe) -> dict:
+    """The identical pipeline plan over a 10x feed split across 32
+    files: throughput must GROW as partitions engage — the local-mode
+    proxy for the 1000-executor claim (SCALING.md)."""
+    from pyspark.sql import functions as F
+
+    ev = p.spark.read.parquet(f"{p.sf_dir}/events.parquet")
+    shift = ev.agg(F.max("event_id")).collect()[0][0] + 1
+    big = ev.withColumn(
+        "r", F.explode(F.array(*[F.lit(i) for i in range(SCALEUP_COPIES)]))
+    ).select(
+        (F.col("event_id") + F.col("r") * shift).alias("event_id"),
+        "ts", "user_id", "event_type", "value", "props",
+    )
+    p.state["root"] = p.tmpdir()
+    big.repartition(32).write.mode("overwrite").parquet(f"{p.state['root']}/events.parquet")
+    _scaleup_trial(p)  # warm the 32-file listing
+    return {
+        **best_of(3, _scaleup_trial, p),
+        "scaleup_events": p.n_events * SCALEUP_COPIES,
+    }
+
+
+def _scaleup_trial(p: Probe) -> dict:
+    from outboxx_spark.pipeline import routed_envelopes
+    from outboxx_spark.testbed import default_config
+
+    return _timings({
+        "scaleup_sec": lambda: _noop(
+            routed_envelopes(p.spark, p.state["root"], default_config())
+        )
+    })
+
+
+def _tablesink(p: Probe) -> dict:
+    """Initial 100k-event upsert into a 16-bucket table, then a
+    single-key incremental batch — the touched-bucket-proportional
+    claim as numbers."""
+    from outboxx_spark.sources.feed import read_feed
+
+    feed = read_feed(p.spark, p.sf_dir).localCheckpoint(eager=True)
+    p.state.update(feed=feed, one=feed.limit(1).localCheckpoint(eager=True))
+    return best_of(2, _tablesink_trial, p)
+
+
+def _tablesink_trial(p: Probe) -> dict:
+    from outboxx_spark.streaming.table_sink import upsert_batch
+
+    table = p.tmpdir()
+    return _timings({
+        "tablesink_load_sec": lambda: upsert_batch(p.state["feed"], table),
+        "tablesink_incr_sec": lambda: upsert_batch(p.state["one"], table),
+    })
+
+
+KAFKA_PARTITIONS = 8
+
+
+def _kafka_faulted(p: Probe) -> dict:
+    """The routed feed through the Kafka sink while EVERY partition's
+    leadership rotates mid-delivery, on the in-repo 3-broker stand: what
+    an election costs. Gap-freedom under election is pytest- and
+    stand-verified. The number is recorded only when the rotation
+    provably landed before the sink finished; a rotation against an
+    idle cluster would silently measure a clean run."""
+    import threading
+
+    sys.path.insert(0, str(REPO / "tools"))
+    from kafka_broker import KafkaCluster
+
+    from outboxx_spark.pipeline import routed_envelopes
+    from outboxx_spark.streaming.kafka_sink import make_kafka_sink
+    from outboxx_spark.testbed import default_config
+
+    with KafkaCluster(n_brokers=3, n_partitions=KAFKA_PARTITIONS) as cluster:
+        b0 = cluster.brokers[0]
+        # one produce task per topic partition: more adds broker
+        # contention, not throughput
+        delivery = (
+            routed_envelopes(p.spark, p.sf_dir, default_config())
+            .localCheckpoint(eager=True)
+            .coalesce(KAFKA_PARTITIONS)
+        )
+        n = delivery.count()
+        sink = make_kafka_sink(b0.host, b0.port, bootstrap=cluster.bootstrap())
+        sink(delivery, 0)  # untimed: warm the Python workers and producers
+        baseline = {
+            t: cluster.record_count(t) for t in {tp[0] for tp in cluster._leader}
+        }
+        rotation: list = []  # (moves, monotonic time the rotation landed)
+        rotator = threading.Thread(
+            target=lambda: rotation.extend(cluster.rotate_all_leaders(baseline=baseline)),
+            daemon=True,
+        )
+        rotator.start()
+        sec = _timed(lambda: sink(delivery, 1))
+        sink_done = time.monotonic()
+        rotator.join(timeout=1.0)
+    moves, landed = rotation or (0, None)
+    landed_in_time = moves and landed is not None and landed <= sink_done
+    return {
+        "kafka_sink_events": n,
+        "kafka_sink_faulted_events_per_sec": round(n / sec) if landed_in_time else None,
+    }
+
+
+def _dedup_scaleup(p: Probe) -> dict:
+    """Minhash dedup at 1x and 4x the corpus: the banded LSH path claims
+    near-linear candidate generation, a quadratic one would show ~16x.
+    Both corpora are repartitioned identically (a single parquet file
+    is one partition and would handicap the 1x side). The 1x/4x trials
+    interleave so an ambient-load phase hits both sides of the ratio,
+    and the query is rebuilt per trial so its eager build stage is
+    inside the clock on both sides."""
+    from outboxx_spark.dataops.dedup import minhash_dedup_pairs
+
+    docs = _read_docs(p)
+    n_docs = docs.count()
+    big = docs
+    for r in (1, 2, 3):
+        big = big.unionByName(_rotated_docs(docs, n_docs, r))
+    big = big.repartition(32).localCheckpoint(eager=True)
+    small = docs.repartition(32).localCheckpoint(eager=True)
+    steps = {
+        "dedup_1x_sec": lambda: _noop(minhash_dedup_pairs(small)),
+        "dedup_4x_sec": lambda: _noop(minhash_dedup_pairs(big)),
+    }
+    # warm BOTH plan shapes: the 4x side's first pass pays one-time
+    # JIT/Arrow-pool growth the 1x warm-up does not cover
+    _timings(steps)
+    return {**best_of(3, _timings, steps), "dedup_4x_trials": 3}
+
+
+DEEP_CHAIN_NODES = 4096
+
+
+def _deep_clusters(p: Probe) -> dict:
+    """A 4096-node CHAIN (diameter 4095), the worst case for label
+    propagation, at the operator's defaults: pointer jumping covers
+    distance ~4^rounds, so it converges in ~6 rounds. Min of 2: the
+    first execution carries one-time codegen/scheduler warm-up."""
+    from pyspark.sql import functions as F
+
+    p.state["chain"] = p.spark.range(DEEP_CHAIN_NODES - 1).select(
+        F.col("id").alias("doc_a"), (F.col("id") + 1).alias("doc_b")
+    )
+    return {
+        **best_of(2, _deep_clusters_trial, p),
+        "dup_clusters_deep_nodes": DEEP_CHAIN_NODES,
+    }
+
+
+def _deep_clusters_trial(p: Probe) -> dict:
+    from pyspark.sql import functions as F
+
+    from outboxx_spark.dataops.curation import dup_clusters
+
+    t0 = time.perf_counter()
+    n_labeled = dup_clusters(p.state["chain"]).filter(F.col("cluster_id") == 0).count()
+    sec = time.perf_counter() - t0
+    if n_labeled != DEEP_CHAIN_NODES:  # one component, min id 0
+        raise AssertionError(f"chain clustering wrong: {n_labeled}")
+    return {"dup_clusters_deep_sec": sec}
+
+
+def _emb_scaleup(p: Probe) -> dict:
+    """Bucketed near-dup (LSH) and IVF ANN at 1x and 4x the embeddings.
+    Copies are dimension-rotated, ~orthogonal to their originals (same
+    norm statistics, no planted clone pairs)."""
+    from pyspark.sql import functions as F
+
+    from outboxx_spark.dataops.similarity import (
+        embedding_near_dup_pairs_lsh,
+        ivf_ann_topk,
+        with_planted_near_dups,
+    )
+
+    emb = p.spark.read.parquet(f"{p.sf_dir}/embeddings.parquet")
+    n_vec = emb.count()
+    dim = len(emb.select("embedding").first()[0])
+    small = emb.select("vec_id", "embedding")
+    big = small
+    for r in (1, 2, 3):
+        rot = r * (dim // 4)
+        big = big.unionByName(
+            emb.select(
+                (F.col("vec_id") + r * n_vec).alias("vec_id"),
+                F.concat(
+                    F.slice("embedding", rot + 1, dim - rot),
+                    F.slice("embedding", 1, rot),
+                ).alias("embedding"),
+            )
+        )
+    big = big.repartition(32).localCheckpoint(eager=True)
+    small = small.repartition(32).localCheckpoint(eager=True)
+
+    def lsh(df):
+        _noop(embedding_near_dup_pairs_lsh(
+            with_planted_near_dups(df), threshold=0.8, n_planes=16, n_tables=8
+        ))
+
+    def ivf(df):
+        _noop(ivf_ann_topk(df, n_queries=10, k=10))
+
+    p.state["steps"] = steps = [
+        (2, {"emb_lsh_1x_sec": lambda: lsh(small), "emb_lsh_4x_sec": lambda: lsh(big)}),
+        (3, {"emb_ivf_1x_sec": lambda: ivf(small), "emb_ivf_4x_sec": lambda: ivf(big)}),
+    ]
+    out: dict = {}
+    for n, fam in steps:
+        _timings(fam)  # warm both plan shapes (as the dedup leg)
+        out.update(best_of(n, _timings, fam))
+    return out
+
+
+def _emb_scaleup_trial(p: Probe) -> dict:
+    return {k: v for _, fam in p.state["steps"] for k, v in _timings(fam).items()}
+
+
+def _ivf_store(p: Probe) -> dict:
+    """Build a persistent IVF index, serve a 10-query batch from it, then
+    append a 100-vector sealed generation with the frozen quantizer and
+    serve from the grown store: the serving latency a rebuilt-per-call
+    ``ivf_ann_topk`` hides, and growth at the cost of one assignment
+    pass over the delta."""
+    from pyspark.sql import functions as F
+
+    from outboxx_spark.dataops.ivf_store import ivf_index_add, ivf_serve
+    from outboxx_spark.dataops.similarity import (
+        build_ivf_index,
+        ivf_ann_topk_from_store,
+    )
+
+    emb = p.spark.read.parquet(f"{p.sf_dir}/embeddings.parquet")
+    stores: list[str] = []
+
+    def build():
+        stores.append(p.tmpdir())
+        build_ivf_index(emb, stores[-1])
+
+    out = best_of(2, _timings, {"ivf_build_sec": build})
+    store = stores[-1]
+    queries_df = emb.filter(F.col("vec_id") < 10).localCheckpoint(eager=True)
+    serve = lambda: _noop(ivf_ann_topk_from_store(p.spark, store, queries_df, k=10))  # noqa: E731
+    serve()  # warm
+    out.update(best_of(3, _timings, {"ivf_serve_sec": serve}))
+    delta = emb.filter(F.col("vec_id") < 100).select(
+        (F.col("vec_id") + 1_000_000).alias("vec_id"), "embedding"
+    )
+    out["ivf_add_sec"] = _timed(lambda: ivf_index_add(delta, store))
+    serve_grown = lambda: _noop(ivf_serve(p.spark, store, queries_df, k=10))  # noqa: E731
+    serve_grown()  # warm
+    out.update(best_of(3, _timings, {"ivf_serve_grown_sec": serve_grown}))
+    return out
+
+
+def _export(p: Probe) -> dict:
+    """Training-shard export: shard assignment, one-file-per-shard
+    write, manifest, then the distributed verify re-read."""
+    p.state["docs"] = _read_docs(p)
+    return best_of(2, _export_trial, p)
+
+
+def _export_trial(p: Probe) -> dict:
+    from outboxx_spark.dataops.export import export_shards, verify_export
+
+    out_dir, manifest = p.tmpdir(), {}
+    got = _timings({
+        "export_shards_sec": lambda: manifest.update(
+            export_shards(p.state["docs"], out_dir, target=20000)
+        ),
+        "export_verify_sec": lambda: verify_export(p.spark, out_dir),
+    })
+    return {**got, "export_n_shards": manifest["n_shards"]}
+
+
+def _incragg(p: Probe) -> dict:
+    """The changelog applied in two halves through the ledger +
+    table-sink state: batch 2 (deltas against a POPULATED key state)
+    must cost the same order as batch 1, and the ledger totals must
+    equal the batch algebra over the whole feed."""
+    from pyspark.sql import functions as F
+
+    from outboxx_spark.operators.incragg import incremental_group_totals
+    from outboxx_spark.sources.feed import read_feed
+    from outboxx_spark.streaming.incragg_stream import read_group_totals
+
+    feed = read_feed(p.spark, p.sf_dir)
+    mid = feed.agg(F.expr("percentile_approx(lsn, 0.5)")).first()[0] or 0
+    p.state.update(h1=feed.filter(F.col("lsn") <= mid), h2=feed.filter(F.col("lsn") > mid))
+    out = best_of(2, _incragg_trial, p)
+
+    def totals(df):
+        return {(r["resource"], r["n_live"], r["sum_value_cents"]) for r in df.collect()}
+
+    if totals(read_group_totals(p.spark, p.state["ledger"])) != totals(
+        incremental_group_totals(feed)
+    ):
+        raise AssertionError("incragg ledger diverged from batch algebra")
+    return out
+
+
+def _incragg_trial(p: Probe) -> dict:
+    from outboxx_spark.streaming.incragg_stream import apply_incremental_totals_batch
+
+    table = p.tmpdir()
+    ledger = p.state["ledger"] = p.tmpdir()
+    h1, h2 = p.state["h1"], p.state["h2"]
+    return _timings({
+        "incragg_b1_sec": lambda: apply_incremental_totals_batch(h1, table, ledger, 0),
+        "incragg_b2_sec": lambda: apply_incremental_totals_batch(h2, table, ledger, 1),
+    })
+
+
+def _dedup_store(p: Probe) -> dict:
+    """The persistent LSH survivor store over one full life per trial:
+    batch 2 (probing a populated store) must cost the same order as
+    batch 1 (empty store); a probe batch against the store grown to ~4x
+    the corpus must cost the same order as batch 2 (a store scan per
+    batch would grow with the store); then compaction."""
+    docs = _read_docs(p)
+    p.state.update(docs=docs, n_docs=docs.count())
+    return best_of(2, _dedup_store_trial, p)
+
+
+def _pq_files(store: str) -> int:
+    return sum(
+        f.endswith(".parquet")
+        for tree in ("buckets", "docs")
+        for _, _, files in os.walk(f"{store}/{tree}")
+        for f in files
+    )
+
+
+def _dedup_store_trial(p: Probe) -> dict:
+    from pyspark.sql import functions as F
+
+    from outboxx_spark.dataops.incremental import (
+        compact_dedup_store,
+        incremental_minhash_dedup_batch,
+    )
+
+    docs, n = p.state["docs"], p.state["n_docs"]
+    store = p.tmpdir()
+
+    def ingest(df, batch_id):
+        incremental_minhash_dedup_batch(df, store, batch_id=batch_id)
+
+    half1 = docs.filter(F.col("doc_id") < n // 2)
+    half2 = docs.filter(F.col("doc_id") >= n // 2)
+    out = _timings({
+        "dedup_store_b1_sec": lambda: ingest(half1, 0),
+        "dedup_store_b2_sec": lambda: ingest(half2, 1),
+    })
+    # gc.collect() after each batch drops the py4j references to its
+    # checkpointed RDDs, so Spark unpersists them; accumulated blocks
+    # inflated the grown-store steps ~3x
+    gc.collect()
+    for r in (1, 2, 3):
+        ingest(_rotated_docs(docs, n, r), 1 + r)
+        gc.collect()
+    probe_batch = _rotated_docs(docs, n, 4).filter(F.col("doc_id") < 4 * n + n // 2)
+    out["dedup_store_vs_4x_sec"] = _timed(lambda: ingest(probe_batch, 5))
+    gc.collect()
+    # the grown store's bytes move with the corpus's shingle volume, so
+    # a cross-round timing diff can be read against the data it ingested
+    out["dedup_store_bytes"] = sum(
+        os.path.getsize(os.path.join(d, f)) for d, _, files in os.walk(store) for f in files
+    )
+    out["dedup_store_files_before"] = _pq_files(store)
+    out["dedup_store_compact_sec"] = _timed(lambda: compact_dedup_store(p.spark, store))
+    gc.collect()
+    out["dedup_store_files_after"] = _pq_files(store)
+    return out
+
+
+LEGS = (
+    Leg("scaleup", ("scaleup_events", "scaleup_events_per_sec"),
+        _scaleup, _scaleup_trial),
+    Leg("tablesink", ("tablesink_load_sec", "tablesink_incr_sec",
+                      "tablesink_events_per_sec"),
+        _tablesink, _tablesink_trial),
+    Leg("kafka_faulted", ("kafka_sink_events", "kafka_sink_faulted_events_per_sec"),
+        _kafka_faulted),
+    Leg("dedup_scaleup", ("dedup_1x_sec", "dedup_4x_sec", "dedup_4x_trials",
+                          "dedup_4x_time_ratio"),
+        _dedup_scaleup),
+    Leg("deep_clusters", ("dup_clusters_deep_sec", "dup_clusters_deep_nodes"),
+        _deep_clusters, _deep_clusters_trial),
+    Leg("emb_scaleup", ("emb_lsh_1x_sec", "emb_lsh_4x_sec", "emb_lsh_4x_time_ratio",
+                        "emb_ivf_1x_sec", "emb_ivf_4x_sec", "emb_ivf_4x_time_ratio"),
+        _emb_scaleup, _emb_scaleup_trial),
+    Leg("ivf_store", ("ivf_build_sec", "ivf_serve_sec", "ivf_add_sec",
+                      "ivf_serve_grown_sec"),
+        _ivf_store),
+    Leg("export", ("export_shards_sec", "export_verify_sec", "export_n_shards"),
+        _export, _export_trial),
+    Leg("incragg", ("incragg_b1_sec", "incragg_b2_sec"),
+        _incragg, _incragg_trial),
+    Leg("dedup_store", ("dedup_store_b1_sec", "dedup_store_b2_sec",
+                        "dedup_store_vs_4x_sec", "dedup_store_compact_sec",
+                        "dedup_store_files_before", "dedup_store_files_after",
+                        "dedup_store_bytes"),
+        _dedup_store, _dedup_store_trial),
+)
+
+# main()'s own extra keys, around the legs'
+HEADLINE_KEYS = ("pipeline_events", "pipeline_events_per_sec")
+RUN_KEYS = ("n_queries", "accounting", "detail")
+# The driver regenerates the testdata corpus each round, so a
+# data-sensitive query's cross-round timing diff carries corpus drift
+# (more duplication -> more candidate pairs -> honestly slower). Their
+# output row counts (``rows_<query>``, counted outside the clock) let
+# the drift guard annotate a flag with the volume move.
+VOLUME_QUERIES = (
+    "docs_ngram_dedup",
+    "docs_minhash_dedup",
+    "docs_exact_dedup",
+    "docs_edit_dedup",
+    "docs_substring_spans",
+    "emb_near_dup",
+    "emb_near_dup_ivf",
+    "emb_near_dup_lsh",
+    "docs_dup_clusters",
+)
+
+
+def extra_keys() -> list[str]:
+    """Every key of the reported ``extra`` block, in report order."""
+    return [
+        *HEADLINE_KEYS,
+        *(k for leg in LEGS for k in leg.keys),
+        *RUN_KEYS,
+        *(f"rows_{q}" for q in VOLUME_QUERIES),
+        "host_factor",
+    ]
+
+
+# ---------------------------------------------------------------------------
+# The run
+# ---------------------------------------------------------------------------
+
+
+def _drift_guard(sf, qs, spark, sf_dir, timings, extra, legs: LegRunner):
+    """Diff this run (per-query table AND extra metrics,
+    direction-aware) against the previous round's committed
+    bench_detail snapshot at the same scale factor; re-measure what got
+    flagged once (a host-load window can span all three passes; a real
+    regression survives its fourth sample, a spike does not) and diff
+    again. -> (regressions, resampled names)."""
+    sys.path.insert(0, str(REPO / "tools"))
+    from bench_compare import PREV_ROUND, round_drift
+
+    if not PREV_ROUND.exists():
+        return [], []
+    prev = json.loads(PREV_ROUND.read_text())
+    if prev.get("sf") != sf:
+        return [f"skipped: prev round at sf={prev.get('sf')}"], []
+    regressions = round_drift(prev, timings, extra)
+    flagged = [r.split(" ")[0] for r in regressions]
+    resampled = [name for name in flagged if name in qs]
+    for name in resampled:
+        try:
+            dt = _timed(lambda: _noop(qs[name](spark, sf_dir)))
+            timings[name] = round(min(timings[name], dt), 4)
+            gc.collect()
+        except Exception:
+            pass
+    resampled += legs.rerun(flagged)
+    if resampled:
+        extra.update(legs.extra())
+        regressions = round_drift(prev, timings, extra)
+    return regressions, resampled
 
 
 def main() -> None:
@@ -52,9 +720,7 @@ def main() -> None:
             pass
 
     qs = dict(E.queries())
-    bench_names = list(qs)
     timings: dict[str, float] = {}
-    n_events = None
 
     # Steady-state methodology: run every query once at the smallest SF
     # first. The plans are identical across SFs (same schemas), so this
@@ -62,9 +728,9 @@ def main() -> None:
     # the timed loop below then measures execution, not compilation.
     warm_dir = "/root/testdata/sf0.001"
     if os.path.isdir(warm_dir) and warm_dir != sf_dir:
-        for name in bench_names:
+        for name in qs:
             try:
-                qs[name](spark, warm_dir).write.format("noop").mode("overwrite").save()
+                _noop(qs[name](spark, warm_dir))
             except Exception:
                 pass  # a warm-up failure must never sink the bench
 
@@ -82,944 +748,78 @@ def main() -> None:
     # steady-state minutes later). A second batch after the query loop
     # decorrelates the headline from any single spike; the reported
     # number is the min across both batches.
-    _pipeline_run = (
-        lambda: routed_envelopes(spark, sf_dir, default_config())
-        .write.format("noop")
-        .mode("overwrite")
-        .save()
-    )
-    pipeline_sec = min(_timed(_pipeline_run) for _ in range(5))
+    headline = {
+        "pipeline_sec": lambda: _noop(routed_envelopes(spark, sf_dir, default_config()))
+    }
+    pipeline_sec = best_of(5, _timings, headline)["pipeline_sec"]
 
     # min of 3 runs per query, as three interleaved passes over the
     # whole list: single-shot times on a shared host vary ~2x with
     # background load, and a load spike lasts seconds — back-to-back
     # repeats would poison both samples of one query, while interleaving
-    # decorrelates them. Two passes still recorded one 6x phantom
-    # (cdc_pgoutput_roundtrip 5.56s vs 1.2s standalone) when a spike
-    # spanned a whole pass; the third sample costs ~40s and caps that
-    # tail. The min is the stable "capability" number.
+    # decorrelates them. The min is the stable "capability" number.
     #
     # Each pass REBUILDS the query's DataFrame (what the driver and any
     # user pays per invocation): several operators materialize bounded
     # intermediates eagerly at build (localCheckpoint), and timing a
-    # prebuilt frame would move that work outside the clock. Rebuilding
-    # per pass re-runs those builds every sample, so the reported min
-    # is the honest full per-invocation cost.
+    # prebuilt frame would move that work outside the clock.
     # gc.collect() between queries (outside the timer) promptly drops
     # the py4j references to each rebuild's checkpointed RDDs so
     # Spark's ContextCleaner unpersists them — without it the blocks
-    # accumulate across 3x74 rebuilds and block-manager pressure
-    # inflates later samples ~50% (measured: 2.4-4.1s drifting vs
-    # 2.3-2.5s stable on the same query).
-    import gc
-
+    # accumulate across the rebuilds and block-manager pressure
+    # inflates later samples ~50%.
     for _pass in range(3):
-        for name in bench_names:
-            t0 = time.perf_counter()
-            qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-            dt = time.perf_counter() - t0
+        for name in qs:
+            dt = _timed(lambda: _noop(qs[name](spark, sf_dir)))
             timings[name] = round(min(timings.get(name, dt), dt), 4)
             gc.collect()
 
     # second, decorrelated pipeline batch (see comment at the first)
-    pipeline_sec = min(pipeline_sec, min(_timed(_pipeline_run) for _ in range(3)))
+    pipeline_sec = min(pipeline_sec, best_of(3, _timings, headline)["pipeline_sec"])
     timings["cdc_pipeline_full"] = round(pipeline_sec, 4)
 
-    # Scale-up artifact (tracked per round, not just asserted in
-    # SCALING.md): the identical pipeline plan over a 10x feed split
-    # across 32 files. Throughput must GROW as partitions engage —
-    # this is the local-mode proxy for the 1000-executor claim.
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    # Flagged-probe re-run registry (r10): probes register a
-    # self-contained re-measure thunk; after the drift diff, any probe
-    # whose metric got flagged is re-run ONCE and min-merged — the same
-    # noise-rejection the timed queries get, paid only when a flag
-    # fires (each bench take r10 saw exactly one probe section cross an
-    # ambient-load window; min-of-2 inside the section cannot save it
-    # when the whole section sits in the window).
-    probe_reruns: list = []
-    deferred_cleanup: list = []
-
-    scaleup_events = scaleup_sec = None
-    scale_root = tempfile.mkdtemp(prefix="bench_scaleup_")
-    try:
-        ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-        n_copies = 10
-        shift = ev.agg(F.max("event_id")).collect()[0][0] + 1
-        big = ev.withColumn(
-            "r", F.explode(F.array(*[F.lit(i) for i in range(n_copies)]))
-        ).select(
-            (F.col("event_id") + F.col("r") * shift).alias("event_id"),
-            "ts", "user_id", "event_type", "value", "props",
+    extra = dict.fromkeys(extra_keys())
+    with LegRunner(LEGS, spark, sf_dir, n_events) as legs:
+        legs.run()
+        extra.update(legs.extra())
+        extra.update(
+            pipeline_events=n_events,
+            pipeline_events_per_sec=_rate(n_events, pipeline_sec),
+            n_queries=len(timings),
+            # per-query timings REBUILD the DataFrame every pass, so
+            # eager build stages are inside the clock
+            accounting="rebuild-per-pass",
+            detail="bench_detail.json",
         )
-        big.repartition(32).write.mode("overwrite").parquet(f"{scale_root}/events.parquet")
-        routed_envelopes(spark, scale_root, default_config()).write.format(
-            "noop"
-        ).mode("overwrite").save()  # warm the 32-file listing
-        scaleup_sec = min(
-            _timed(
-                lambda: routed_envelopes(spark, scale_root, default_config())
-                .write.format("noop")
-                .mode("overwrite")
-                .save()
+        for q in VOLUME_QUERIES:
+            if q in qs:
+                try:
+                    extra[f"rows_{q}"] = qs[q](spark, sf_dir).count()
+                    gc.collect()
+                except Exception:
+                    pass
+        # names given another sample by the drift guard are recorded in
+        # the detail artifact, so a "min of 4" entry is distinguishable
+        try:
+            regressions, resampled = _drift_guard(
+                sf, qs, spark, sf_dir, timings, extra, legs
             )
-            for _ in range(3)
-        )
-        # only publish the event count once timing actually succeeded —
-        # a half-populated artifact would mask a probe regression
-        scaleup_events = n_events * n_copies
-
-        def _rerun_scaleup():
-            t = min(
-                _timed(
-                    lambda: routed_envelopes(spark, scale_root, default_config())
-                    .write.format("noop")
-                    .mode("overwrite")
-                    .save()
-                )
-                for _ in range(3)
-            )
-            return {"scaleup_events_per_sec": round(scaleup_events / t)}
-
-        probe_reruns.append((("scaleup_events_per_sec",), _rerun_scaleup))
-    except Exception as e:  # the probe must never sink the bench
-        print(f"# scaleup probe failed: {type(e).__name__}: {e}", file=sys.stderr)
-        scaleup_events = scaleup_sec = None
-        shutil.rmtree(scale_root, ignore_errors=True)
-    # on success scale_root survives for the flagged re-run thunk;
-    # deferred_cleanup removes it after the drift pass
-    deferred_cleanup.append(scale_root)
-
-    # Table-sink probe (tracked per round): initial 100k-event upsert
-    # into a 16-bucket table, then a single-key incremental batch — the
-    # touched-bucket-proportional claim as numbers.
-    tablesink_load_sec = tablesink_incr_sec = None
-    sink_root = tempfile.mkdtemp(prefix="bench_tablesink_")
-    try:
-        from outboxx_spark.streaming.table_sink import upsert_batch
-
-        feed_df = read_feed(spark, sf_dir).localCheckpoint(eager=True)
-        one = feed_df.limit(1).localCheckpoint(eager=True)
-        # min of 2 trials on fresh tables — probes get the queries' own
-        # noise policy (r10: single-sample probes flagged phantom drift
-        # whenever an ambient-load window crossed the probe section)
-        load_t, incr_t = [], []
-        for trial in range(2):
-            table_dir = f"{sink_root}/tbl{trial}"
-            load_t.append(_timed(lambda: upsert_batch(feed_df, table_dir)))
-            incr_t.append(_timed(lambda: upsert_batch(one, table_dir)))
-        tablesink_load_sec = round(min(load_t), 4)
-        tablesink_incr_sec = round(min(incr_t), 4)
-
-        def _rerun_tablesink():
-            root = tempfile.mkdtemp(prefix="bench_tablesink_r_")
-            try:
-                t = f"{root}/tbl"
-                lo = _timed(lambda: upsert_batch(feed_df, t))
-                inc = _timed(lambda: upsert_batch(one, t))
-                return {"tablesink_load_sec": lo, "tablesink_incr_sec": inc}
-            finally:
-                shutil.rmtree(root, ignore_errors=True)
-
-        probe_reruns.append(
-            (("tablesink_load_sec", "tablesink_incr_sec"), _rerun_tablesink)
-        )
-    except Exception as e:  # the probe must never sink the bench; keep
-        # whichever measurement already landed — only the failed step
-        # stays None
-        print(f"# tablesink probe failed: {type(e).__name__}: {e}", file=sys.stderr)
-    finally:
-        shutil.rmtree(sink_root, ignore_errors=True)
-
-    # Kafka delivery probe (r10; r12 shape): the EXECUTED K1 layer as
-    # numbers, against the in-repo 3-broker wire-protocol stand
-    # (tools/kafka_broker.py KafkaCluster). Three legs, recorded
-    # SEPARATELY so each is trend-readable round-over-round (r11
-    # verdict: mixing the fault-injected run into the official sink
-    # number destroyed comparability):
-    # - raw drain of ONE producer connection — apples-to-apples with
-    #   the reference's single-process 127k ev/s drain benchmark;
-    # - CLEAN sink: the routed feed through the job's sink seam, no
-    #   fault injection, sink parallelism matched to the topic
-    #   partition count (the production tuning);
-    # - FAULTED sink: same delivery while EVERY topic-partition's
-    #   leadership rotates mid-delivery — the election-survival number.
-    kafka_raw_drain_eps = kafka_sink_events = None
-    kafka_sink_clean_eps = kafka_sink_faulted_eps = None
-    kafka_sink_ordered_eps = None
-    try:
-        sys.path.insert(0, str(REPO / "tools"))
-        from kafka_broker import KafkaCluster
-
-        from outboxx_spark.streaming.kafka_sink import make_kafka_sink
-        from outboxx_spark.streaming.kafka_wire import WireProducer
-
-        with KafkaCluster(n_brokers=3, n_partitions=8) as cluster:
-            b0 = cluster.brokers[0]
-            payload = (
-                b'{"op":"INSERT","data":{"user_id":7,"value":1.25},'
-                b'"meta":{"source":"postgres","resource":"public.t0",'
-                b'"timestamp":1755200000,"lsn":"0/1A2B"}}'
-            )
-            n_raw = 100_000
-            raw_trials = []
-            for trial in range(2):  # min-of-2: probe noise policy
-                raw = WireProducer(
-                    b0.host, b0.port, bootstrap=cluster.bootstrap()
-                )
-                t0 = time.perf_counter()
-                for i in range(n_raw):
-                    raw.send(
-                        f"bench.raw{trial}", str(i % 997).encode(), payload
-                    )
-                raw.flush()
-                raw_trials.append(time.perf_counter() - t0)
-                raw.close()
-            kafka_raw_drain_eps = round(n_raw / min(raw_trials))
-
-            delivery = routed_envelopes(
-                spark, sf_dir, default_config()
-            ).localCheckpoint(eager=True)
-            kafka_sink_events = delivery.count()
-            sink = make_kafka_sink(
-                b0.host, b0.port,
-                bootstrap=cluster.bootstrap(),
-                sink_parallelism=8,
-            )
-            sink(delivery, 0)  # warm the Python workers + producers
-            sink_trials = []
-            for trial in range(3):  # min-of-3: this leg swings ~1.6x
-                # between runs with identical code (r12 observed
-                # 69-114k); a third sample caps the tail like the
-                # timed-query loop's third pass does
-                t1 = time.perf_counter()
-                sink(delivery, 1 + trial)
-                sink_trials.append(time.perf_counter() - t1)
-            kafka_sink_clean_eps = round(kafka_sink_events / min(sink_trials))
-
-            # ordered leg: the per-key WAL-order contract's price (one
-            # (destination, key) shuffle + in-partition sort per batch)
-            sink_ordered = make_kafka_sink(
-                b0.host, b0.port,
-                bootstrap=cluster.bootstrap(),
-                sink_parallelism=8,
-                order_by="lsn",
-            )
-            ordered_trials = []
-            for trial in range(2):
-                t1 = time.perf_counter()
-                sink_ordered(delivery, 5 + trial)
-                ordered_trials.append(time.perf_counter() - t1)
-            kafka_sink_ordered_eps = round(
-                kafka_sink_events / min(ordered_trials)
-            )
-
-            # faulted leg: rotate every partition's leadership once
-            # deliveries are flowing (records grew past the clean legs'
-            # baseline), then require the sink call to complete —
-            # gap-freedom under election is pytest/stand-verified; this
-            # records what the election COSTS. The number is recorded
-            # ONLY when the rotation provably landed BEFORE the sink
-            # finished: a rotation against an idle cluster would
-            # silently measure a clean run (r12 review finding).
-            import threading
-
-            baseline = {
-                t: cluster.record_count(t)
-                for t in {tp[0] for tp in cluster._leader}
-            }
-            result = [0, None]  # (moves, completed_monotonic)
-
-            def rotate_once():
-                result[0], result[1] = cluster.rotate_all_leaders(
-                    baseline=baseline,
-                    exclude_topics={"bench.raw0", "bench.raw1"},
-                )
-
-            rotator = threading.Thread(target=rotate_once, daemon=True)
-            rotator.start()
-            t2 = time.perf_counter()
-            sink(delivery, 9)
-            faulted_sec = time.perf_counter() - t2
-            sink_done = time.monotonic()
-            rotator.join(timeout=1.0)
-            if result[0] and result[1] is not None and result[1] <= sink_done:
-                kafka_sink_faulted_eps = round(kafka_sink_events / faulted_sec)
-    except Exception as e:  # the probe must never sink the bench
-        print(f"# kafka probe failed: {type(e).__name__}: {e}", file=sys.stderr)
-
-    # Dedup scale-exponent probe: minhash dedup at 1x and 4x the corpus.
-    # The banded LSH path claims near-linear candidate generation; a
-    # quadratic pipeline would show ~16x time at 4x docs. Copies get an
-    # alphabet rotation so they are NOT near-dups of their originals
-    # (same shingle statistics, disjoint shingle sets) — the 4x corpus
-    # stresses volume, not artificial clone clusters.
-    dedup_1x_sec = dedup_4x_sec = None
-    try:
-        from pyspark.sql import functions as SF
-
-        from outboxx_spark.dataops.dedup import minhash_dedup_pairs
-
-        docs = read_table(spark, sf_dir, "documents")
-        alpha = "abcdefghijklmnopqrstuvwxyz"
-        copies = [docs.select("doc_id", "text")]
-        n_docs = docs.count()
-        for r in (1, 2, 3):
-            rot = alpha[r:] + alpha[:r]
-            copies.append(
-                docs.select(
-                    (SF.col("doc_id") + r * n_docs).alias("doc_id"),
-                    SF.translate("text", alpha, rot).alias("text"),
-                )
-            )
-        big = copies[0]
-        for c in copies[1:]:
-            big = big.unionByName(c)
-        # both corpora repartitioned identically — otherwise the 1x side
-        # (a single parquet file -> one partition) runs handicapped and
-        # the ratio flatters the pipeline
-        big = big.repartition(32).localCheckpoint(eager=True)
-        small = copies[0].repartition(32).localCheckpoint(eager=True)
-        # rebuild per trial: the operator materializes intermediates
-        # eagerly at build, and the scale exponent must include that
-        # (linear) stage on both sides, not just the post-build scan.
-        # Sampling discipline (r9, replaces the one-sided >3.0-triggered
-        # resample the r8 advisory flagged as downward-biased): a fixed,
-        # SYMMETRIC min-of-3 per side, with the 1x/4x trials INTERLEAVED
-        # so an ambient-load phase on this ±20%-noise host hits both
-        # sides of the ratio instead of whichever side happened to run
-        # during the burst — the 1x denominator is ~1s, so one slow
-        # phase on one side alone swings the reported scale exponent by
-        # whole tenths (observed 2.19-3.37 across same-code r8 runs).
-        # warm BOTH plan shapes before timing (r11): the 4x side's
-        # first-ever pass pays one-time JIT/Arrow-pool growth the 1x
-        # warm-up does not cover — measured standalone: first big pass
-        # 9.7s, steady state 3.3-4.1s. Warming only `small` left the
-        # 4x min-of-3 bimodal across otherwise-identical runs
-        # (2.33 / 6.79 / 8.51 in the three r11 sf0.1 runs).
-        minhash_dedup_pairs(small).write.format("noop").mode("overwrite").save()
-        minhash_dedup_pairs(big).write.format("noop").mode("overwrite").save()
-        one_x: list[float] = []
-        four_x: list[float] = []
-        for _ in range(3):
-            one_x.append(
-                _timed(lambda: minhash_dedup_pairs(small).write.format("noop").mode("overwrite").save())
-            )
-            four_x.append(
-                _timed(lambda: minhash_dedup_pairs(big).write.format("noop").mode("overwrite").save())
-            )
-        dedup_1x_sec = round(min(one_x), 4)
-        dedup_4x_sec = round(min(four_x), 4)
-    except Exception as e:  # the probe must never sink the bench
-        print(f"# dedup scaleup probe failed: {type(e).__name__}: {e}", file=sys.stderr)
-
-    # Deep-graph clustering probe: a 4096-node CHAIN (diameter 4095),
-    # the worst-case topology for label propagation, run at the
-    # operator's DEFAULTS. Since the r9 pointer-jumping change the
-    # default path covers distance ~4^rounds, so this chain converges
-    # in ~6 propagation rounds — measured CHEAPER than the r8 probe's
-    # bounded-max_iter route into the star-contraction fallback
-    # (8.6-9.5s vs 10.3-13.8s on the same ambient-load host), and it is
-    # what a 100 TB corpus with a high-diameter component actually
-    # executes. The contraction fallback is now unreachable at defaults
-    # (only callers that bound max_iter low can hit it) and stays
-    # correctness-pinned by the union-find property test each round; a
-    # per-round BENCH of a defaults-unreachable path stopped earning
-    # its ~11s. Single pass (the cost is round-count-dominated,
-    # driver-latency-bound — a min-of-2 would double a ~9s probe for
-    # noise the cross-round drift guard already absorbs).
-    dup_clusters_deep_sec = dup_clusters_deep_nodes = None
-    try:
-        from pyspark.sql import functions as SF
-
-        from outboxx_spark.dataops.curation import dup_clusters
-
-        n_chain = 4096
-        chain = spark.range(n_chain - 1).select(
-            SF.col("id").alias("doc_a"), (SF.col("id") + 1).alias("doc_b")
-        )
-        # min of 2 trials — the same noise policy the timed queries get
-        # (min of 3). This probe is ~40 latency-bound stages; its first
-        # execution carries one-time codegen/scheduler warmup that is
-        # not the algorithm under test (r10: cold 14.3s vs warm 8.6s on
-        # identical plans).
-        trials = []
-        for _ in range(2):
-            t0 = time.perf_counter()
-            labeled = dup_clusters(chain)
-            n_labeled = labeled.filter(SF.col("cluster_id") == 0).count()
-            trials.append(time.perf_counter() - t0)
-            if n_labeled != n_chain:  # one component, min id 0
-                raise AssertionError(f"chain clustering wrong: {n_labeled}")
-        dup_clusters_deep_sec = round(min(trials), 4)
-        dup_clusters_deep_nodes = n_chain
-
-        def _rerun_deep():
-            t0 = time.perf_counter()
-            dup_clusters(chain).filter(SF.col("cluster_id") == 0).count()
-            return {"dup_clusters_deep_sec": time.perf_counter() - t0}
-
-        probe_reruns.append((("dup_clusters_deep_sec",), _rerun_deep))
-    except Exception as e:  # the probe must never sink the bench
-        dup_clusters_deep_sec = None
-        print(f"# deep clusters probe failed: {type(e).__name__}: {e}", file=sys.stderr)
-
-    # Embedding scale-exponent probe (the dedup family's 4x probe,
-    # applied to the embedding family): bucketed near-dup (LSH) and IVF
-    # ANN at 1x and 4x the corpus. Copies are dimension-rotated so they
-    # are ~orthogonal to their originals (same norm statistics, no
-    # planted clone pairs) — the 4x corpus stresses volume. A quadratic
-    # pipeline would show ~16x time at 4x vectors; the bucketed/probed
-    # paths must stay well under.
-    emb_lsh_1x = emb_lsh_4x = emb_ivf_1x = emb_ivf_4x = None
-    try:
-        from outboxx_spark.dataops.similarity import (
-            embedding_near_dup_pairs_lsh,
-            ivf_ann_topk,
-            with_planted_near_dups,
-        )
-
-        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        n_vec = emb.count()
-        dim = len(emb.select("embedding").first()[0])
-        copies = [emb.select("vec_id", "embedding")]
-        for r in (1, 2, 3):
-            rot = r * (dim // 4)
-            copies.append(
-                emb.select(
-                    (F.col("vec_id") + r * n_vec).alias("vec_id"),
-                    F.concat(
-                        F.slice("embedding", rot + 1, dim - rot),
-                        F.slice("embedding", 1, rot),
-                    ).alias("embedding"),
-                )
-            )
-        big_e = copies[0]
-        for c in copies[1:]:
-            big_e = big_e.unionByName(c)
-        big_e = big_e.repartition(32).localCheckpoint(eager=True)
-        small_e = copies[0].repartition(32).localCheckpoint(eager=True)
-
-        def _lsh(df):
-            return embedding_near_dup_pairs_lsh(
-                with_planted_near_dups(df), threshold=0.8, n_planes=16, n_tables=8
-            )
-
-        # warm both plan shapes (r11, same rationale as the dedup
-        # probe: the 4x side's first pass carries one-time costs the
-        # 1x warm-up does not amortize)
-        _lsh(small_e).write.format("noop").mode("overwrite").save()
-        _lsh(big_e).write.format("noop").mode("overwrite").save()
-        emb_lsh_1x = round(
-            min(_timed(lambda: _lsh(small_e).write.format("noop").mode("overwrite").save()) for _ in range(2)), 4
-        )
-        emb_lsh_4x = round(
-            min(_timed(lambda: _lsh(big_e).write.format("noop").mode("overwrite").save()) for _ in range(2)), 4
-        )
-        _ivf = lambda df: ivf_ann_topk(df, n_queries=10, k=10).write.format("noop").mode("overwrite").save()  # noqa: E731
-        _ivf(small_e)  # warm
-        _ivf(big_e)  # warm
-        emb_ivf_1x = round(min(_timed(lambda: _ivf(small_e)) for _ in range(3)), 4)
-        emb_ivf_4x = round(min(_timed(lambda: _ivf(big_e)) for _ in range(3)), 4)
-
-        def _rerun_emb_scaleup():
-            return {
-                "emb_lsh_1x_sec": _timed(lambda: _lsh(small_e).write.format("noop").mode("overwrite").save()),
-                "emb_lsh_4x_sec": _timed(lambda: _lsh(big_e).write.format("noop").mode("overwrite").save()),
-                "emb_ivf_1x_sec": _timed(lambda: _ivf(small_e)),
-                "emb_ivf_4x_sec": _timed(lambda: _ivf(big_e)),
-            }
-
-        probe_reruns.append(
-            (
-                ("emb_lsh_1x_sec", "emb_lsh_4x_sec", "emb_lsh_4x_time_ratio",
-                 "emb_ivf_1x_sec", "emb_ivf_4x_sec", "emb_ivf_4x_time_ratio"),
-                _rerun_emb_scaleup,
-            )
-        )
-    except Exception as e:  # the probe must never sink the bench
-        print(f"# embedding scaleup probe failed: {type(e).__name__}: {e}", file=sys.stderr)
-
-    # Persistent IVF index probe: build once, then serve a 10-query
-    # batch from the store — the serving-path latency a rebuilt-per-call
-    # ivf_ann_topk hides (its bench number pays training+assignment
-    # every invocation).
-    ivf_build_sec = ivf_serve_sec = None
-    ivf_add_sec = ivf_serve_grown_sec = None
-    ivf_root = tempfile.mkdtemp(prefix="bench_ivfstore_")
-    try:
-        from outboxx_spark.dataops.similarity import (
-            build_ivf_index,
-            ivf_ann_topk_from_store,
-        )
-
-        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        # min of 2 builds into fresh dirs (probe noise policy); the
-        # second build's store serves the legs below
-        build_trials = []
-        for trial in range(2):
-            ivf_store = f"{ivf_root}/ivf{trial}"
-            build_trials.append(_timed(lambda: build_ivf_index(emb, ivf_store)))
-        ivf_build_sec = round(min(build_trials), 4)
-        queries_df = emb.filter(F.col("vec_id") < 10).localCheckpoint(eager=True)
-
-        def _serve():
-            ivf_ann_topk_from_store(spark, ivf_store, queries_df, k=10).write.format(
-                "noop"
-            ).mode("overwrite").save()
-
-        _serve()  # warm
-        ivf_serve_sec = round(min(_timed(_serve) for _ in range(3)), 4)
-
-        # Incremental-add probe (r9): append a 100-vector sealed
-        # generation with the frozen quantizer, then serve from the
-        # grown (base + gen) store. The claim under test: growing the
-        # index costs one assignment pass over the DELTA (not a
-        # rebuild), and served latency stays at the base store's order.
-        from outboxx_spark.dataops.ivf_store import ivf_index_add, ivf_serve
-
-        delta = emb.filter(F.col("vec_id") < 100).select(
-            (F.col("vec_id") + 1_000_000).alias("vec_id"), "embedding"
-        )
-        ivf_add_sec = round(_timed(lambda: ivf_index_add(delta, ivf_store)), 4)
-
-        def _serve_grown():
-            ivf_serve(spark, ivf_store, queries_df, k=10).write.format(
-                "noop"
-            ).mode("overwrite").save()
-
-        _serve_grown()  # warm
-        ivf_serve_grown_sec = round(min(_timed(_serve_grown) for _ in range(3)), 4)
-    except Exception as e:  # the probe must never sink the bench
-        print(f"# ivf store probe failed: {type(e).__name__}: {e}", file=sys.stderr)
-    finally:
-        shutil.rmtree(ivf_root, ignore_errors=True)
-
-    # Training-shard export probe (r9): the full write path — shard
-    # assignment, one-file-per-shard write, manifest — plus the
-    # distributed verify re-read, on the documents corpus.
-    export_shards_sec = export_verify_sec = export_n_shards = None
-    export_root = tempfile.mkdtemp(prefix="bench_export_")
-    try:
-        from outboxx_spark.dataops.export import export_shards, verify_export
-
-        docs_x = read_table(spark, sf_dir, "documents").select("doc_id", "text")
-        m = {}
-        # min of 2 full exports into fresh dirs (probe noise policy);
-        # verify runs against the last export's files
-        exp_t, ver_t = [], []
-        for trial in range(2):
-            out = f"{export_root}/shards{trial}"
-
-            def _export():
-                m["manifest"] = export_shards(docs_x, out, target=20000)
-
-            exp_t.append(_timed(_export))
-            ver_t.append(_timed(lambda: verify_export(spark, out)))
-        export_shards_sec = round(min(exp_t), 4)
-        export_n_shards = m["manifest"]["n_shards"]
-        export_verify_sec = round(min(ver_t), 4)
-
-        def _rerun_export():
-            root = tempfile.mkdtemp(prefix="bench_export_r_")
-            try:
-                o = f"{root}/shards"
-                es = _timed(lambda: export_shards(docs_x, o, target=20000))
-                vs = _timed(lambda: verify_export(spark, o))
-                return {"export_shards_sec": es, "export_verify_sec": vs}
-            finally:
-                shutil.rmtree(root, ignore_errors=True)
-
-        probe_reruns.append(
-            (("export_shards_sec", "export_verify_sec"), _rerun_export)
-        )
-    except Exception as e:  # the probe must never sink the bench
-        print(f"# export probe failed: {type(e).__name__}: {e}", file=sys.stderr)
-    finally:
-        shutil.rmtree(export_root, ignore_errors=True)
-
-    # Incremental-totals probe (r9): the changelog is applied in two
-    # halves through the ledger + table-sink state. The claim under
-    # test mirrors the dedup store's: batch 2 (deltas against a
-    # POPULATED key state) must cost the same order as batch 1, and
-    # the ledger totals must equal the batch algebra over the whole
-    # feed (asserted — a silent divergence fails the bench).
-    incragg_b1_sec = incragg_b2_sec = None
-    incragg_root = tempfile.mkdtemp(prefix="bench_incragg_")
-    try:
-        from outboxx_spark.operators.incragg import incremental_group_totals
-        from outboxx_spark.sources.feed import read_feed
-        from outboxx_spark.streaming.incragg_stream import (
-            apply_incremental_totals_batch,
-            read_group_totals,
-        )
-
-        feed = read_feed(spark, sf_dir)
-        mid = feed.agg(F.expr("percentile_approx(lsn, 0.5)")).first()[0] or 0
-        h1 = feed.filter(F.col("lsn") <= mid)
-        h2 = feed.filter(F.col("lsn") > mid)
-        # min of 2 full b1->b2 protocols on fresh stores (probe noise
-        # policy); the last trial's ledger feeds the equality assert
-        b1_t, b2_t = [], []
-        for trial in range(2):
-            tdir = f"{incragg_root}/table{trial}"
-            ldir = f"{incragg_root}/ledger{trial}"
-            b1_t.append(
-                _timed(lambda: apply_incremental_totals_batch(h1, tdir, ldir, 0))
-            )
-            b2_t.append(
-                _timed(lambda: apply_incremental_totals_batch(h2, tdir, ldir, 1))
-            )
-        incragg_b1_sec = round(min(b1_t), 4)
-        incragg_b2_sec = round(min(b2_t), 4)
-
-        def _rerun_incragg():
-            root = tempfile.mkdtemp(prefix="bench_incragg_r_")
-            try:
-                td, ld = f"{root}/table", f"{root}/ledger"
-                b1 = _timed(lambda: apply_incremental_totals_batch(h1, td, ld, 0))
-                b2 = _timed(lambda: apply_incremental_totals_batch(h2, td, ld, 1))
-                return {"incragg_b1_sec": b1, "incragg_b2_sec": b2}
-            finally:
-                shutil.rmtree(root, ignore_errors=True)
-
-        probe_reruns.append((("incragg_b1_sec", "incragg_b2_sec"), _rerun_incragg))
-        ledger = {
-            (r["resource"], r["n_live"], r["sum_value_cents"])
-            for r in read_group_totals(spark, ldir).collect()
-        }
-        batch = {
-            (r["resource"], r["n_live"], r["sum_value_cents"])
-            for r in incremental_group_totals(feed).collect()
-        }
-        if ledger != batch:
-            raise AssertionError("incragg ledger diverged from batch algebra")
-    except Exception as e:  # the probe must never sink the bench
-        print(f"# incragg probe failed: {type(e).__name__}: {e}", file=sys.stderr)
-    finally:
-        shutil.rmtree(incragg_root, ignore_errors=True)
-
-    # Incremental dedup-store probe (tracked per round): ingest the
-    # corpus in two halves through the persistent LSH survivor store.
-    # The claim under test is per-batch-bounded work: batch 2 (probing
-    # a populated store) must cost the same order as batch 1 (empty
-    # store), not rescan-everything.
-    dedup_store_b1_sec = dedup_store_b2_sec = None
-    dedup_store_vs_4x_sec = dedup_store_compact_sec = None
-    dedup_store_files_before = dedup_store_files_after = None
-    dedup_store_bytes = None
-    store_root = tempfile.mkdtemp(prefix="bench_dedupstore_")
-    try:
-        from outboxx_spark.dataops.incremental import (
-            compact_dedup_store,
-            incremental_minhash_dedup_batch,
-        )
-
-        docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
-        n_docs = docs.count()
-        half1 = docs.filter(F.col("doc_id") < n_docs // 2)
-        half2 = docs.filter(F.col("doc_id") >= n_docs // 2)
-        # min of 2 full b1->b2 trials on fresh stores (the queries' own
-        # min-of-3 noise policy; r10 measured the cold first trial at
-        # 8.3/5.2s vs 2.4/3.7s warm — first-execution warmup, not the
-        # ingest protocol under test). BOTH trial stores carry valid
-        # two-batch state; the 4x/compaction legs below grow each one.
-        b1_trials, b2_trials = [], []
-        for trial in range(2):
-            store = f"{store_root}/store{trial}"
-            b1_trials.append(
-                _timed(lambda: incremental_minhash_dedup_batch(half1, store, batch_id=0))
-            )
-            b2_trials.append(
-                _timed(lambda: incremental_minhash_dedup_batch(half2, store, batch_id=1))
-            )
-        dedup_store_b1_sec = round(min(b1_trials), 4)
-        dedup_store_b2_sec = round(min(b2_trials), 4)
-        # drop trial 0's checkpointed-RDD py4j refs BEFORE the 4x legs:
-        # without this the accumulated blocks inflate the grown-store
-        # legs ~3x (r10 measured 2.96s -> 10.4s compact with two trial
-        # stores' blocks still registered; the query loop learned the
-        # same lesson in r4)
-        gc.collect()
-
-        def _rerun_dedup_store():
-            root = tempfile.mkdtemp(prefix="bench_dedupstore_r_")
-            try:
-                st = f"{root}/store"
-                b1 = _timed(lambda: incremental_minhash_dedup_batch(half1, st, batch_id=0))
-                b2 = _timed(lambda: incremental_minhash_dedup_batch(half2, st, batch_id=1))
-                return {"dedup_store_b1_sec": b1, "dedup_store_b2_sec": b2}
-            finally:
-                shutil.rmtree(root, ignore_errors=True)
-
-        probe_reruns.append(
-            (("dedup_store_b1_sec", "dedup_store_b2_sec"), _rerun_dedup_store)
-        )
-        # Store-SIZE independence + compaction, min of 2 FULL trials
-        # (r10 final): the grown-store legs (growth probe + compact)
-        # swung 2.4-5.6s on identical code across three same-day runs
-        # while b1/b2 sat at their pins — single samples of the LATE
-        # legs absorb whatever session pressure accumulated by then.
-        # Both trial stores from the b1/b2 loop already exist, so each
-        # gets the identical grow->probe->compact sequence and every
-        # leg reports its min, the same policy the timed queries use.
-        #
-        # Growth: ~4x the corpus via alphabet-rotated copies (disjoint
-        # shingle sets, no clone clusters); the probe batch then must
-        # cost the same order as b2 against the small store — a
-        # store-scan per batch would grow with store size instead.
-        import os as _os
-
-        def _pq_files(st: str) -> int:
-            total = 0
-            for tree in ("buckets", "docs"):
-                for _, _, files in _os.walk(f"{st}/{tree}"):
-                    total += sum(1 for f in files if f.endswith(".parquet"))
-            return total
-
-        alpha = "abcdefghijklmnopqrstuvwxyz"
-        vs4x_trials, compact_trials = [], []
-        for trial in range(2):
-            store = f"{store_root}/store{trial}"
-            for r in (1, 2, 3):
-                rot = alpha[r:] + alpha[:r]
-                copy = docs.select(
-                    (F.col("doc_id") + r * n_docs).alias("doc_id"),
-                    F.translate("text", alpha, rot).alias("text"),
-                )
-                incremental_minhash_dedup_batch(copy, store, batch_id=1 + r)
-                gc.collect()  # release each growth batch's checkpoint blocks
-            probe_batch = docs.select(
-                (F.col("doc_id") + 4 * n_docs).alias("doc_id"),
-                F.translate("text", alpha, alpha[4:] + alpha[:4]).alias("text"),
-            ).filter(F.col("doc_id") < 4 * n_docs + n_docs // 2)
-            vs4x_trials.append(
-                _timed(
-                    lambda: incremental_minhash_dedup_batch(
-                        probe_batch, store, batch_id=5
-                    )
-                )
-            )
-            gc.collect()
-            if trial == 0:
-                # data-volume attribution for this family (the rows_*
-                # probes' rationale): the grown store's bytes move with
-                # the corpus's shingle volume, so a cross-round timing
-                # diff can be read against the data it ingested
-                dedup_store_bytes = 0
-                for _r, _, _files in _os.walk(store):
-                    dedup_store_bytes += sum(
-                        _os.path.getsize(_os.path.join(_r, f)) for f in _files
-                    )
-                dedup_store_files_before = _pq_files(store)
-            compact_trials.append(
-                _timed(lambda: compact_dedup_store(spark, store))
-            )
-            gc.collect()
-            if trial == 0:
-                dedup_store_files_after = _pq_files(store)
-        dedup_store_vs_4x_sec = round(min(vs4x_trials), 4)
-        dedup_store_compact_sec = round(min(compact_trials), 4)
-    except Exception as e:  # the probe must never sink the bench
-        print(f"# dedup store probe failed: {type(e).__name__}: {e}", file=sys.stderr)
-    finally:
-        shutil.rmtree(store_root, ignore_errors=True)
-
+        except Exception as e:  # the guard must never sink the bench
+            regressions, resampled = [f"drift-check failed: {type(e).__name__}"], []
     total = round(sum(timings.values()), 4)
-    extra = {
-        "pipeline_events": n_events,
-        "pipeline_events_per_sec": round(n_events / pipeline_sec) if pipeline_sec else None,
-        "scaleup_events": scaleup_events,
-        "scaleup_events_per_sec": (
-            round(scaleup_events / scaleup_sec) if scaleup_sec else None
-        ),
-        "tablesink_load_sec": tablesink_load_sec,
-        "tablesink_incr_sec": tablesink_incr_sec,
-        "tablesink_events_per_sec": (
-            round(n_events / tablesink_load_sec) if tablesink_load_sec else None
-        ),
-        "dedup_1x_sec": dedup_1x_sec,
-        "dedup_4x_sec": dedup_4x_sec,
-        "dedup_4x_trials": 3,
-        "dedup_4x_time_ratio": (
-            round(dedup_4x_sec / dedup_1x_sec, 2) if dedup_1x_sec and dedup_4x_sec else None
-        ),
-        "dup_clusters_deep_sec": dup_clusters_deep_sec,
-        "dup_clusters_deep_nodes": dup_clusters_deep_nodes,
-        "dedup_store_b1_sec": dedup_store_b1_sec,
-        "dedup_store_b2_sec": dedup_store_b2_sec,
-        "dedup_store_vs_4x_sec": dedup_store_vs_4x_sec,
-        "dedup_store_compact_sec": dedup_store_compact_sec,
-        "dedup_store_files_before": dedup_store_files_before,
-        "dedup_store_files_after": dedup_store_files_after,
-        "dedup_store_bytes": dedup_store_bytes,
-        "emb_lsh_1x_sec": emb_lsh_1x,
-        "emb_lsh_4x_sec": emb_lsh_4x,
-        "emb_lsh_4x_time_ratio": (
-            round(emb_lsh_4x / emb_lsh_1x, 2) if emb_lsh_1x and emb_lsh_4x else None
-        ),
-        "emb_ivf_1x_sec": emb_ivf_1x,
-        "emb_ivf_4x_sec": emb_ivf_4x,
-        "emb_ivf_4x_time_ratio": (
-            round(emb_ivf_4x / emb_ivf_1x, 2) if emb_ivf_1x and emb_ivf_4x else None
-        ),
-        "ivf_build_sec": ivf_build_sec,
-        "ivf_serve_sec": ivf_serve_sec,
-        "ivf_add_sec": ivf_add_sec,
-        "ivf_serve_grown_sec": ivf_serve_grown_sec,
-        "export_shards_sec": export_shards_sec,
-        "export_verify_sec": export_verify_sec,
-        "export_n_shards": export_n_shards,
-        "kafka_raw_drain_events_per_sec": kafka_raw_drain_eps,
-        "kafka_sink_events": kafka_sink_events,
-        # official sink number = the CLEAN leg (r10-comparable); the
-        # faulted leg is its own key so elections never skew the trend
-        "kafka_sink_events_per_sec": kafka_sink_clean_eps,
-        "kafka_sink_clean_events_per_sec": kafka_sink_clean_eps,
-        "kafka_sink_ordered_events_per_sec": kafka_sink_ordered_eps,
-        "kafka_sink_faulted_events_per_sec": kafka_sink_faulted_eps,
-        "incragg_b1_sec": incragg_b1_sec,
-        "incragg_b2_sec": incragg_b2_sec,
-        "n_queries": len(timings),
-        # r4 accounting change: per-query timings REBUILD the DataFrame
-        # every pass, so eager build stages (checkpoint
-        # materializations, iterative loops like dup_clusters) are now
-        # INSIDE the clock. Queries with eager stages report higher —
-        # truer — numbers than r3's prebuilt-frame accounting did
-        # (dup_clusters 0.02s -> ~2s is the correction, not a
-        # regression).
-        "accounting": "rebuild-per-pass",
-        "detail": "bench_detail.json",
-    }
 
-    # Volume probes (r10): the driver REGENERATES the testdata corpus
-    # each round, so a data-sensitive query's cross-round timing diff
-    # carries corpus drift (more duplication -> more candidate pairs ->
-    # honestly slower) that the host factor cannot explain. Record the
-    # output row count of the duplication-volume-sensitive queries so
-    # the drift guard can annotate a flag with the volume move and a
-    # reader can separate "the data got heavier" from "the plan got
-    # slower". Counts run OUTSIDE the timing clock, once per query.
-    for _vq in (
-        "docs_ngram_dedup",
-        "docs_minhash_dedup",
-        "docs_exact_dedup",
-        "docs_edit_dedup",
-        "docs_substring_spans",
-        "emb_near_dup",
-        "emb_near_dup_ivf",
-        "emb_near_dup_lsh",
-        "docs_dup_clusters",
-    ):
-        if _vq in qs:
-            try:
-                extra[f"rows_{_vq}"] = qs[_vq](spark, sf_dir).count()
-                gc.collect()
-            except Exception:
-                pass
-
-    # Cross-round drift guard (r7): diff this run — full per-query
-    # table AND extra.* sub-metrics, direction-aware — against the
-    # previous round's committed bench_detail snapshot, so a >20%
-    # adverse move (the unflagged r5->r6 tablesink/dedup_1x drift)
-    # lands in the round artifact instead of needing a manual diff.
-    # Only comparable at the same scale factor.
-    regressions: list[str] = []
-    # names given a 4th sample by the noise-rejection re-run below —
-    # recorded in the detail artifact so a "min of 4" entry is
-    # distinguishable from the unflagged "min of 3" ones
-    resampled: list[str] = []
-    try:
-        sys.path.insert(0, str(REPO / "tools"))
-        from bench_compare import PREV_ROUND, round_drift
-
-        if PREV_ROUND.exists():
-            prev = json.loads(PREV_ROUND.read_text())
-            if prev.get("sf") == sf:
-                regressions = round_drift(prev, timings, extra)
-                # Noise rejection: a flagged per-query move can be a
-                # host-load window that spanned all three interleaved
-                # passes (observed ±20-30% ambient). Re-run just the
-                # flagged queries once more, keep the min, re-diff —
-                # a real regression survives its fourth sample, a
-                # spike does not.
-                flagged = [
-                    r.split(" ")[0] for r in regressions if r.split(" ")[0] in qs
-                ]
-                resampled = list(flagged)
-                for name in flagged:
-                    try:
-                        t0 = time.perf_counter()
-                        qs[name](spark, sf_dir).write.format("noop").mode(
-                            "overwrite"
-                        ).save()
-                        timings[name] = round(
-                            min(timings[name], time.perf_counter() - t0), 4
-                        )
-                        gc.collect()
-                    except Exception:
-                        pass
-                # Flagged-PROBE re-run (r10): same policy for extra.*
-                # probes that registered a re-measure thunk — run once,
-                # min-merge, recompute the affected derived metrics.
-                probe_flagged = {r.split(" ")[0] for r in regressions}
-                for metrics, thunk in probe_reruns:
-                    if not (probe_flagged & set(metrics)):
-                        continue
-                    try:
-                        vals = thunk()
-                    except Exception:
-                        continue
-                    resampled += [k for k in vals]
-                    for k, v in vals.items():
-                        old = extra.get(k)
-                        if not isinstance(old, (int, float)):
-                            extra[k] = round(v, 4)
-                        elif k.endswith("_per_sec"):  # throughput: keep best
-                            extra[k] = round(max(old, v))
-                        else:
-                            extra[k] = round(min(old, v), 4)
-                if extra.get("tablesink_load_sec") and n_events:
-                    extra["tablesink_events_per_sec"] = round(
-                        n_events / extra["tablesink_load_sec"]
-                    )
-                for fam in ("emb_lsh", "emb_ivf"):
-                    a, b = extra.get(f"{fam}_1x_sec"), extra.get(f"{fam}_4x_sec")
-                    if isinstance(a, (int, float)) and isinstance(b, (int, float)) and a:
-                        extra[f"{fam}_4x_time_ratio"] = round(b / a, 2)
-                if flagged or (probe_flagged & {
-                    k for metrics, _ in probe_reruns for k in metrics
-                }):
-                    total = round(sum(timings.values()), 4)
-                    regressions = round_drift(prev, timings, extra)
-            else:
-                regressions = [f"skipped: prev round at sf={prev.get('sf')}"]
-    except Exception as e:  # the guard must never sink the bench
-        regressions = [f"drift-check failed: {type(e).__name__}"]
-
-    for _root in deferred_cleanup:
-        shutil.rmtree(_root, ignore_errors=True)
-
-    # Host-speed normalization as a FIRST-CLASS artifact field (r9
-    # judge ask): the paired-sample median new/old ratio the drift
-    # guard already judges against. 1.0 = quiet host; entries in
-    # `regressions` are adverse moves RELATIVE to this factor, so a
-    # reader can separate ambient load from real drift without prose.
-    extra["host_factor"] = 1.0
-    for r in regressions:
-        if r.startswith("host_factor "):
-            extra["host_factor"] = float(r.split(" ", 1)[1])
-            break
+    # Host-speed normalization: the paired-sample median new/old ratio
+    # the drift guard judges against. 1.0 = quiet host; entries in
+    # `regressions` are adverse moves RELATIVE to this factor.
+    extra["host_factor"] = next(
+        (float(r.split(" ", 1)[1]) for r in regressions if r.startswith("host_factor ")),
+        1.0,
+    )
 
     # Full per-query timings go to a separate committed file; the
     # PRINTED line must stay well under the driver's ~2 KB line-capture
-    # buffer (r3's 68-query line overflowed it and recorded as
-    # unparseable), so it carries only the headline numbers plus a
-    # small fixed set of marquee query timings.
+    # buffer, so it carries only the headline numbers plus a small
+    # fixed set of marquee query timings.
     detail = {
         "metric": "total_query_time",
         "value": total,
@@ -1031,25 +831,38 @@ def main() -> None:
         "resampled": resampled,
     }
     (REPO / "bench_detail.json").write_text(json.dumps(detail, indent=1) + "\n")
+    spark.stop()
+    print(_bench_line(total, timings, sf, extra, regressions))
 
-    marquee = [
-        "cdc_pipeline_full",
-        "docs_edit_dedup",
-        "docs_minhash_dedup",
-        "olap_pricing_summary",
-        "emb_ann_topk",
-        "mm_features",
-    ]
-    def _r3(v):
+
+MARQUEE = (
+    "cdc_pipeline_full",
+    "docs_edit_dedup",
+    "docs_minhash_dedup",
+    "olap_pricing_summary",
+    "emb_ann_topk",
+    "mm_features",
+)
+
+
+def _bench_line(total, timings, sf, extra, regressions) -> str:
+    """The one printed JSON line. It must stay under the driver's ~2 KB
+    capture buffer: degrade gracefully instead of failing after the
+    multi-minute run, and sacrifice the MARQUEE BLOCK LAST (the reader
+    wants the marquee timings; the extras have the detail file): first
+    compact extras to the headline core, then cap regressions, and only
+    then drop the marquee."""
+
+    def r3(v):
         return round(v, 3) if isinstance(v, float) else v
 
     out = {
         "metric": "total_query_time",
         "value": round(total, 3),
         "unit": "sec",
-        "queries": {q: _r3(timings[q]) for q in marquee if q in timings},
+        "queries": {q: r3(timings[q]) for q in MARQUEE if q in timings},
         "sf": sf,
-        "extra": {k: _r3(v) for k, v in extra.items()},
+        "extra": {k: r3(v) for k, v in extra.items()},
         # capped for the line budget; the full list is in the detail file
         "regressions": (
             regressions[:6] + [f"+{len(regressions) - 6} more"]
@@ -1057,22 +870,13 @@ def main() -> None:
             else regressions
         ),
     }
-    spark.stop()
-    # The printed line must stay under the driver's ~2 KB capture
-    # buffer. Degrade gracefully instead of asserting after the
-    # multi-minute run — and sacrifice the MARQUEE BLOCK LAST (r10:
-    # the official artifact printed queries:{} while keeping 12 extra
-    # keys; the judge reads the marquee timings, the extras have the
-    # detail file): first compact extras to the headline core, then
-    # cap regressions, and only then drop marquee.
     line = json.dumps(out)
     if len(line) >= 1800:
         print(f"# bench line {len(line)}B; compacting extras", file=sys.stderr)
         out["extra"] = {
-            "pipeline_events_per_sec": extra["pipeline_events_per_sec"],
-            "scaleup_events_per_sec": extra.get("scaleup_events_per_sec"),
-            "host_factor": extra.get("host_factor"),
-            "detail": "bench_detail.json",
+            k: extra.get(k)
+            for k in ("pipeline_events_per_sec", "scaleup_events_per_sec",
+                      "host_factor", "detail")
         }
         line = json.dumps(out)
     if len(line) >= 1800:
@@ -1086,7 +890,7 @@ def main() -> None:
         print(f"# bench line still {len(line)}B; dropping marquee", file=sys.stderr)
         out["queries"] = {}
         line = json.dumps(out)
-    print(line)
+    return line
 
 
 if __name__ == "__main__":

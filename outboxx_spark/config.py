@@ -6,9 +6,12 @@ normalization `config.zig:473-480`): a *stream* maps one fully-qualified
 source table (``schema.table``) with an operation subset onto one sink
 topic, with a configurable partition-key column (default ``id``).
 
-Re-expressed for Spark: the validated config becomes a tiny DataFrame
-(one row per (stream, resource, op)) that is **broadcast** into the
-routing join — config-sized dimensions never shuffle the event stream.
+Re-expressed for Spark: ``operators.routing.route_config`` compiles the
+validated config into a map literal inside the plan ((resource, op) ->
+matched streams), so routing is a per-row lookup and config-sized
+dimensions never shuffle the event stream. Past
+``ROUTE_LITERAL_MAX_ENTRIES`` (128) it falls back to a broadcast join
+against a one-row-per-(stream, resource, op) dimension.
 """
 
 from __future__ import annotations
@@ -83,10 +86,6 @@ class PipelineConfig:
     streams: list[StreamConfig] = field(default_factory=list)
     source_kind: str = "parquet"
     sink_kind: str = "parquet"
-    # Batching knobs sized after the reference constants
-    # (`src/constants.zig:21-28`): 5000-event batches / 100 ms max wait.
-    max_events_per_trigger: int = 5000
-    trigger_interval: str = "100 milliseconds"
 
     def snapshot_resources(self) -> list[str]:
         """Distinct resources of read-opted streams, so a table read by

@@ -41,7 +41,6 @@ def make_kafka_sink(
     retries: int = 3,
     retry_backoff_ms: int = 500,
     bootstrap: list[tuple[str, int]] | None = None,
-    sink_parallelism: int | None = None,
     tls_ca: str | None = None,
     sasl: tuple[str, str, str] | None = None,
     order_by: str | None = None,
@@ -52,14 +51,6 @@ def make_kafka_sink(
     the batch can commit. ``bootstrap`` lists extra cluster endpoints
     beyond (host, port) so each task's producer can re-learn partition
     leadership through any live broker (multi-broker deployments).
-
-    ``sink_parallelism`` coalesces the frame before producing — the
-    standard Kafka-sink tuning: produce parallelism beyond the topic's
-    partition count adds broker-side contention, not throughput, so
-    match it to the destination partition count (measured on the
-    in-repo 3-broker stand: 32 tasks -> 22k ev/s, 8 tasks -> 81k ev/s
-    for the same 55k-event frame). None leaves the upstream
-    partitioning untouched.
 
     ``order_by`` names a monotone column in the delivery frame (the
     CDC pipeline's ``lsn``) and turns on the per-key ORDERING
@@ -74,8 +65,6 @@ def make_kafka_sink(
     honest price of total per-key order at scale; pipelines that only
     need at-least-once set-delivery skip it. Null keys hash to one
     partition — key-less streams should leave this off."""
-    if sink_parallelism is not None and sink_parallelism <= 0:
-        raise ValueError("sink_parallelism must be a positive task count")
     bootstrap = list(bootstrap or [])
 
     def sink(delivery: DataFrame, epoch_id: int) -> None:
@@ -123,14 +112,13 @@ def make_kafka_sink(
             frame = delivery.select(*cols, F.col(order_by).alias("_ord"))
             # defaultParallelism, NOT the upstream partition count: a
             # file-trigger batch can carry max_files_per_trigger
-            # splits, the over-parallelism regime the sink_parallelism
-            # docstring measures as throughput-destroying; and reading
+            # splits, and produce parallelism beyond the topic's
+            # partitions adds broker contention, not throughput (on the
+            # in-repo 3-broker stand: 32 tasks -> 22k ev/s, 8 tasks ->
+            # 81k ev/s for the same 55k-event frame); reading
             # rdd.getNumPartitions() would pay a plan conversion per
-            # micro-batch just to learn a number (r12 review)
-            npart = (
-                sink_parallelism
-                or delivery.sparkSession.sparkContext.defaultParallelism
-            )
+            # micro-batch just to learn a number
+            npart = delivery.sparkSession.sparkContext.defaultParallelism
             frame = (
                 frame.repartition(npart, "destination", "key")
                 .sortWithinPartitions("destination", "key", "_ord")
@@ -138,8 +126,6 @@ def make_kafka_sink(
             )
         else:
             frame = delivery.select(*cols)
-            if sink_parallelism is not None:
-                frame = frame.coalesce(sink_parallelism)
         frame.mapInPandas(
             produce_batches, schema="acked long"
         ).collect()

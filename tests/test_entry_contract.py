@@ -270,6 +270,54 @@ def test_oracle_snapshot_is_current():
     )
 
 
+def test_oracle_hashes_do_not_depend_on_the_blas_kernel():
+    # the emb_* oracles inline numpy-trained centroids and codebooks;
+    # their last few ulps follow the OpenBLAS kernel picked at run time
+    # (Prescott and SkylakeX differ on ~2k literals), so the snapshot
+    # must hash the same on either
+    import json
+    import os
+    import subprocess
+
+    repo = Path(__file__).resolve().parent.parent
+    script = (
+        "import json, sys\n"
+        f"sys.path[:0] = [{str(repo)!r}, {str(repo / 'tools')!r}]\n"
+        "import __spark_entry__ as E, touched_queries as tq\n"
+        "print(json.dumps(tq._oracle_hashes(E)))\n"
+    )
+    hashes = []
+    for coretype in ("Prescott", "SkylakeX"):
+        env = {**os.environ, "OPENBLAS_CORETYPE": coretype}
+        out = subprocess.run(
+            [sys.executable, "-c", script],
+            env=env, capture_output=True, text=True, check=True,
+        ).stdout
+        hashes.append(json.loads(out))
+    assert hashes[0] == hashes[1]
+
+
+def test_oracle_hash_still_sees_sql_and_constant_edits():
+    from types import SimpleNamespace
+
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
+    import touched_queries as tq
+
+    def digest(sql: str) -> str:
+        return tq._oracle_hashes(SimpleNamespace(oracle_sql=lambda: {"q": sql}))["q"]
+
+    base = digest("SELECT sum(x) * 1.2345678 FROM t WHERE y > 0.5")
+    assert digest("SELECT max(x) * 1.2345678 FROM t WHERE y > 0.5") != base
+    assert digest("SELECT sum(x) * 1.2355678 FROM t WHERE y > 0.5") != base
+    assert digest("SELECT sum(x) * 1.2345678 FROM t WHERE y > 0.6") != base
+    # trained-value jitter far below the kept digits hashes the same
+    assert digest("SELECT sum(x) * 1.2345678000000002 FROM t WHERE y > 0.5") == base
+    # clock times and dotted names are not float literals
+    assert tq._canonical_sql("'12:00:00.123456789' a.b1 1.2.3") == (
+        "'12:00:00.123456789' a.b1 1.2.3"
+    )
+
+
 def test_touched_tool_sees_constant_and_function_changes():
     # unit-level pin of the derivation's three entry-file signals:
     # function-body diffs, module-constant diffs, and the co_names

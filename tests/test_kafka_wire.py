@@ -804,9 +804,7 @@ def test_per_key_order_preserved_with_order_by(spark, broker):
         )
         .repartition(16)  # scatter every key across many partitions
     )
-    sink = make_kafka_sink(
-        broker.host, broker.port, order_by="lsn", sink_parallelism=4
-    )
+    sink = make_kafka_sink(broker.host, broker.port, order_by="lsn")
     sink(df, 0)
     msgs = consume_all(broker.host, broker.port, "ord.t")
     per_key = defaultdict(list)

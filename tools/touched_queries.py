@@ -26,7 +26,8 @@ derives the set mechanically so a stale window is a test failure:
   editing a q_* body (or a helper it calls) flags exactly the queries
   whose formulation changed;
 - **oracle changes** = each query whose ``oracle_sql()`` string hash
-  differs from the committed snapshot (``tests/benchmarks/
+  (float literals rounded to ``ORACLE_FLOAT_DIGITS`` significant
+  digits first) differs from the committed snapshot (``tests/benchmarks/
   oracle_hashes.json``); the snapshot is regenerated by running this
   module with ``--snapshot`` as part of a deliberate rotation, so an
   accidental oracle drift cannot hide.
@@ -255,9 +256,28 @@ def changed_entry_functions(base: str) -> tuple[set[str], set[str]]:
     )
 
 
+# A float literal: digits with a decimal point and/or an exponent, not
+# part of an identifier, a dotted name or a clock time.
+_FLOAT_LITERAL = re.compile(
+    r"(?<![\w.:])(?:\d+\.\d*(?:[eE][+-]?\d+)?|\d+[eE][+-]?\d+)(?![\w.])"
+)
+# Significant digits kept per float literal before hashing. Oracles that
+# inline numpy-trained centroids and codebooks differ in the last few
+# ulps with the BLAS kernel the host selects at run time (up to ~4e-14
+# relative); 8 digits keeps every hand-written constant while the
+# trained values hash the same on every kernel.
+ORACLE_FLOAT_DIGITS = 8
+
+
+def _canonical_sql(sql: str) -> str:
+    return _FLOAT_LITERAL.sub(
+        lambda m: f"{float(m.group()):.{ORACLE_FLOAT_DIGITS}g}", sql
+    )
+
+
 def _oracle_hashes(entry) -> dict[str, str]:
     return {
-        name: hashlib.sha256(sql.encode()).hexdigest()[:16]
+        name: hashlib.sha256(_canonical_sql(sql).encode()).hexdigest()[:16]
         for name, sql in entry.oracle_sql().items()
     }
 
