@@ -311,8 +311,13 @@ def _kafka_faulted(p: Probe) -> dict:
             t: cluster.record_count(t) for t in {tp[0] for tp in cluster._leader}
         }
         rotation: list = []  # (moves, monotonic time the rotation landed)
+        # a twentieth of the frame: small enough to be reached at any
+        # scale factor (sf0.001 delivers 582 records), large enough to
+        # prove delivery is flowing when the rotation fires
         rotator = threading.Thread(
-            target=lambda: rotation.extend(cluster.rotate_all_leaders(baseline=baseline)),
+            target=lambda: rotation.extend(
+                cluster.rotate_all_leaders(baseline=baseline, min_new_records=min(1000, n // 20))
+            ),
             daemon=True,
         )
         rotator.start()

@@ -36,22 +36,8 @@ def pg_bool(text_col: Column) -> Column:
     )
 
 
-def pg_int(text_col: Column) -> Column:
-    """Parse to i64; parse failure keeps the original string
-    (`converter.zig:171-174`). Returned as string-typed union surrogate:
-    use `pg_int_typed` when the column is known-clean."""
-    parsed = text_col.try_cast("long")
-    return F.when(parsed.isNotNull() | text_col.isNull(), parsed.cast("string")).otherwise(text_col)
-
-
 def pg_int_typed(text_col: Column) -> Column:
     return text_col.try_cast("long")
-
-
-def pg_float_typed(text_col: Column) -> Column:
-    """Parse to double; NaN/±Inf must be re-stringified at serialization
-    (see `float_json_safe`)."""
-    return text_col.try_cast("double")
 
 
 def float_json_safe(d: Column) -> Column:
@@ -64,11 +50,6 @@ def float_json_safe(d: Column) -> Column:
         .when(d == float("-inf"), F.lit("-Infinity"))
         .otherwise(d.cast("string"))
     )
-
-
-def pg_numeric(text_col: Column) -> Column:
-    """numeric stays exact text (`converter.zig:184-191`)."""
-    return text_col.cast("string")
 
 
 def toast_or_value(text_col: Column, unchanged: Column) -> Column:

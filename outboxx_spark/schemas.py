@@ -22,34 +22,6 @@ OP_DELETE = "DELETE"
 OP_READ = "READ"
 ALL_OPS = (OP_INSERT, OP_UPDATE, OP_DELETE, OP_READ)
 
-META_SCHEMA = T.StructType(
-    [
-        T.StructField("source", T.StringType(), False),
-        T.StructField("resource", T.StringType(), False),
-        T.StructField("timestamp", T.LongType(), True),  # Unix seconds, commit time
-        T.StructField("lsn", T.LongType(), True),  # numeric; text X/X at serialization
-    ]
-)
-
-
-def change_event_schema(data_schema: T.DataType) -> T.StructType:
-    """ChangeEvent with a typed ``data`` payload.
-
-    ``data`` holds the new image; ``old`` is populated only for UPDATE
-    (tagged-union DataSection, `change_event.zig:99-106`). The JSON
-    serializer emits only the new image (`src/serialization/json.zig:57-70`),
-    so ``old`` exists in the model but never in the envelope.
-    """
-    return T.StructType(
-        [
-            T.StructField("op", T.StringType(), False),
-            T.StructField("data", data_schema, True),
-            T.StructField("old", data_schema, True),
-            T.StructField("meta", META_SCHEMA, False),
-        ]
-    )
-
-
 # Schema-on-read payload: ordered map of column name -> text value, the
 # Spark analog of RowData (`change_event.zig:41-47`) for tables not known
 # at compile time.

@@ -15,7 +15,8 @@ Reproduces the reference's orchestration (SURVEY §2.6/§3):
   re-produce a suffix; consumers dedup on (resource, lsn) (O4).
 - O6 graceful shutdown: ``query.stop()``; checkpoint makes restart safe.
 - M1/M4: per-batch tally + lag observed on the delivering write
-  (``metrics.tally_delivered``), for stream and snapshot alike.
+  (``metrics.tally_delivered``), for stream and snapshot alike; the
+  tally's Columns are built once per query, not per micro-batch.
 
 The stream and the snapshot build their output with
 ``pipeline.delivery_frame``, the same frame the batch pipeline uses.
@@ -36,7 +37,7 @@ from outboxx_spark.fsutil import fs_exists
 from outboxx_spark.pipeline import DELIVERY_COLS, FEED_DATA_COLS, delivery_frame
 from outboxx_spark.sources.feed import read_feed_stream
 from outboxx_spark.sources.snapshot import snapshot_table
-from outboxx_spark.streaming.metrics import MetricsRegistry, tally_delivered
+from outboxx_spark.streaming.metrics import MetricsRegistry, tally_columns, tally_delivered
 
 
 def kafka_writer_options(
@@ -120,6 +121,7 @@ def run_snapshot_phase(
     streaming starts (O3). The write is the flush barrier — any failure
     aborts the job before an offset is ever committed. Returns tables
     written; their READ events are tallied into ``registry``."""
+    tally = tally_columns(config.streams)
     total = 0
     for resource in snapshot_tables_preflight(sf_dir, config, spark):
         table = resource.split(".", 1)[1]
@@ -130,7 +132,7 @@ def run_snapshot_phase(
         tally_delivered(
             registry,
             delivery_frame(snap, config.streams, data_cols),
-            config.streams,
+            tally,
             lambda out: out.select(*DELIVERY_COLS)
             .write.mode("append")
             .partitionBy("destination")
@@ -151,9 +153,10 @@ def start_stream(
     exactly_once: bool = False,
     sink_fn=None,
 ):
-    """The streaming query: the delivery frame is declared once over
-    the stream, the foreachBatch body only delivers it; checkpoint
-    commit after the body = the at-least-once core (O2).
+    """The streaming query: the delivery frame and the tally's Columns
+    are built once per query, the foreachBatch body only observes the
+    tally on its write and delivers; checkpoint commit after the body =
+    the at-least-once core (O2).
 
     ``sink_fn(delivery, epoch_id)``'s first DataFrame action on
     ``delivery`` must consume every row (write, ``count``, ``collect``,
@@ -174,6 +177,8 @@ def start_stream(
         raise ValueError("exactly_once is a file-sink mode; it cannot be combined with sink_fn")
     registry = registry or MetricsRegistry()
     streams = config.streams
+    tally = tally_columns(streams)
+    delivery_cols = [F.col(c) for c in DELIVERY_COLS]
 
     def process_batch(batch: DataFrame, epoch_id: int) -> None:
         def write(out: DataFrame) -> None:
@@ -183,12 +188,12 @@ def start_stream(
             # tests its producer against a mock cluster the same way,
             # producer.zig:431-502); a raise here fails the micro-batch
             # BEFORE the checkpoint commit -> fail-fast + replay (K6/O2).
-            delivery = out.select(*DELIVERY_COLS)
+            delivery = out.select(*delivery_cols)
             if sink_fn is not None:
                 sink_fn(delivery, epoch_id)
             elif exactly_once:
                 (
-                    delivery.select(F.lit(epoch_id).alias("epoch"), *DELIVERY_COLS)
+                    delivery.select(F.lit(epoch_id).alias("epoch"), *delivery_cols)
                     .write.mode("overwrite")
                     # per-write option, not session conf: a session-global
                     # partitionOverwriteMode=dynamic would silently change every
@@ -200,7 +205,7 @@ def start_stream(
             else:
                 delivery.write.mode("append").partitionBy("destination").parquet(out_dir)
 
-        tally_delivered(registry, batch, streams, write)
+        tally_delivered(registry, batch, tally, write)
 
     feed = read_feed_stream(spark, sf_dir, max_files_per_trigger)
     return (

@@ -29,9 +29,16 @@ can actually EXECUTE, and the sink_fn seam makes them swappable.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import functools
+
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import types as T
 
 from outboxx_spark.streaming.kafka_wire import WireProducer
+
+# one row per task: the records it delivered (a DataType, not a DDL
+# string that each micro-batch would have Spark parse again)
+ACKED_SCHEMA = T.StructType([T.StructField("acked", T.LongType())])
 
 
 def make_kafka_sink(
@@ -66,50 +73,54 @@ def make_kafka_sink(
     need at-least-once set-delivery skip it. Null keys hash to one
     partition — key-less streams should leave this off."""
     bootstrap = list(bootstrap or [])
+    # Arrow-batched transfer (mapInPandas) instead of pickled Rows
+    # (foreachPartition): the executor->Python hop is the dominant
+    # per-record cost at bench scale, and Arrow moves it ~an order of
+    # magnitude. UTF-8 encoding happens JVM-side (F.encode) so the
+    # Python loop touches ready-to-wire bytes only.
+    def produce_batches(pdf_iter):
+        import pandas as pd
 
-    def sink(delivery: DataFrame, epoch_id: int) -> None:
+        producer = WireProducer(
+            host,
+            port,
+            retries=retries,
+            retry_backoff_ms=retry_backoff_ms,
+            bootstrap=bootstrap,
+            tls_ca=tls_ca,
+            sasl=sasl,
+        )
+        try:
+            send = producer.send
+            for pdf in pdf_iter:
+                for dest, key, value in zip(
+                    pdf["destination"].values,
+                    pdf["key"].values,
+                    pdf["value"].values,
+                ):
+                    send(dest, key, value)
+            producer.flush()  # the task-local flush barrier (K3)
+        finally:
+            producer.close()
+        yield pd.DataFrame({"acked": [producer.sent]})
+
+    @functools.cache
+    def columns() -> tuple[Column, ...]:
+        """The sink's Columns. They do not depend on the batch: built on
+        the first batch (a Column needs a live SparkContext, the factory
+        does not), then reused."""
         from pyspark.sql import functions as F
 
-        def produce_batches(pdf_iter):
-            import pandas as pd
-
-            producer = WireProducer(
-                host,
-                port,
-                retries=retries,
-                retry_backoff_ms=retry_backoff_ms,
-                bootstrap=bootstrap,
-                tls_ca=tls_ca,
-                sasl=sasl,
-            )
-            try:
-                send = producer.send
-                for pdf in pdf_iter:
-                    for dest, key, value in zip(
-                        pdf["destination"].values,
-                        pdf["key"].values,
-                        pdf["value"].values,
-                    ):
-                        send(dest, key, value)
-                producer.flush()  # the task-local flush barrier (K3)
-            finally:
-                producer.close()
-            yield pd.DataFrame({"acked": [producer.sent]})
-
-        # Arrow-batched transfer (mapInPandas) instead of pickled Rows
-        # (foreachPartition): the executor->Python hop is the dominant
-        # per-record cost at bench scale, and Arrow moves it ~an order
-        # of magnitude. UTF-8 encoding happens JVM-side (F.encode) so
-        # the Python loop touches ready-to-wire bytes only. The
-        # one-row-per-task result both forces execution and carries the
-        # per-task delivery count through the same flush barrier.
-        cols = [
+        cols = (
             F.col("destination"),
             F.encode(F.col("key"), "UTF-8").alias("key"),
             F.encode(F.col("value"), "UTF-8").alias("value"),
-        ]
+        )
+        return cols if order_by is None else (*cols, F.col(order_by).alias("_ord"))
+
+    def sink(delivery: DataFrame, epoch_id: int) -> None:
+        frame = delivery.select(*columns())
         if order_by is not None:
-            frame = delivery.select(*cols, F.col(order_by).alias("_ord"))
             # defaultParallelism, NOT the upstream partition count: a
             # file-trigger batch can carry max_files_per_trigger
             # splits, and produce parallelism beyond the topic's
@@ -124,10 +135,8 @@ def make_kafka_sink(
                 .sortWithinPartitions("destination", "key", "_ord")
                 .drop("_ord")
             )
-        else:
-            frame = delivery.select(*cols)
-        frame.mapInPandas(
-            produce_batches, schema="acked long"
-        ).collect()
+        # The one-row-per-task result both forces execution and carries
+        # the per-task delivery count through the same flush barrier.
+        frame.mapInPandas(produce_batches, schema=ACKED_SCHEMA).collect()
 
     return sink

@@ -13,9 +13,11 @@ from query progress events; the tally itself is observed on the
 delivering write (``tally_delivered``: ``df.observe`` of one count per
 (stream, op) plus ``max(commit_ts)``, read after the write — the
 reference's per-batch metrics coalescing, `processor.zig:18-28`, done
-by the write's own job). Health = listener state, exposed as properties a
-/healthz HTTP thread can read; rendering to Prometheus text format is a
-straight serialization of the registry.
+by the write's own job). The tally's Columns are built once per query
+(``tally_columns``) and observed on every batch's write. Health =
+listener state, exposed as properties a /healthz HTTP thread can read;
+rendering to Prometheus text format is a straight serialization of the
+registry.
 """
 
 from __future__ import annotations
@@ -24,8 +26,9 @@ import threading
 import time
 from collections import defaultdict
 from collections.abc import Callable
+from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQueryListener
 
@@ -91,17 +94,42 @@ class MetricsRegistry:
         return "\n".join(lines) + "\n"
 
 
+@dataclass(frozen=True)
+class TallyColumns:
+    """The tally's observed Columns for one config: ``n{i}`` counts the
+    delivered rows of ``pairs[i]`` (stream, lower-case op), ``head`` is
+    ``max(commit_ts)``. Nothing in it depends on a batch, so a query
+    builds it once and observes it on every batch's write."""
+
+    pairs: tuple[tuple[str, str], ...]
+    columns: tuple[Column, ...]
+
+
+def tally_columns(streams: list[StreamConfig]) -> TallyColumns:
+    """Build the A1 tally and M4 lag Columns for ``streams`` (needs an
+    active SparkContext)."""
+    pairs = tuple((s.name, op) for s in streams for op in s.operations)
+    counts = [
+        F.count_if((F.col("stream") == name) & (F.lower("op") == op)).alias(f"n{i}")
+        for i, (name, op) in enumerate(pairs)
+    ]
+    return TallyColumns(pairs, (*counts, F.max("commit_ts").alias("head")))
+
+
 def tally_delivered(
     registry: MetricsRegistry,
     frame: DataFrame,
-    streams: list[StreamConfig],
+    tally: TallyColumns,
     write: Callable[[DataFrame], None],
 ) -> None:
-    """Run ``write`` on ``frame`` with the A1 tally (per configured
-    (stream, op), uppercase op labels) and the M4 lag (``commit_ts`` in
-    epoch seconds) attached as observed metrics; fold them into
-    ``registry`` after ``write`` returns, so only delivered events count
-    and a raising write tallies nothing.
+    """Run ``write`` on ``frame`` with ``tally``'s Columns — the A1
+    tally (per configured (stream, op), uppercase op labels) and the M4
+    lag (``commit_ts`` in epoch seconds) — attached as observed metrics;
+    fold them into ``registry`` after ``write`` returns, so only
+    delivered events count and a raising write tallies nothing. The
+    Columns come prebuilt (``tally_columns``, once per query); each call
+    observes them under a fresh ``Observation``, since Spark refuses to
+    reuse one.
 
     Only the first DataFrame action on the observed frame reports, so
     that action must consume every row (a write, ``count``, ``collect``,
@@ -110,18 +138,8 @@ def tally_delivered(
     ``foreachPartition``, a connector that runs its query as a bare RDD)
     never reports; after ``OBSERVE_TIMEOUT_S`` this raises, so the
     micro-batch fails before its offset commit instead of hanging."""
-    pairs = [(s.name, op) for s in streams for op in s.operations]
     obs = Observation()
-    write(
-        frame.observe(
-            obs,
-            *[
-                F.count_if((F.col("stream") == name) & (F.lower("op") == op)).alias(f"n{i}")
-                for i, (name, op) in enumerate(pairs)
-            ],
-            F.max("commit_ts").alias("head"),
-        )
-    )
+    write(frame.observe(obs, *tally.columns))
     # Observation.get has no timeout; wait on it from a daemon thread
     got: list[dict] = []
     reader = threading.Thread(target=lambda: got.append(obs.get), daemon=True)
@@ -133,7 +151,7 @@ def tally_delivered(
             "it ran no DataFrame action on the frame, so the tally cannot be read"
         )
     row = got[0]
-    for i, (name, op) in enumerate(pairs):
+    for i, (name, op) in enumerate(tally.pairs):
         if row[f"n{i}"]:
             registry.add_processed(name, op.upper(), row[f"n{i}"])
     if row["head"]:

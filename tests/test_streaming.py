@@ -5,6 +5,7 @@ snapshot-before-stream bootstrap ordering, metrics/liveness."""
 
 from __future__ import annotations
 
+import json
 import time
 
 import pytest
@@ -12,7 +13,7 @@ from pyspark.sql import functions as F
 
 from outboxx_spark.config import PipelineConfig, make_stream, validate
 from outboxx_spark.operators.dedup import dedup_events
-from outboxx_spark.pipeline import routed_envelopes
+from outboxx_spark.pipeline import FEED_DATA_COLS, routed_envelopes
 from outboxx_spark.streaming.job import run_snapshot_phase, start_stream
 from outboxx_spark.streaming.metrics import CdcQueryListener, MetricsRegistry
 from outboxx_spark.testbed import DEFAULT_STREAMS, default_config
@@ -72,6 +73,25 @@ def test_stream_matches_batch_pipeline(spark, multi_file_feed, tmp_path, cfg):
     assert "outboxx_events_processed_total" in text
     assert "outboxx_replication_lag_seconds" in text
     assert 'stream="t0_full"' in text
+
+
+def test_tally_columns_are_built_once_per_query(spark, multi_file_feed, tmp_path, monkeypatch):
+    # the tally's count_if Columns are built once per (stream, op) for
+    # the whole query, not once per micro-batch
+    calls = []
+    count_if = F.count_if
+    monkeypatch.setattr(F, "count_if", lambda c: calls.append(c) or count_if(c))
+    cfg = default_config()
+    reg = MetricsRegistry()
+    q = start_stream(spark, multi_file_feed, cfg, str(tmp_path / "out"), str(tmp_path / "ckpt"), reg)
+    q.awaitTermination(120)
+
+    assert sum(1 for p in q.recentProgress if p["numInputRows"]) == 4
+    assert len(calls) == sum(len(s.operations) for s in cfg.streams)
+    expect = routed_envelopes(spark, multi_file_feed, cfg)
+    assert reg.events_processed == {
+        (r.stream, r.op): r["count"] for r in expect.groupBy("stream", "op").count().collect()
+    }
 
 
 def test_checkpoint_restart_is_gap_free_and_no_reprocess(spark, multi_file_feed, tmp_path):
@@ -137,6 +157,44 @@ def test_snapshot_phase_before_stream(spark, tmp_path):
     assert sample["destination"] == "snap.customer"
 
 
+def test_snapshot_and_stream_key_each_row_on_its_own_stream(spark, multi_file_feed, tmp_path):
+    """Two streams over one table, keyed on two columns other than
+    user_id: the snapshot phase and the stream deliver every table row
+    under the same (destination, key, payload), each keyed on its own
+    stream's routing_key."""
+    from outboxx_spark.sources.feed import read_feed
+
+    src = tmp_path / "src"
+    feed = read_feed(spark, multi_file_feed)
+    spark.read.parquet(f"{multi_file_feed}/events.parquet").write.parquet(str(src / "events.parquet"))
+    feed.filter(F.col("resource") == "public.t1").select(*FEED_DATA_COLS).write.parquet(
+        str(src / "t1.parquet")
+    )
+    ops = ["insert", "update", "delete", "read"]
+    keys = {"t1.by_type": "event_type", "t1.by_props": "props"}
+    cfg = validate(PipelineConfig(streams=[
+        make_stream(dest.replace(".", "_"), "public.t1", ops, dest, key) for dest, key in keys.items()
+    ]))
+    snap_out, stream_out = str(tmp_path / "snap"), str(tmp_path / "stream")
+    reg = MetricsRegistry()
+    assert run_snapshot_phase(
+        spark, str(src), cfg, snap_out, start_lsn=0, snapshot_ts=1704067200, registry=reg
+    ) == 1
+    start_stream(spark, str(src), cfg, stream_out, str(tmp_path / "ckpt"), reg).awaitTermination(120)
+
+    def delivered(out):
+        df = spark.read.parquet(out).select(
+            "destination", "key", F.get_json_object("value", "$.data").alias("data")
+        )
+        return sorted(tuple(r) for r in df.collect())
+
+    snap, stream = delivered(snap_out), delivered(stream_out)
+    n_rows = feed.filter(F.col("resource") == "public.t1").count()
+    assert len(snap) == len(keys) * n_rows
+    assert snap == stream
+    assert all(key == json.loads(data)[keys[dest]] for dest, key, data in snap)
+
+
 def test_registry_liveness_window():
     reg = MetricsRegistry()
     assert reg.is_live()
@@ -156,6 +214,20 @@ def test_listener_counts_termination_errors(spark):
     listener.onQueryTerminated(Ev())
     assert reg.produce_errors == 1
     assert listener.terminated_with_error
+
+
+def test_kafka_sink_builds_without_a_spark_context(monkeypatch):
+    # the sink builds its Columns on the first batch, so the factory
+    # runs before any session exists
+    from pyspark import SparkContext
+
+    from outboxx_spark.streaming.kafka_sink import make_kafka_sink
+
+    monkeypatch.setattr(SparkContext, "_active_spark_context", None)
+    with pytest.raises(AssertionError):
+        F.col("key")  # a Column does need one
+    assert callable(make_kafka_sink("localhost", 9092))
+    assert callable(make_kafka_sink("localhost", 9092, order_by="lsn"))
 
 
 def test_streamable_dir_handles_file_uri_single_file(spark):
