@@ -1,14 +1,14 @@
-"""Typed change-event model (StructTypes) for the CDC pipeline.
+"""Shared change-event constants for the CDC pipeline.
 
-The reference domain record (`src/domain/change_event.zig:117-130`) is
-``{op, data, meta}`` with ``meta = {source, resource, timestamp, lsn}``
-(`change_event.zig:109-114`). Rows there are dynamically-typed ordered
-(name, value) pairs; in Spark we use a declared StructType per table for
-the typed path, and a ``map<string,string>`` for the schema-on-read path.
+- The operation names (`src/domain/change_event.zig:6-12`); READ marks a
+  snapshot row.
+- ``DYNAMIC_DATA_SCHEMA``, the ``map<string,string>`` payload of the
+  schema-on-read path: the reference's rows are dynamically-typed ordered
+  (name, value) pairs (`change_event.zig:41-47`).
+- ``TPCH_TABLES``, the driver testdata tables the snapshot sources read.
 
-LSN: the reference carries a u64 LSN rendered as Postgres text ``X/X``
-(`converter.zig:95-100`); we carry the numeric offset and render the text
-form with ``format_string`` only at serialization.
+The envelope itself (``{op, data, meta}``, `change_event.zig:109-130`) is
+built as JSON by ``envelope.serialize_feed``; no StructType of it is kept.
 """
 
 from __future__ import annotations

@@ -36,3 +36,33 @@ def test_rule_needs_nine_tenths_wins_and_a_gap_beyond_the_parent_iqr():
     pairs = [(_run(commit_p50_ms=p), _run(commit_p50_ms=p - 100 if i < 8 else p + 5)) for i, p in enumerate(parent)]
     (row,) = summarize(pairs, better)
     assert row["wins"] == 8 and not row["holds"]
+
+
+def test_rule_fails_on_a_bad_run_or_a_missing_pair():
+    better = {"commit_p50_ms": "lower"}
+    parent = [500 + 10 * i for i in range(10)]
+
+    def pairs():
+        return [(_run(commit_p50_ms=p), _run(commit_p50_ms=p - 100)) for p in parent]
+
+    (row,) = summarize(pairs(), better)
+    assert row["holds"]
+
+    # one change run delivered wrong output: its numbers vouch for nothing
+    ps = pairs()
+    ps[3][1]["correct"] = False
+    (row,) = summarize(ps, better)
+    assert row["wins"] == 10 and not row["holds"]
+
+    # the change fails more operations than the parent
+    ps = pairs()
+    ps[0][1]["failed"] = 1
+    (row,) = summarize(ps, better)
+    assert not row["holds"]
+
+    # two change runs printed no metrics: 8 wins of 10 pairs run, not 8 of 8
+    ps = pairs()
+    for i in (0, 1):
+        ps[i] = (ps[i][0], {"returncode": 1, "error": "boom"})
+    (row,) = summarize(ps, better)
+    assert (row["wins"], row["n"], row["reported"]) == (8, 10, 8) and not row["holds"]

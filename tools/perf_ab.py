@@ -3,8 +3,9 @@
 Runs ``perfbench/run.py`` in two checkouts, one pair of runs per seed,
 alternating which side runs first, and prints per metric each side's
 median and quartiles, how many pairs the change won (ties count for
-neither side) and whether the gain rule holds: the change wins at least
-nine tenths of the pairs and the medians differ by more than the
+neither side) and whether the gain rule holds: every run is correct, the
+change fails no more operations than the parent, the change wins at least
+nine tenths of the pairs run and the medians differ by more than the
 parent's interquartile range.
 
 Usage:
@@ -12,9 +13,10 @@ Usage:
       --workload trickle_commit --seeds 1401-1410 [--trace 1] [--out runs.jsonl]
 
 Both checkouts run their own ``perfbench/`` with the same settings; the
-metric directions come from the parent's ``BENCHMARK.json``. Every run's
-result line (or its failure) is appended to ``--out``. Exit 1 when a run
-fails or reports ``"correct": false``.
+drain length (``run_seconds``) and the metric directions come from the
+parent's ``BENCHMARK.json``. Every run's result line (or its failure) is
+appended to ``--out``. Exit 1 when a run fails or reports
+``"correct": false``.
 """
 
 from __future__ import annotations
@@ -75,9 +77,14 @@ def quartiles(xs: list[float]) -> tuple[float, float, float]:
 
 def summarize(pairs: list[tuple[dict, dict]], better: dict[str, str]) -> list[dict]:
     """Per metric, over the pairs in which both sides report it:
-    quartiles, wins, and whether the gain rule holds."""
+    quartiles and wins; and whether the gain rule holds, counting wins
+    against every pair run. The rule never holds when a run is not
+    correct or the change fails more operations than the parent."""
     def value(run, k):
         return run.get("metrics", {}).get(k, {}).get("value")
+
+    all_correct = all(r.get("correct") is True for pair in pairs for r in pair)
+    no_more_failed = sum(c.get("failed", 0) for _, c in pairs) <= sum(p.get("failed", 0) for p, _ in pairs)
 
     names = sorted(
         {k for p, c in pairs for k in p.get("metrics", {})}
@@ -94,11 +101,13 @@ def summarize(pairs: list[tuple[dict, dict]], better: dict[str, str]) -> list[di
         sign = {"higher": 1, "lower": -1}.get(better.get(k))
         wins = None if sign is None else sum(1 for a, b in vals if sign * (b - a) > 0)
         holds = (
-            wins is not None
-            and wins >= 0.9 * len(vals)
+            all_correct
+            and no_more_failed
+            and wins is not None
+            and wins >= 0.9 * len(pairs)
             and sign * (cq[1] - pq[1]) > pq[2] - pq[0]
         )
-        rows.append({"metric": k, "n": len(vals), "parent": pq, "change": cq, "wins": wins, "holds": holds})
+        rows.append({"metric": k, "n": len(pairs), "reported": len(vals), "parent": pq, "change": cq, "wins": wins, "holds": holds})
     return rows
 
 
@@ -108,13 +117,12 @@ def main(argv=None) -> int:
     ap.add_argument("change", type=Path)
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seeds", required=True, help="A-B, inclusive")
-    ap.add_argument("--seconds", type=float, help="drain time per run (default: BENCHMARK.json run_seconds)")
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--out", type=Path, help="append every run's result as a JSON line")
     args = ap.parse_args(argv)
 
     parent, change = args.parent.resolve(), args.change.resolve()
-    seconds = args.seconds or json.loads((parent / "BENCHMARK.json").read_text())["run_seconds"]
+    seconds = json.loads((parent / "BENCHMARK.json").read_text())["run_seconds"]
     pairs, bad = [], 0
     for i, seed in enumerate(parse_seeds(args.seeds)):
         order = [("parent", parent), ("change", change)]
