@@ -68,14 +68,12 @@ def envelope_json(op: Column, data: Column, resource: Column, timestamp: Column,
     )
 
 
-def serialize_feed(df: DataFrame, data_cols: list[str]) -> DataFrame:
-    """Flat feed frame -> (key columns +) ``value`` JSON envelope.
+def feed_envelope(df: DataFrame, data_cols: list[str]) -> Column:
+    """The JSON envelope of each row of a flat feed frame.
 
     ``data_cols`` is the new-image payload (R4: for UPDATE the feed
-    carries only the new image downstream). Emitted once per event; the
-    routing join afterwards fans the same serialized value out to N
-    streams without re-serializing. Double columns get the non-finite
-    hard-error guard.
+    carries only the new image downstream). Double columns get the
+    non-finite hard-error guard.
     """
     types = dict(zip(df.schema.names, df.schema.fields))
     cols = []
@@ -86,7 +84,12 @@ def serialize_feed(df: DataFrame, data_cols: list[str]) -> DataFrame:
         else:
             cols.append(F.col(c).alias(c))
     data = F.struct(*cols)
-    return df.withColumn(
-        "value",
-        envelope_json(F.col("op"), data, F.col("resource"), F.col("commit_ts"), F.col("lsn")),
-    )
+    return envelope_json(F.col("op"), data, F.col("resource"), F.col("commit_ts"), F.col("lsn"))
+
+
+def serialize_feed(df: DataFrame, data_cols: list[str]) -> DataFrame:
+    """Flat feed frame -> (key columns +) ``value`` JSON envelope
+    (:func:`feed_envelope`), emitted once per event; the routing
+    fan-out afterwards copies the same serialized value to N streams
+    without re-serializing."""
+    return df.withColumn("value", feed_envelope(df, data_cols))

@@ -23,10 +23,11 @@ WholeStageCodegen span up to the sink.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from outboxx_spark.config import PipelineConfig, StreamConfig
 from outboxx_spark.dataops.util import parallelized
-from outboxx_spark.functions.envelope import serialize_feed
+from outboxx_spark.functions.envelope import feed_envelope
 from outboxx_spark.operators.keys import routed_key
 from outboxx_spark.operators.routing import route_config
 from outboxx_spark.sources.feed import read_feed
@@ -36,15 +37,20 @@ FEED_DATA_COLS = ["user_id", "event_type", "value", "props"]
 # what a sink receives: one row per (event, matched stream)
 DELIVERY_COLS = ["destination", "key", "value", "resource", "op", "lsn"]
 
+_ENVELOPE = "_envelope"
+
 
 def delivery_frame(feed: DataFrame, streams: list[StreamConfig], data_cols: list[str]) -> DataFrame:
     """Flat feed frame -> serialized, routed, keyed frame: the feed's
     columns plus ``value``, ``stream``, ``destination``, ``routing_key``
     and ``key``. ``data_cols`` is the envelope payload and the set of
-    columns a ``routing_key`` may name."""
-    serialized = serialize_feed(feed, data_cols)  # once per event (F1)
+    columns a ``routing_key`` may name. The envelope replaces the
+    payload column ``value`` only after the key is read, so a stream
+    keyed on ``value`` is keyed on the payload, not on the envelope."""
+    serialized = feed.withColumn(_ENVELOPE, feed_envelope(feed, data_cols))  # once per event (F1)
     routed = route_config(serialized, streams)  # fan-out (R1/R2)
-    return routed.withColumn("key", routed_key([s.routing_key for s in streams], data_cols))
+    keyed = routed.withColumn("key", routed_key([s.routing_key for s in streams], data_cols))
+    return keyed.withColumn("value", F.col(_ENVELOPE)).drop(_ENVELOPE)
 
 
 def routed_envelopes(spark: SparkSession, sf_dir: str, config: PipelineConfig) -> DataFrame:

@@ -10,22 +10,10 @@ compute the partial plus a merge against state that is METADATA-sized
 (|resources x keys| rows — bounded by the schema surface, not the
 data), which is the whole trick: unlike the incremental-totals ledger
 (`incragg_stream.py`), no per-key data state is needed, so the state
-store here is a full snapshot per generation.
-
-Commit protocol (the repo's marker-last discipline):
-
-- epoch N writes ``gen=N/state`` + ``gen=N/bounds`` (overwrite — a
-  torn earlier attempt at the same gen is clobbered), then publishes
-  ``gen=N/_GEN_COMMIT`` last;
-- readers serve the HIGHEST committed generation only — a torn gen is
-  invisible;
-- a replayed epoch whose marker exists returns immediately
-  (idempotent — foreachBatch replays only the last epoch after a
-  crash, and its merge must not run twice against the already-merged
-  snapshot);
-- committed generations below the newest ``retain`` are pruned AFTER
-  the commit; a crash mid-prune leaves extra committed gens, which the
-  max-gen read rule ignores harmlessly.
+store here is a full snapshot per generation (``gen=N/state`` and
+``gen=N/bounds``), committed by `epochs.fold_newest`. The replay guard
+matters here: the merge is a SUM, so it must never run twice against
+an already-merged snapshot.
 
 Convergence contract (test-pinned): after streaming any partition of
 a feed, ``read_drift_report`` equals the batch
@@ -37,14 +25,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from outboxx_spark.fsutil import fs_read_text, fs_write_text, hadoop_fs
 from outboxx_spark.operators.drift import (
     drift_flags,
     payload_key_stats,
     resource_bounds,
 )
-
-_GEN_COMMIT = "_GEN_COMMIT"
+from outboxx_spark.streaming import epochs
 
 _STATE_SCHEMA = (
     "resource string, key string, n_events bigint, first_lsn bigint, last_lsn bigint"
@@ -52,27 +38,9 @@ _STATE_SCHEMA = (
 _BOUNDS_SCHEMA = "resource string, rmin bigint, rmax bigint"
 
 
-def _committed_gens(spark: SparkSession, state_dir: str) -> list[int]:
-    fs, root, _ = hadoop_fs(spark, state_dir)
-    if not fs.exists(root):
-        return []
-    gens = []
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if name.startswith("gen=") and not name.endswith(".tmp"):
-            g = int(name.split("=", 1)[1])
-            if fs_read_text(spark, f"{state_dir}/gen={g}/{_GEN_COMMIT}") is not None:
-                gens.append(g)
-    return sorted(gens)
-
-
-def gen_committed(spark: SparkSession, state_dir: str, epoch: int) -> bool:
-    return fs_read_text(spark, f"{state_dir}/gen={epoch}/{_GEN_COMMIT}") is not None
-
-
-def _read_gen(spark: SparkSession, state_dir: str, gen: int):
-    state = spark.read.schema(_STATE_SCHEMA).parquet(f"{state_dir}/gen={gen}/state")
-    bounds = spark.read.schema(_BOUNDS_SCHEMA).parquet(f"{state_dir}/gen={gen}/bounds")
+def _read_gen(spark: SparkSession, gen_dir: str):
+    state = spark.read.schema(_STATE_SCHEMA).parquet(f"{gen_dir}/state")
+    bounds = spark.read.schema(_BOUNDS_SCHEMA).parquet(f"{gen_dir}/bounds")
     return state, bounds
 
 
@@ -83,52 +51,38 @@ def apply_drift_batch(
     resource_col: str = "resource",
     lsn_col: str = "lsn",
     props_col: str = "props",
-    retain: int = 2,
 ) -> None:
     """The foreachBatch body: merge this batch's mergeable stats into
     the newest committed snapshot and publish generation ``epoch``."""
-    spark = batch.sparkSession
-    if gen_committed(spark, state_dir, epoch):
-        return  # replayed epoch: the merge already ran against pre-merge state
-    if batch.isEmpty():
-        return
-    part_state = payload_key_stats(batch, resource_col, lsn_col, props_col)
-    part_bounds = resource_bounds(batch, resource_col, lsn_col)
-    prev_gens = _committed_gens(spark, state_dir)
-    if prev_gens:
-        prev_state, prev_bounds = _read_gen(spark, state_dir, prev_gens[-1])
-        part_state = (
-            part_state.select(prev_state.columns)
-            .unionByName(prev_state)
-            .groupBy(resource_col, "key")
-            .agg(
-                F.sum("n_events").alias("n_events"),
-                F.min("first_lsn").alias("first_lsn"),
-                F.max("last_lsn").alias("last_lsn"),
+
+    def fold(part: DataFrame, prev: str | None) -> dict[str, DataFrame]:
+        state = payload_key_stats(part, resource_col, lsn_col, props_col)
+        bounds = resource_bounds(part, resource_col, lsn_col)
+        if prev is not None:
+            prev_state, prev_bounds = _read_gen(part.sparkSession, prev)
+            state = (
+                state.select(prev_state.columns)
+                .unionByName(prev_state)
+                .groupBy(resource_col, "key")
+                .agg(
+                    F.sum("n_events").alias("n_events"),
+                    F.min("first_lsn").alias("first_lsn"),
+                    F.max("last_lsn").alias("last_lsn"),
+                )
             )
-        )
-        part_bounds = (
-            part_bounds.select(prev_bounds.columns)
-            .unionByName(prev_bounds)
-            .groupBy(resource_col)
-            .agg(F.min("rmin").alias("rmin"), F.max("rmax").alias("rmax"))
-        )
-    gen_dir = f"{state_dir}/gen={epoch}"
-    # state is metadata-sized: one file per frame keeps the snapshot cheap
-    part_state.coalesce(1).write.mode("overwrite").parquet(f"{gen_dir}/state")
-    part_bounds.coalesce(1).write.mode("overwrite").parquet(f"{gen_dir}/bounds")
-    fs_write_text(spark, f"{gen_dir}/{_GEN_COMMIT}", "{}")
-    # GC: committed gens below the newest `retain`; crash mid-prune is benign
-    fs, _, jvm = hadoop_fs(spark, state_dir)
-    for g in _committed_gens(spark, state_dir)[:-retain]:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(f"{state_dir}/gen={g}"), True)
+            bounds = (
+                bounds.select(prev_bounds.columns)
+                .unionByName(prev_bounds)
+                .groupBy(resource_col)
+                .agg(F.min("rmin").alias("rmin"), F.max("rmax").alias("rmax"))
+            )
+        return {"state": state, "bounds": bounds}
+
+    epochs.fold_newest(batch, state_dir, epoch, fold)
 
 
 def read_drift_state(spark: SparkSession, state_dir: str):
-    gens = _committed_gens(spark, state_dir)
-    if not gens:
-        raise FileNotFoundError(f"no committed drift state under {state_dir}")
-    return _read_gen(spark, state_dir, gens[-1])
+    return _read_gen(spark, epochs.newest(spark, state_dir))
 
 
 def read_drift_report(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -144,23 +98,11 @@ def start_drift_stream(
     resource_col: str = "resource",
     lsn_col: str = "lsn",
     props_col: str = "props",
-    retain: int = 2,
-    available_now: bool = True,
 ):
-    def _apply(batch: DataFrame, epoch: int) -> None:
-        apply_drift_batch(
-            batch,
-            state_dir,
-            epoch,
-            resource_col=resource_col,
-            lsn_col=lsn_col,
-            props_col=props_col,
-            retain=retain,
-        )
-
-    writer = stream.writeStream.foreachBatch(_apply).option(
-        "checkpointLocation", checkpoint_dir
+    return epochs.start(
+        stream,
+        lambda batch, epoch: apply_drift_batch(
+            batch, state_dir, epoch, resource_col, lsn_col, props_col
+        ),
+        checkpoint_dir,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -14,22 +14,14 @@ Layout and protocol::
         shard=K/part-*.parquet  one file per shard (export_shards)
         _manifest.json          published LAST = the batch's commit mark
 
-Exactly-once holds across every crash window, because a replayed epoch
-re-presents the SAME rows (file/Kafka source offsets come from the
-checkpoint) and the batch body is deterministic in its rows:
-
-- crash before any write        -> replay rewrites batch=<epoch> fresh
-- crash mid-write (torn dir,    -> replay detects the missing manifest,
-  no manifest)                     discards the torn dir, rewrites
-- crash after manifest publish  -> replay sees is_committed() and SKIPS
-  but before checkpoint commit     (the data on disk is already the
-                                   deterministic output for that epoch)
-
+A replayed epoch re-presents the SAME rows (file/Kafka source offsets
+come from the checkpoint) and the batch body is deterministic in its
+rows, so `epochs`' marker-last protocol gives exactly-once, with the
+batch's ``_manifest.json`` (``dataops/export``, shared with the
+single-shot export) as the marker. ``export_shards`` refuses an
+existing directory, so a torn batch is discarded before the rewrite.
 Readers (``read_export``) see a batch only after its manifest exists,
-so a torn directory is invisible to the trainer — the reader-side half
-of the guarantee. No coordination, no locks: the manifest rename is
-the only atomic primitive needed (same protocol as the incremental
-dedup store's prepare/commit and export.py's single-shot path).
+so a torn directory is invisible to the trainer.
 
 At scale: each micro-batch is an independent export_shards job (two
 shuffles of the batch, not the corpus); shard ids are per-batch, so
@@ -44,34 +36,27 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from outboxx_spark.dataops.export import export_shards, is_committed
-from outboxx_spark.fsutil import hadoop_fs
+from outboxx_spark.dataops.export import MANIFEST_NAME, export_shards
+from outboxx_spark.streaming import epochs
+
+BATCH = "batch="
 
 
 def batch_dir(out_dir: str, epoch_id: int) -> str:
-    return f"{out_dir}/batch={epoch_id}"
+    return epochs.epoch_dir(out_dir, BATCH, epoch_id)
 
 
 def make_export_batch_processor(
     out_dir: str, *, target: int, n_buckets: int = 1024
 ) -> Callable[[DataFrame, int], None]:
-    """The foreachBatch body, exposed for direct unit testing of the
-    three crash-window behaviors (skip committed / rewrite torn /
-    write fresh). All existence probes and the torn-directory delete
-    go through Hadoop's FileSystem, so the protocol holds on hdfs://
-    and s3a:// exactly as on local paths."""
+    """The foreachBatch body, exposed for direct crash-window testing."""
 
     def process(batch: DataFrame, epoch_id: int) -> None:
         bdir = batch_dir(out_dir, epoch_id)
         spark = batch.sparkSession
-        if is_committed(spark, bdir):
-            # replay of an epoch whose manifest already published:
-            # the on-disk data IS this epoch's deterministic output —
-            # rewriting it would only race a concurrent reader
+        if epochs.is_committed(spark, bdir, MANIFEST_NAME):
             return
-        fs, bpath, _ = hadoop_fs(spark, bdir)
-        if fs.exists(bpath):
-            fs.delete(bpath, True)  # torn write from a mid-batch crash
+        epochs.discard_torn(spark, bdir)
         if batch.isEmpty():
             return  # empty trigger: nothing to commit
         export_shards(batch, bdir, target=target, n_buckets=n_buckets)
@@ -86,42 +71,24 @@ def start_export_stream(
     *,
     target: int,
     n_buckets: int = 1024,
-    available_now: bool = True,
 ):
     """Attach the shard-export sink to a streaming documents frame
-    (columns: doc_id, text). availableNow=True drains the source then
-    stops — the batch-job-with-streaming-semantics mode the snapshot
-    phase also uses."""
-    writer = docs_stream.writeStream.foreachBatch(
-        make_export_batch_processor(out_dir, target=target, n_buckets=n_buckets)
-    ).option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    (columns: doc_id, text)."""
+    return epochs.start(
+        docs_stream,
+        make_export_batch_processor(out_dir, target=target, n_buckets=n_buckets),
+        checkpoint_dir,
+    )
 
 
 def committed_batches(spark: SparkSession, out_dir: str) -> list[int]:
     """Epoch ids of batches whose manifest published, ascending."""
-    fs, root, _ = hadoop_fs(spark, out_dir)
-    if not fs.exists(root):
-        return []
-    out = []
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if name.startswith("batch=") and is_committed(spark, f"{out_dir}/{name}"):
-            out.append(int(name.split("=", 1)[1]))
-    return sorted(out)
+    return epochs.committed(spark, out_dir, BATCH, MANIFEST_NAME)
 
 
 def read_export(spark: SparkSession, out_dir: str) -> DataFrame:
-    """The trainer's view: union of COMMITTED batches only. A torn
-    directory (data without manifest) is invisible — the reader-side
-    half of the exactly-once guarantee."""
-    batches = committed_batches(spark, out_dir)
-    if not batches:
-        raise FileNotFoundError(f"no committed batches under {out_dir}")
+    """The trainer's view: union of COMMITTED batches only."""
     # one reader over an explicit path list: partition discovery stays
     # O(committed batches), torn dirs never touched
-    paths = [batch_dir(out_dir, b) for b in batches]
-    df = spark.read.option("basePath", out_dir).parquet(*paths)
-    return df
+    paths = epochs.committed_dirs(spark, out_dir, BATCH, MANIFEST_NAME)
+    return spark.read.option("basePath", out_dir).parquet(*paths)

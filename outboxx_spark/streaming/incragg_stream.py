@@ -16,16 +16,11 @@ buckets) — never O(key space), never O(history):
 4. the batch upserts into the state table (table_sink.upsert_batch).
 
 Exactly-once across every crash window WITHOUT a transaction spanning
-the two stores, by ordering + idempotence (ledger FIRST, marker-last;
-upsert SECOND, idempotent by design):
-
-- crash before the ledger commit: replay recomputes the same deltas —
-  the state table was not yet touched, so `prior` is unchanged;
-- crash between ledger commit and upsert: replay sees the epoch's
-  marker, SKIPS the ledger (deltas vs the pre-upsert state are
-  already durable) and runs the idempotent upsert;
-- crash during/after the upsert: replay skips the ledger and re-runs
-  the upsert, which reproduces identical bucket contents.
+the two stores, by ordering + idempotence: the ledger epoch commits
+FIRST under `epochs`' marker-last protocol, the upsert runs SECOND and
+is idempotent by design. A crash between the ledger commit and the
+upsert replays as: ledger skipped (its deltas vs the pre-upsert state
+are already durable), upsert re-run.
 
 The one rule that makes this sound: the ledger for epoch N must never
 be recomputed after the upsert for epoch N may have run — a replayed
@@ -44,15 +39,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from outboxx_spark.fsutil import fs_read_text, fs_write_text, hadoop_fs
+from outboxx_spark.fsutil import hadoop_fs
 from outboxx_spark.operators.materialize import materialize
+from outboxx_spark.streaming import epochs
 from outboxx_spark.streaming.table_sink import (
     DEFAULT_N_BUCKETS,
     _bucket,
     upsert_batch,
 )
 
-_LEDGER_COMMIT = "_LEDGER_COMMIT"
+EPOCH = "epoch="
+FOLD = "fold="
 
 
 def _eff(op_col, value_col):
@@ -62,13 +59,6 @@ def _eff(op_col, value_col):
 
 def _live(op_col):
     return F.when(op_col == "DELETE", F.lit(0)).otherwise(F.lit(1))
-
-
-def ledger_epoch_committed(spark: SparkSession, ledger_dir: str, epoch: int) -> bool:
-    return (
-        fs_read_text(spark, f"{ledger_dir}/epoch={epoch}/{_LEDGER_COMMIT}")
-        is not None
-    )
 
 
 def write_ledger_epoch(
@@ -127,9 +117,9 @@ def write_ledger_epoch(
             ).alias("d_live"),
         )
     )
-    epoch_dir = f"{ledger_dir}/epoch={epoch}"
+    epoch_dir = epochs.epoch_dir(ledger_dir, EPOCH, epoch)
     deltas.write.mode("overwrite").parquet(epoch_dir)
-    fs_write_text(spark, f"{epoch_dir}/{_LEDGER_COMMIT}", "{}")
+    epochs.publish(spark, epoch_dir)
 
 
 def apply_incremental_totals_batch(
@@ -146,7 +136,8 @@ def apply_incremental_totals_batch(
     nonread = batch.filter(F.col("op") != "READ")
     if nonread.isEmpty():
         return
-    if not ledger_epoch_committed(spark, ledger_dir, epoch):
+    ledger = epochs.epoch_dir(ledger_dir, EPOCH, epoch)
+    if not epochs.is_committed(spark, ledger):
         write_ledger_epoch(
             nonread, table_dir, ledger_dir, epoch, key=key, n_buckets=n_buckets
         )
@@ -160,19 +151,14 @@ def start_incremental_totals_stream(
     checkpoint_dir: str,
     key: str = "user_id",
     n_buckets: int = DEFAULT_N_BUCKETS,
-    available_now: bool = True,
 ):
-    def _apply(batch: DataFrame, epoch: int) -> None:
-        apply_incremental_totals_batch(
+    return epochs.start(
+        stream,
+        lambda batch, epoch: apply_incremental_totals_batch(
             batch, table_dir, ledger_dir, epoch, key=key, n_buckets=n_buckets
-        )
-
-    writer = stream.writeStream.foreachBatch(_apply).option(
-        "checkpointLocation", checkpoint_dir
+        ),
+        checkpoint_dir,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def _ledger_parts(spark: SparkSession, ledger_dir: str):
@@ -180,28 +166,14 @@ def _ledger_parts(spark: SparkSession, ledger_dir: str):
     every committed epoch ABOVE it. Epochs at or below a fold's
     horizon are ignored whether present or not — which is exactly what
     makes compaction GC crash-safe at any interruption point."""
-    fs, root, _ = hadoop_fs(spark, ledger_dir)
-    if not fs.exists(root):
-        raise FileNotFoundError(f"no ledger at {ledger_dir}")
-    folds: list[int] = []
-    epochs: list[int] = []
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if name.startswith("fold=") and not name.endswith(".tmp"):
-            k = int(name.split("=", 1)[1])
-            if fs_read_text(spark, f"{ledger_dir}/{name}/{_LEDGER_COMMIT}") is not None:
-                folds.append(k)
-        elif name.startswith("epoch=") and ledger_epoch_committed(
-            spark, ledger_dir, int(name.split("=", 1)[1])
-        ):
-            epochs.append(int(name.split("=", 1)[1]))
+    folds = epochs.committed(spark, ledger_dir, FOLD)
     horizon = max(folds) if folds else None
     paths = []
     if horizon is not None:
-        paths.append(f"{ledger_dir}/fold={horizon}")
+        paths.append(epochs.epoch_dir(ledger_dir, FOLD, horizon))
     paths += [
-        f"{ledger_dir}/epoch={e}"
-        for e in sorted(epochs)
+        epochs.epoch_dir(ledger_dir, EPOCH, e)
+        for e in epochs.committed(spark, ledger_dir, EPOCH)
         if horizon is None or e > horizon
     ]
     return horizon, paths
@@ -260,13 +232,14 @@ def compact_ledger(spark: SparkSession, ledger_dir: str) -> int | None:
         F.col("n_live").alias("d_live"),
         F.col("sum_value_cents").alias("d_value_cents"),
     )
-    tmp = f"{ledger_dir}/fold={new_horizon}.tmp"
+    fold_dir = epochs.epoch_dir(ledger_dir, FOLD, new_horizon)
+    tmp = f"{fold_dir}.tmp"
+    epochs.discard_torn(spark, tmp)  # debris from a crashed prior attempt
+    folded.write.mode("overwrite").parquet(tmp)
+    epochs.publish(spark, tmp)
     fs, _, jvm = hadoop_fs(spark, ledger_dir)
     Path = jvm.org.apache.hadoop.fs.Path
-    fs.delete(Path(tmp), True)  # debris from a crashed prior attempt
-    folded.write.mode("overwrite").parquet(tmp)
-    fs_write_text(spark, f"{tmp}/{_LEDGER_COMMIT}", "{}")
-    if not fs.rename(Path(tmp), Path(f"{ledger_dir}/fold={new_horizon}")):
+    if not fs.rename(Path(tmp), Path(fold_dir)):
         raise RuntimeError(f"could not publish fold={new_horizon}")
     for p in paths:  # GC the consumed parts; crash here is harmless
         fs.delete(Path(p), True)

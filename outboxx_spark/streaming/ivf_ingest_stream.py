@@ -36,6 +36,7 @@ from typing import Callable
 from pyspark.sql import DataFrame
 
 from outboxx_spark.dataops.ivf_store import committed_add_tags, ivf_index_add
+from outboxx_spark.streaming import epochs
 
 
 def epoch_tag(epoch_id: int) -> str:
@@ -73,15 +74,11 @@ def start_ivf_ingest_stream(
     *,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    available_now: bool = True,
 ):
     """Attach the ingest sink to a streaming embeddings frame. The
     index at ``store_dir`` must already exist (`build_ivf_index`) —
     the quantizer is frozen by design; distribution drift is a
     reindex trigger, not something ingest may silently absorb."""
-    writer = emb_stream.writeStream.foreachBatch(
-        make_ivf_ingest_processor(store_dir, id_col, vec_col)
-    ).option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return epochs.start(
+        emb_stream, make_ivf_ingest_processor(store_dir, id_col, vec_col), checkpoint_dir
+    )

@@ -10,22 +10,16 @@ CDC-ordered ingest), the two orders coincide and the stream converges
 to the batch answer exactly — pinned in tests.
 
 State is a persistent SEEN-SEGMENT store of xxhash64 fingerprints,
-maintained with the repo's marker-last epoch protocol
-(export_stream's crash-window discipline):
+committed per epoch with `epochs`' marker-last protocol:
 
-    root/out/batch=<E>/   deduped docs of epoch E   (parquet, marker _OUT_OK)
-    root/seen/gen=<E>/    fingerprints NEW in E     (parquet, marker _GEN_OK)
+    root/out/batch=<E>/   deduped docs of epoch E   (parquet)
+    root/seen/gen=<E>/    fingerprints NEW in E     (parquet, marker)
 
-Write order inside one epoch: out parquet -> _OUT_OK -> gen parquet
--> _GEN_OK. The GEN marker is the epoch's commit point — the reader
-unions only gen-committed epochs, so every crash window replays
-safely:
-
-- crash before _OUT_OK: torn out dir deleted, epoch redone;
-- crash between _OUT_OK and _GEN_OK: the seen store does NOT yet
-  contain this epoch, so the replay recomputes the identical output
-  (determinism) and overwrites it before committing the gen;
-- replay after _GEN_OK: no-op (idempotent).
+The out parquet is written first, the gen parquet second; the gen
+marker commits the epoch as a whole, and the reader unions only the
+out dirs of gen-committed epochs. Until that marker exists the seen
+store does not contain the epoch, so a replay recomputes the identical
+output (determinism) and overwrites both directories.
 
 Scale: the epoch side of the seen join carries 8-byte fingerprints;
 at 100 TB the store buckets by hash (dataops/incremental.py's layout)
@@ -47,10 +41,7 @@ from outboxx_spark.dataops.linededup import (
     reassemble,
     segment_occurrences,
 )
-from outboxx_spark.fsutil import fs_exists, fs_write_text, hadoop_fs
-
-_OUT_MARK = "_OUT_OK"
-_GEN_MARK = "_GEN_OK"
+from outboxx_spark.streaming import epochs
 
 
 def _out_dir(root: str, epoch: int) -> str:
@@ -58,28 +49,18 @@ def _out_dir(root: str, epoch: int) -> str:
 
 
 def _gen_dir(root: str, epoch: int) -> str:
-    return f"{root}/seen/gen={epoch}"
+    return epochs.epoch_dir(f"{root}/seen", epochs.GEN, epoch)
 
 
 def committed_epochs(spark: SparkSession, root: str) -> list[int]:
-    fs, seen_root, _ = hadoop_fs(spark, f"{root}/seen")
-    if not fs.exists(seen_root):
-        return []
-    out = []
-    for st in fs.listStatus(seen_root):
-        name = st.getPath().getName()
-        if name.startswith("gen=") and fs_exists(
-            spark, f"{root}/seen/{name}/{_GEN_MARK}"
-        ):
-            out.append(int(name.split("=", 1)[1]))
-    return sorted(out)
+    return epochs.committed(spark, f"{root}/seen", epochs.GEN)
 
 
 def _read_seen(spark: SparkSession, root: str) -> DataFrame | None:
-    epochs = committed_epochs(spark, root)
-    if not epochs:
+    done = committed_epochs(spark, root)
+    if not done:
         return None
-    paths = [_gen_dir(root, e) for e in epochs]
+    paths = [_gen_dir(root, e) for e in done]
     return spark.read.option("basePath", f"{root}/seen").parquet(*paths).select("h")
 
 
@@ -90,14 +71,8 @@ def make_paragraph_dedup_processor(
 
     def process(batch: DataFrame, epoch_id: int) -> None:
         spark = batch.sparkSession
-        if fs_exists(spark, f"{_gen_dir(root, epoch_id)}/{_GEN_MARK}"):
-            return  # epoch fully committed: replay is a no-op
-        if batch.isEmpty():
+        if epochs.is_committed(spark, _gen_dir(root, epoch_id)) or batch.isEmpty():
             return
-        for d in (_out_dir(root, epoch_id), _gen_dir(root, epoch_id)):
-            fs, p, _ = hadoop_fs(spark, d)
-            if fs.exists(p):
-                fs.delete(p, True)  # torn write from a mid-epoch crash
         segs = segment_occurrences(batch, seg_len)
         marked = mark_owners(segs).withColumn("h", F.xxhash64("seg"))
         seen = _read_seen(spark, root)
@@ -118,12 +93,11 @@ def make_paragraph_dedup_processor(
             )
         out = reassemble(marked.select("doc_id", "chunk_id", "seg", "keep"))
         out.write.mode("overwrite").parquet(_out_dir(root, epoch_id))
-        fs_write_text(spark, f"{_out_dir(root, epoch_id)}/{_OUT_MARK}", "ok")
         fresh = marked.select("h").distinct()
         if seen is not None:
             fresh = fresh.join(seen, "h", "left_anti")
         fresh.write.mode("overwrite").parquet(_gen_dir(root, epoch_id))
-        fs_write_text(spark, f"{_gen_dir(root, epoch_id)}/{_GEN_MARK}", "ok")
+        epochs.publish(spark, _gen_dir(root, epoch_id))
 
     return process
 
@@ -134,21 +108,16 @@ def start_paragraph_dedup_stream(
     checkpoint_dir: str,
     *,
     seg_len: int = SEG_TOKENS,
-    available_now: bool = True,
 ):
-    writer = docs_stream.writeStream.foreachBatch(
-        make_paragraph_dedup_processor(root, seg_len)
-    ).option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return epochs.start(
+        docs_stream, make_paragraph_dedup_processor(root, seg_len), checkpoint_dir
+    )
 
 
 def read_deduped(spark: SparkSession, root: str) -> DataFrame:
     """The consumer's view: union of gen-committed epochs only (a
     torn epoch's output is invisible even if its parquet exists)."""
-    epochs = committed_epochs(spark, root)
-    if not epochs:
+    paths = [_out_dir(root, e) for e in committed_epochs(spark, root)]
+    if not paths:
         raise FileNotFoundError(f"no committed epochs under {root}")
-    paths = [_out_dir(root, e) for e in epochs]
     return spark.read.option("basePath", f"{root}/out").parquet(*paths)

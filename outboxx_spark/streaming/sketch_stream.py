@@ -3,20 +3,14 @@ as snapshot generations — live distinct counts that never recount
 history.
 
 Composes the per-group relational HyperLogLog (`dataops/hll.py`) with
-the drift monitor's snapshot-generation protocol
-(`streaming/drift_stream.py`): every micro-batch folds its registers
-into the newest committed snapshot with groupBy(group, bucket).max
-and publishes the merged state as generation <epoch>, marker-last.
-Because register merge is an idempotent, commutative MAX, even a
-replay that re-merged an already-folded batch would be a no-op on the
-VALUES — the committed-gen guard merely spares the write. Crash
-windows:
-
-- replay of a committed epoch: returns immediately (marker exists);
-- crash mid-write: a marker-less generation every reader skips; the
-  replay rewrites it and commits;
-- GC (retain 2) is prune-only over committed gens; a crash mid-prune
-  leaves extra committed snapshots, never fewer.
+the snapshot generations of `epochs.fold_newest`: every micro-batch
+folds its registers into the newest committed snapshot with
+groupBy(group, bucket).max and publishes the merged state as
+generation <epoch>. Because register merge is an idempotent,
+commutative MAX, even a replay that re-merged an already-folded batch
+would be a no-op on the VALUES — the committed-gen guard merely spares
+the write. The theta ledger is the same fold with union + re-trim as
+its merge (distinct hashes make a re-merge value-safe too).
 
 Serving is `hll_estimate_by` over the newest snapshot — the estimator
 is ONE JVM aggregation, so a dashboard polling per-source cardinality
@@ -30,38 +24,30 @@ a counter table, the right streaming state.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from typing import Callable
+
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from outboxx_spark.dataops.hll import P_BITS_BY, hll_estimate_by, hll_sketch_by
-from outboxx_spark.fsutil import fs_read_text, fs_write_text, hadoop_fs
-
-_GEN_COMMIT = "_GEN_COMMIT"
-_REG_SCHEMA = "group string, bucket int, max_rho int"
+from outboxx_spark.dataops.theta import K_DEFAULT, _pairwise_intersections, theta_sketch_by
+from outboxx_spark.streaming import epochs
 
 
-def _committed_gens(spark: SparkSession, state_dir: str) -> list[int]:
-    fs, root, _ = hadoop_fs(spark, state_dir)
-    if not fs.exists(root):
-        return []
-    gens = []
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if name.startswith("gen="):
-            g = int(name.split("=", 1)[1])
-            if fs_read_text(spark, f"{state_dir}/gen={g}/{_GEN_COMMIT}") is not None:
-                gens.append(g)
-    return sorted(gens)
+def _fold_registers(
+    batch: DataFrame,
+    state_dir: str,
+    epoch: int,
+    sketch: Callable[[DataFrame], DataFrame],
+    merge: Callable[[DataFrame], DataFrame],
+) -> None:
+    def fold(part: DataFrame, prev: str | None) -> dict[str, DataFrame]:
+        regs = sketch(part)
+        if prev is not None:
+            regs = merge(regs.unionByName(part.sparkSession.read.parquet(f"{prev}/registers")))
+        return {"registers": regs}
 
-
-def gen_committed(spark: SparkSession, state_dir: str, epoch: int) -> bool:
-    return fs_read_text(spark, f"{state_dir}/gen={epoch}/{_GEN_COMMIT}") is not None
-
-
-def _read_gen(spark: SparkSession, state_dir: str, gen: int) -> DataFrame:
-    return spark.read.schema(_REG_SCHEMA).parquet(
-        f"{state_dir}/gen={gen}/registers"
-    )
+    epochs.fold_newest(batch, state_dir, epoch, fold)
 
 
 def apply_sketch_batch(
@@ -74,33 +60,47 @@ def apply_sketch_batch(
 ) -> None:
     """The foreachBatch body: fold this batch's registers into the
     newest committed snapshot and publish generation ``epoch``."""
-    spark = batch.sparkSession
-    if gen_committed(spark, state_dir, epoch):
-        return  # replayed epoch (and MAX would make re-merging benign)
-    if batch.isEmpty():
-        return
-    regs = hll_sketch_by(batch, group_col, key_col, p)
-    prev = _committed_gens(spark, state_dir)
-    if prev:
-        regs = (
-            regs.unionByName(_read_gen(spark, state_dir, prev[-1]))
-            .groupBy("group", "bucket")
-            .agg(F.max("max_rho").alias("max_rho"))
-        )
-    gen_dir = f"{state_dir}/gen={epoch}"
-    # G x 2^p rows: one file keeps every snapshot a metadata read
-    regs.coalesce(1).write.mode("overwrite").parquet(f"{gen_dir}/registers")
-    fs_write_text(spark, f"{gen_dir}/{_GEN_COMMIT}", "{}")
-    fs, _, jvm = hadoop_fs(spark, state_dir)
-    for g in _committed_gens(spark, state_dir)[:-2]:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(f"{state_dir}/gen={g}"), True)
+    _fold_registers(
+        batch,
+        state_dir,
+        epoch,
+        lambda part: hll_sketch_by(part, group_col, key_col, p),
+        lambda regs: regs.groupBy("group", "bucket").agg(F.max("max_rho").alias("max_rho")),
+    )
+
+
+def apply_theta_batch(
+    batch: DataFrame,
+    state_dir: str,
+    epoch: int,
+    group_col: str,
+    key_col: str,
+    k: int = K_DEFAULT,
+) -> None:
+    """Theta-ledger sibling of :func:`apply_sketch_batch`: fold each
+    batch's per-group KMV samples into the newest snapshot with
+    union + re-trim. The served state is the per-source sample frame
+    `theta_sketch_by` would produce over the whole history — so the
+    LIVE pairwise overlap matrix (`dataops/theta._pairwise_intersections`)
+    comes straight off the snapshot: which sources are converging
+    RIGHT NOW, no rescan."""
+    w = Window.partitionBy("group").orderBy("h")
+    _fold_registers(
+        batch,
+        state_dir,
+        epoch,
+        lambda part: theta_sketch_by(part, group_col, key_col, k),
+        lambda regs: regs.distinct()
+        .withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") <= k)
+        .drop("_rn"),
+    )
 
 
 def read_registers(spark: SparkSession, state_dir: str) -> DataFrame:
-    gens = _committed_gens(spark, state_dir)
-    if not gens:
-        raise FileNotFoundError(f"no committed sketch state under {state_dir}")
-    return _read_gen(spark, state_dir, gens[-1])
+    """The newest committed snapshot: HLL ``(group, bucket, max_rho)``
+    or theta ``(group, h)`` rows."""
+    return spark.read.parquet(f"{epochs.newest(spark, state_dir)}/registers")
 
 
 def read_cardinalities(
@@ -111,97 +111,19 @@ def read_cardinalities(
     return hll_estimate_by(read_registers(spark, state_dir), p)
 
 
-def apply_theta_batch(
-    batch: DataFrame,
-    state_dir: str,
-    epoch: int,
-    group_col: str,
-    key_col: str,
-    k: int | None = None,
-) -> None:
-    """Theta-ledger sibling of :func:`apply_sketch_batch`: fold each
-    batch's per-group KMV samples into the newest snapshot with
-    union + re-trim (distinct hashes make even an unguarded re-merge
-    value-safe, like the HLL MAX). The served state is the per-source
-    sample frame `theta_sketch_by` would produce over the whole
-    history — so the LIVE pairwise overlap matrix
-    (`dataops/theta._pairwise_intersections`) comes straight off the
-    snapshot: which sources are converging RIGHT NOW, no rescan."""
-    from pyspark.sql import Window
-
-    from outboxx_spark.dataops.theta import K_DEFAULT, theta_sketch_by
-
-    k = K_DEFAULT if k is None else k
-    spark = batch.sparkSession
-    if gen_committed(spark, state_dir, epoch):
-        return
-    if batch.isEmpty():
-        return
-    regs = theta_sketch_by(batch, group_col, key_col, k)
-    prev = _committed_gens(spark, state_dir)
-    if prev:
-        prev_df = spark.read.schema("group string, h long").parquet(
-            f"{state_dir}/gen={prev[-1]}/registers"
-        )
-        w = Window.partitionBy("group").orderBy("h")
-        regs = (
-            regs.unionByName(prev_df)
-            .distinct()
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= k)
-            .drop("_rn")
-        )
-    gen_dir = f"{state_dir}/gen={epoch}"
-    regs.coalesce(1).write.mode("overwrite").parquet(f"{gen_dir}/registers")
-    fs_write_text(spark, f"{gen_dir}/{_GEN_COMMIT}", "{}")
-    fs, _, jvm = hadoop_fs(spark, state_dir)
-    for g in _committed_gens(spark, state_dir)[:-2]:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(f"{state_dir}/gen={g}"), True)
-
-
-def read_theta_state(spark: SparkSession, state_dir: str) -> DataFrame:
-    gens = _committed_gens(spark, state_dir)
-    if not gens:
-        raise FileNotFoundError(f"no committed sketch state under {state_dir}")
-    return spark.read.schema("group string, h long").parquet(
-        f"{state_dir}/gen={gens[-1]}/registers"
-    )
-
-
 def read_overlap_matrix(
-    spark: SparkSession, state_dir: str, k: int | None = None
+    spark: SparkSession, state_dir: str, k: int = K_DEFAULT
 ) -> dict[tuple[str, str], float]:
-    """{(source_a, source_b): est_intersection} from the newest
+    """{(source_a, source_b): est_intersection} from the newest theta
     snapshot's G*k sample rows alone."""
-    from outboxx_spark.dataops.theta import K_DEFAULT, _pairwise_intersections
-
-    k = K_DEFAULT if k is None else k
     per: dict[str, list[int]] = {}
-    for r in read_theta_state(spark, state_dir).collect():
+    for r in read_registers(spark, state_dir).collect():
         per.setdefault(r["group"], []).append(r["h"])
     for hs in per.values():
         hs.sort()
     return {
         pair: est for pair, (est, _) in _pairwise_intersections(per, k).items()
     }
-
-
-def start_theta_stream(
-    stream_df: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-    group_col: str,
-    key_col: str,
-    *,
-    k: int | None = None,
-    available_now: bool = True,
-):
-    writer = stream_df.writeStream.foreachBatch(
-        lambda b, e: apply_theta_batch(b, state_dir, e, group_col, key_col, k)
-    ).option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def start_sketch_stream(
@@ -212,11 +134,9 @@ def start_sketch_stream(
     key_col: str,
     *,
     p: int = P_BITS_BY,
-    available_now: bool = True,
 ):
-    writer = stream_df.writeStream.foreachBatch(
-        lambda b, e: apply_sketch_batch(b, state_dir, e, group_col, key_col, p)
-    ).option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return epochs.start(
+        stream_df,
+        lambda b, e: apply_sketch_batch(b, state_dir, e, group_col, key_col, p),
+        checkpoint_dir,
+    )

@@ -58,6 +58,7 @@ from pyspark.sql import functions as F
 
 from outboxx_spark.fsutil import hadoop_fs as _fs
 from outboxx_spark.operators.materialize import materialize
+from outboxx_spark.streaming import epochs
 
 DEFAULT_N_BUCKETS = 16
 
@@ -235,21 +236,15 @@ def start_table_upsert_stream(
     checkpoint_dir: str,
     key: str = "user_id",
     n_buckets: int = DEFAULT_N_BUCKETS,
-    available_now: bool = True,
 ):
     """Run the upsert sink over a streaming feed. Offsets commit only
     after the merge lands (foreachBatch contract), so a crash replays
     the last batch into the idempotent merge — exactly-once state."""
-
-    def _apply(batch: DataFrame, _epoch: int) -> None:
-        upsert_batch(batch, table_dir, key=key, n_buckets=n_buckets)
-
-    writer = stream.writeStream.foreachBatch(_apply).option(
-        "checkpointLocation", checkpoint_dir
+    return epochs.start(
+        stream,
+        lambda batch, _epoch: upsert_batch(batch, table_dir, key=key, n_buckets=n_buckets),
+        checkpoint_dir,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def compact_table(

@@ -1,6 +1,6 @@
-"""Streaming schema-drift monitor: convergence with the batch audit,
-replay idempotence, torn-generation invisibility, pruning
-(streaming/drift_stream.py)."""
+"""Streaming schema-drift monitor (streaming/drift_stream.py):
+convergence with the batch audit. Its crash windows and generation
+pruning are cases of tests/test_epochs.py."""
 
 from __future__ import annotations
 
@@ -11,15 +11,9 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from pyspark.sql import functions as F
-
 from outboxx_spark.operators.drift import schema_drift_report
-from outboxx_spark.streaming.drift_stream import (
-    _committed_gens,
-    apply_drift_batch,
-    read_drift_report,
-    start_drift_stream,
-)
+from outboxx_spark.streaming.drift_stream import read_drift_report, start_drift_stream
+from test_epochs import walk_test
 
 FEED_SCHEMA = "resource string, lsn long, props string"
 
@@ -78,36 +72,6 @@ def test_stream_converges_to_batch_audit(spark, tmp_path):
     assert streamed[("t1", "v2")][3:] == (True, False)
 
 
-def test_replayed_epoch_is_a_noop(spark, tmp_path):
-    state = str(tmp_path / "state")
-    apply_drift_batch(_df(spark, PART_A), state, 0)
-    apply_drift_batch(_df(spark, PART_B), state, 1)
-    before = _report(read_drift_report(spark, state))
-    # foreachBatch replays the last epoch after a crash-after-commit
-    apply_drift_batch(_df(spark, PART_B), state, 1)
-    assert _report(read_drift_report(spark, state)) == before
-
-
-@pytest.mark.slow
-def test_torn_generation_is_invisible_then_overwritten(spark, tmp_path):
-    state = str(tmp_path / "state")
-    apply_drift_batch(_df(spark, PART_A), state, 0)
-    committed = _report(read_drift_report(spark, state))
-    # simulate a crash mid-write of gen 1: state written, marker absent
-    _df(spark, PART_B).coalesce(1).write.mode("overwrite").parquet(
-        f"{state}/gen=1/state"
-    )
-    assert _report(read_drift_report(spark, state)) == committed
-    # replayed epoch 1 clobbers the torn dir and commits properly
-    apply_drift_batch(_df(spark, PART_B), state, 1)
-    expect = _report(schema_drift_report(_df(spark, PART_A + PART_B)))
-    assert _report(read_drift_report(spark, state)) == expect
-
-
-def test_pruning_keeps_retain_and_serving_is_unaffected(spark, tmp_path):
-    state = str(tmp_path / "state")
-    for i, rows in enumerate((PART_A, PART_B, PART_C)):
-        apply_drift_batch(_df(spark, rows), state, i, retain=2)
-    assert _committed_gens(spark, state) == [1, 2]
-    expect = _report(schema_drift_report(_df(spark, PART_A + PART_B + PART_C)))
-    assert _report(read_drift_report(spark, state)) == expect
+# the crash walk in tests/test_epochs.py asserts these windows
+test_replayed_epoch_is_a_noop = test_pruning_keeps_retain_and_serving_is_unaffected = \
+    walk_test("drift")

@@ -1,6 +1,7 @@
-"""Streaming shard export: exactly-once across restarts and every
-crash window of the manifest-last protocol
-(streaming/export_stream.py).
+"""Streaming shard export (streaming/export_stream.py): exactly-once
+across a checkpoint restart, with every committed batch verified
+against its manifest. The crash windows of the manifest-last protocol
+are cases of tests/test_epochs.py.
 
 The restart test is the file-sink analog of
 test_exactly_once_no_duplicates_across_restart — same checkpoint
@@ -10,17 +11,15 @@ duplicates across the whole export."""
 
 from __future__ import annotations
 
-import glob
 import os
 import sys
 from pathlib import Path
 
 import pytest
-from pyspark.sql import functions as F
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from outboxx_spark.dataops.export import MANIFEST_NAME, verify_export
+from outboxx_spark.dataops.export import verify_export
 from outboxx_spark.streaming.export_stream import (
     batch_dir,
     committed_batches,
@@ -28,6 +27,7 @@ from outboxx_spark.streaming.export_stream import (
     read_export,
     start_export_stream,
 )
+from test_epochs import walk_test
 
 DOCS_SCHEMA = "doc_id long, text string"
 
@@ -51,87 +51,23 @@ def _stream(spark, src_dir):
 
 
 @pytest.mark.slow
-def test_stream_drains_to_committed_verified_batches(spark, tmp_path):
-    src, out, ckpt = (str(tmp_path / d) for d in ("src", "out", "ckpt"))
-    for k in range(3):
-        _write_doc_file(spark, src, k * 40, (k + 1) * 40, f"f{k}")
-    q = start_export_stream(
-        _stream(spark, src), out, ckpt, target=60, n_buckets=16
-    )
-    q.awaitTermination(120)
-    assert committed_batches(spark, out) == [0, 1, 2]
-    for b in committed_batches(spark, out):
-        assert verify_export(spark, batch_dir(out, b)) == []
-    got = sorted(r["doc_id"] for r in read_export(spark, out).collect())
-    assert got == list(range(120)), "every doc exactly once"
-
-
-@pytest.mark.slow
 def test_restart_resumes_without_duplicates(spark, tmp_path):
     src, out, ckpt = (str(tmp_path / d) for d in ("src", "out", "ckpt"))
     _write_doc_file(spark, src, 0, 50, "a")
     _write_doc_file(spark, src, 50, 90, "b")
     q = start_export_stream(_stream(spark, src), out, ckpt, target=50, n_buckets=16)
     q.awaitTermination(120)
-    first = committed_batches(spark, out)
-    assert first == [0, 1]
+    assert committed_batches(spark, out) == [0, 1]
 
     # new data arrives; a NEW query resumes from the same checkpoint
     _write_doc_file(spark, src, 90, 130, "c")
     q2 = start_export_stream(_stream(spark, src), out, ckpt, target=50, n_buckets=16)
     q2.awaitTermination(120)
     assert committed_batches(spark, out) == [0, 1, 2]
+    for b in committed_batches(spark, out):
+        assert verify_export(spark, batch_dir(out, b)) == []
     got = sorted(r["doc_id"] for r in read_export(spark, out).collect())
     assert got == list(range(130)), "restart must neither lose nor duplicate"
-
-
-def test_replay_of_committed_epoch_is_a_noop(spark, tmp_path):
-    out = str(tmp_path / "out")
-    docs = spark.createDataFrame(
-        [(i, f"w{i} w{i} w{i}") for i in range(30)], DOCS_SCHEMA
-    )
-    process = make_export_batch_processor(out, target=40, n_buckets=8)
-    process(docs, 7)
-    bdir = batch_dir(out, 7)
-    files = sorted(glob.glob(os.path.join(bdir, "shard=*", "*.parquet")))
-    mtimes = [os.path.getmtime(f) for f in files]
-
-    process(docs, 7)  # crash-after-publish replay window
-    files2 = sorted(glob.glob(os.path.join(bdir, "shard=*", "*.parquet")))
-    assert files2 == files
-    assert [os.path.getmtime(f) for f in files2] == mtimes, "committed batch rewritten"
-
-
-def test_torn_batch_is_discarded_and_rewritten(spark, tmp_path):
-    out = str(tmp_path / "out")
-    bdir = batch_dir(out, 9)
-    os.makedirs(os.path.join(bdir, "shard=0"))
-    with open(os.path.join(bdir, "shard=0", "part-junk.parquet"), "w") as f:
-        f.write("torn mid-write")  # no manifest -> torn
-
-    docs = spark.createDataFrame(
-        [(i, f"t{i} t{i}") for i in range(20)], DOCS_SCHEMA
-    )
-    make_export_batch_processor(out, target=30, n_buckets=8)(docs, 9)
-    assert verify_export(spark, bdir) == []
-    assert not glob.glob(os.path.join(bdir, "**", "part-junk*"), recursive=True)
-
-
-def test_reader_only_sees_committed_batches(spark, tmp_path):
-    out = str(tmp_path / "out")
-    docs = spark.createDataFrame(
-        [(i, f"r{i} r{i}") for i in range(25)], DOCS_SCHEMA
-    )
-    process = make_export_batch_processor(out, target=30, n_buckets=8)
-    process(docs, 0)
-
-    # a torn later batch: data files but no manifest
-    torn = batch_dir(out, 1)
-    docs.limit(5).write.parquet(os.path.join(torn, "shard=0"))
-    assert committed_batches(spark, out) == [0]
-    got = read_export(spark, out)
-    assert got.filter(F.col("batch") != 0).count() == 0
-    assert got.count() == 25
 
 
 def test_empty_trigger_commits_nothing(spark, tmp_path):
@@ -140,3 +76,8 @@ def test_empty_trigger_commits_nothing(spark, tmp_path):
     make_export_batch_processor(out, target=10)(empty, 4)
     assert committed_batches(spark, out) == []
     assert not os.path.exists(batch_dir(out, 4))
+
+
+# the crash walk in tests/test_epochs.py asserts these windows
+test_replay_of_committed_epoch_is_a_noop = test_torn_batch_is_discarded_and_rewritten = \
+    test_reader_only_sees_committed_batches = walk_test("export")

@@ -1,6 +1,7 @@
 """Streaming incremental totals (streaming/incragg_stream.py):
-convergence with the batch delta algebra, O(batch) ledger mechanics,
-and the ledger-first/idempotent-upsert crash windows."""
+convergence with the batch delta algebra across a checkpoint restart,
+and the crash windows of ledger compaction. The ledger-first /
+idempotent-upsert crash windows are a case of tests/test_epochs.py."""
 
 from __future__ import annotations
 
@@ -14,14 +15,15 @@ from pyspark.sql import functions as F
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from outboxx_spark.operators.incragg import incremental_group_totals
+from outboxx_spark.streaming import epochs
 from outboxx_spark.streaming.incragg_stream import (
     apply_incremental_totals_batch,
-    ledger_epoch_committed,
     read_group_totals,
     start_incremental_totals_stream,
     write_ledger_epoch,
 )
 from outboxx_spark.streaming.table_sink import upsert_batch
+from test_epochs import walk_test
 
 FEED_SCHEMA = (
     "op string, resource string, lsn long, commit_ts long, user_id long, "
@@ -69,20 +71,29 @@ def _totals(df):
 
 
 @pytest.mark.slow
-def test_stream_converges_to_batch_algebra(spark, tmp_path):
+def test_stream_and_restart_converge_to_batch_algebra(spark, tmp_path):
     src, table, ledger, ckpt = (
         str(tmp_path / d) for d in ("src", "table", "ledger", "ckpt")
     )
-    for i, ops in enumerate([OPS_A, OPS_B, OPS_C]):
-        _feed_df(spark, ops).coalesce(1).write.mode("append").parquet(src)
-    stream = (
+    stream = lambda: (
         spark.readStream.schema(FEED_SCHEMA)
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = start_incremental_totals_stream(stream, table, ledger, ckpt, n_buckets=8)
-    q.awaitTermination(180)
+    _feed_df(spark, OPS_A).coalesce(1).write.mode("append").parquet(src)
+    start_incremental_totals_stream(
+        stream(), table, ledger, ckpt, n_buckets=8
+    ).awaitTermination(180)
+    first = _totals(read_group_totals(spark, ledger))
+    assert first == _totals(incremental_group_totals(_feed_df(spark, OPS_A)))
 
+    # new data; a NEW query resumes from the same checkpoint and must
+    # not double-count the epochs it already committed
+    for ops in (OPS_B, OPS_C):
+        _feed_df(spark, ops).coalesce(1).write.mode("append").parquet(src)
+    start_incremental_totals_stream(
+        stream(), table, ledger, ckpt, n_buckets=8
+    ).awaitTermination(180)
     streamed = _totals(read_group_totals(spark, ledger))
     batch = _totals(
         incremental_group_totals(_feed_df(spark, OPS_A + OPS_B + OPS_C))
@@ -92,63 +103,6 @@ def test_stream_converges_to_batch_algebra(spark, tmp_path):
     # t1 holds key 3(9000) — key 4 inserted then deleted
     assert streamed["t0"] == (3, 1225 + 600 + 800)
     assert streamed["t1"] == (1, 9000)
-
-
-@pytest.mark.slow
-def test_restart_with_new_data_does_not_double_count(spark, tmp_path):
-    src, table, ledger, ckpt = (
-        str(tmp_path / d) for d in ("src", "table", "ledger", "ckpt")
-    )
-    _feed_df(spark, OPS_A).coalesce(1).write.mode("append").parquet(src)
-    stream = lambda: (
-        spark.readStream.schema(FEED_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    start_incremental_totals_stream(
-        stream(), table, ledger, ckpt, n_buckets=8
-    ).awaitTermination(180)
-    first = _totals(read_group_totals(spark, ledger))
-    assert first == _totals(incremental_group_totals(_feed_df(spark, OPS_A)))
-
-    _feed_df(spark, OPS_B).coalesce(1).write.mode("append").parquet(src)
-    start_incremental_totals_stream(
-        stream(), table, ledger, ckpt, n_buckets=8
-    ).awaitTermination(180)
-    assert _totals(read_group_totals(spark, ledger)) == _totals(
-        incremental_group_totals(_feed_df(spark, OPS_A + OPS_B))
-    )
-
-
-@pytest.mark.slow
-def test_crash_between_ledger_and_upsert_replays_clean(spark, tmp_path):
-    table, ledger = str(tmp_path / "table"), str(tmp_path / "ledger")
-    b0 = _feed_df(spark, OPS_A)
-    apply_incremental_totals_batch(b0, table, ledger, epoch=0, n_buckets=8)
-
-    # epoch 1 "crashes" after the ledger commit, before the upsert
-    b1 = _feed_df(spark, OPS_B)
-    write_ledger_epoch(b1.filter(F.col("op") != "READ"), table, ledger, 1, n_buckets=8)
-    assert ledger_epoch_committed(spark, ledger, 1)
-
-    # replay of epoch 1: must SKIP the ledger (deltas vs pre-upsert
-    # state are already durable) and run the upsert
-    apply_incremental_totals_batch(b1, table, ledger, epoch=1, n_buckets=8)
-    assert _totals(read_group_totals(spark, ledger)) == _totals(
-        incremental_group_totals(_feed_df(spark, OPS_A + OPS_B))
-    )
-
-
-@pytest.mark.slow
-def test_replay_after_full_apply_changes_nothing(spark, tmp_path):
-    table, ledger = str(tmp_path / "table"), str(tmp_path / "ledger")
-    b0, b1 = _feed_df(spark, OPS_A), _feed_df(spark, OPS_B)
-    apply_incremental_totals_batch(b0, table, ledger, epoch=0, n_buckets=8)
-    apply_incremental_totals_batch(b1, table, ledger, epoch=1, n_buckets=8)
-    want = _totals(read_group_totals(spark, ledger))
-
-    apply_incremental_totals_batch(b1, table, ledger, epoch=1, n_buckets=8)
-    assert _totals(read_group_totals(spark, ledger)) == want
 
 
 @pytest.mark.slow
@@ -201,26 +155,9 @@ def test_crashed_compact_leftovers_are_ignored(spark, tmp_path):
     spark.createDataFrame(
         [("t0", 99, 99999)], "resource string, d_live long, d_value_cents long"
     ).write.parquet(os.path.join(ledger, "epoch=0"))
-    from outboxx_spark.streaming.incragg_stream import _LEDGER_COMMIT
-
-    with open(os.path.join(ledger, "epoch=0", _LEDGER_COMMIT), "w") as f:
+    with open(os.path.join(ledger, "epoch=0", epochs.MARKER), "w") as f:
         f.write("{}")
     assert _totals(read_group_totals(spark, ledger)) == want
-
-
-def test_torn_ledger_epoch_is_invisible(spark, tmp_path):
-    table, ledger = str(tmp_path / "table"), str(tmp_path / "ledger")
-    apply_incremental_totals_batch(
-        _feed_df(spark, OPS_A), table, ledger, epoch=0, n_buckets=8
-    )
-    # fake a torn epoch: parquet rows, no marker
-    spark.createDataFrame(
-        [("t0", 999, 99999)], "resource string, d_live long, d_value_cents long"
-    ).write.parquet(os.path.join(ledger, "epoch=7"))
-    assert not ledger_epoch_committed(spark, ledger, 7)
-    assert _totals(read_group_totals(spark, ledger)) == _totals(
-        incremental_group_totals(_feed_df(spark, OPS_A))
-    )
 
 
 def test_compaction_uses_its_listing_snapshot_not_a_relist(spark, tmp_path, monkeypatch):
@@ -265,3 +202,7 @@ def test_compaction_uses_its_listing_snapshot_not_a_relist(spark, tmp_path, monk
         for r in read_group_totals(spark, ldir).collect()
     }
     assert got == want, "concurrently committed epoch double-counted or lost"
+
+
+# the crash walk in tests/test_epochs.py asserts these windows
+test_torn_ledger_epoch_is_invisible = walk_test("incragg")

@@ -130,7 +130,7 @@ def test_stream_equals_batch_adds(spark, tmp_path):
     )
     stream_store = _store(spark, tmp_path, "stream")
     q = start_ivf_ingest_stream(
-        stream, stream_store, str(tmp_path / "ckpt"), available_now=True
+        stream, stream_store, str(tmp_path / "ckpt")
     )
     q.awaitTermination(120)
     assert len(committed_generations(spark, stream_store)) == 2

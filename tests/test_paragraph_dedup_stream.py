@@ -1,23 +1,21 @@
 """Streaming paragraph dedup (streaming/paragraph_dedup_stream.py):
-convergence with the batch operator on an ordered feed, and every
-crash window of the out->gen marker chain."""
+convergence with the batch operator on an ordered feed, cross-epoch
+ownership and a live writeStream run. Its crash windows are a case of
+the crash walk in tests/test_epochs.py."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from outboxx_spark.dataops.linededup import dedup_paragraphs
 from outboxx_spark.sources.tables import read_table
 from outboxx_spark.streaming.paragraph_dedup_stream import (
-    _GEN_MARK,
-    _gen_dir,
-    _out_dir,
     committed_epochs,
     make_paragraph_dedup_processor,
     read_deduped,
     start_paragraph_dedup_stream,
 )
+from test_epochs import walk_test
 
 
 def _rows(df):
@@ -62,60 +60,6 @@ def test_cross_epoch_ownership_drops_later_arrivals(spark, tmp_path):
     assert got[3]["new_text"] == ""
 
 
-def test_replay_of_committed_epoch_is_a_noop(spark, sf_dir, tmp_path):
-    import os
-
-    _, h1, _ = _halves(spark, sf_dir)
-    root = str(tmp_path / "pd")
-    proc = make_paragraph_dedup_processor(root)
-    proc(h1, 0)
-    marker = os.path.join(_gen_dir(root, 0), _GEN_MARK)
-    mtime = os.path.getmtime(marker)
-    before = _rows(read_deduped(spark, root))
-    proc(h1, 0)  # checkpoint replay after a post-commit crash
-    assert os.path.getmtime(marker) == mtime
-    assert _rows(read_deduped(spark, root)) == before
-
-
-def test_crash_between_out_and_gen_markers_replays_identically(
-    spark, sf_dir, tmp_path
-):
-    import shutil
-
-    docs, h1, h2 = _halves(spark, sf_dir)
-    root = str(tmp_path / "pd")
-    proc = make_paragraph_dedup_processor(root)
-    proc(h1, 0)
-    proc(h2, 1)
-    want = _rows(read_deduped(spark, root))
-    # simulate the crash window: epoch 1's output committed but its
-    # gen did not publish -> the epoch is uncommitted as a whole
-    shutil.rmtree(_gen_dir(root, 1))
-    assert committed_epochs(spark, root) == [0]
-    proc(h2, 1)  # replay recomputes the identical output and commits
-    assert committed_epochs(spark, root) == [0, 1]
-    assert _rows(read_deduped(spark, root)) == want
-
-
-def test_torn_out_dir_is_invisible_then_rewritten(spark, sf_dir, tmp_path):
-    import os
-
-    _, h1, h2 = _halves(spark, sf_dir)
-    root = str(tmp_path / "pd")
-    proc = make_paragraph_dedup_processor(root)
-    proc(h1, 0)
-    # a mid-epoch crash left garbage with NO markers
-    torn = _out_dir(root, 1)
-    os.makedirs(torn)
-    with open(os.path.join(torn, "part-garbage.parquet"), "w") as f:
-        f.write("not parquet")
-    assert committed_epochs(spark, root) == [0]
-    read_deduped(spark, root)  # torn dir never touched by the reader
-    proc(h2, 1)
-    assert committed_epochs(spark, root) == [0, 1]
-    assert not os.path.exists(os.path.join(torn, "part-garbage.parquet"))
-
-
 def test_real_stream_run_end_to_end(spark, sf_dir, tmp_path):
     docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     src = str(tmp_path / "src")
@@ -129,9 +73,7 @@ def test_real_stream_run_end_to_end(spark, sf_dir, tmp_path):
         .parquet(f"{src}/*")
     )
     root = str(tmp_path / "pd")
-    q = start_paragraph_dedup_stream(
-        stream, root, str(tmp_path / "ckpt"), available_now=True
-    )
+    q = start_paragraph_dedup_stream(stream, root, str(tmp_path / "ckpt"))
     q.awaitTermination(120)
     got = read_deduped(spark, root)
     assert got.count() == n
@@ -139,6 +81,6 @@ def test_real_stream_run_end_to_end(spark, sf_dir, tmp_path):
     assert totals["d"] > 0
 
 
-def test_reader_refuses_empty_store(spark, tmp_path):
-    with pytest.raises(FileNotFoundError):
-        read_deduped(spark, str(tmp_path / "nope"))
+# the crash walk in tests/test_epochs.py asserts these windows
+test_replay_of_committed_epoch_is_a_noop = test_torn_out_dir_is_invisible_then_rewritten = \
+    test_reader_refuses_empty_store = walk_test("paragraph")

@@ -1,6 +1,8 @@
-"""Streaming cardinality ledger (streaming/sketch_stream.py):
-stream==batch register equality, replay no-op, torn-gen fallback,
-GC retention, estimate accuracy, and a live writeStream run."""
+"""Streaming cardinality ledger (streaming/sketch_stream.py): a live
+writeStream run converging to the batch registers, and what the
+newest snapshot serves (HLL estimates, the theta overlap matrix). The
+crash windows and retention of both ledgers are cases of
+tests/test_epochs.py."""
 
 from __future__ import annotations
 
@@ -8,7 +10,6 @@ import math
 import sys
 from pathlib import Path
 
-import pytest
 from pyspark.sql import functions as F
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
@@ -16,13 +17,12 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from outboxx_spark.dataops.hll import P_BITS_BY, hll_sketch_by
 from outboxx_spark.sources.tables import read_table
 from outboxx_spark.streaming.sketch_stream import (
-    _GEN_COMMIT,
-    _committed_gens,
     apply_sketch_batch,
     read_cardinalities,
     read_registers,
     start_sketch_stream,
 )
+from test_epochs import walk_test
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -43,55 +43,6 @@ def _halves(spark):
 
 def _regs(df):
     return {(r["group"], r["bucket"], r["max_rho"]) for r in df.collect()}
-
-
-def test_two_epochs_fold_to_the_batch_registers(spark, tmp_path):
-    ev, h1, h2 = _halves(spark)
-    state = str(tmp_path / "card")
-    apply_sketch_batch(h1, state, 0, "event_type", "user_id")
-    apply_sketch_batch(h2, state, 1, "event_type", "user_id")
-    assert _committed_gens(spark, state) == [0, 1]
-    want = _regs(hll_sketch_by(ev, "event_type", "user_id"))
-    assert _regs(read_registers(spark, state)) == want
-
-
-def test_replay_of_committed_epoch_is_a_noop(spark, tmp_path):
-    import os
-
-    _, h1, _ = _halves(spark)
-    state = str(tmp_path / "card")
-    apply_sketch_batch(h1, state, 0, "event_type", "user_id")
-    marker = os.path.join(state, "gen=0", _GEN_COMMIT)
-    mtime = os.path.getmtime(marker)
-    apply_sketch_batch(h1, state, 0, "event_type", "user_id")
-    assert os.path.getmtime(marker) == mtime
-
-
-def test_torn_generation_falls_back_then_recommits(spark, tmp_path):
-    _, h1, h2 = _halves(spark)
-    state = str(tmp_path / "card")
-    apply_sketch_batch(h1, state, 0, "event_type", "user_id")
-    after_first = _regs(read_registers(spark, state))
-    apply_sketch_batch(h2, state, 1, "event_type", "user_id")
-    want = _regs(read_registers(spark, state))
-    # crash window: gen 1 written but unmarked -> readers see gen 0
-    (Path(state) / "gen=1" / _GEN_COMMIT).unlink()
-    assert _committed_gens(spark, state) == [0]
-    assert _regs(read_registers(spark, state)) == after_first
-    apply_sketch_batch(h2, state, 1, "event_type", "user_id")  # replay
-    assert _regs(read_registers(spark, state)) == want
-
-
-def test_gc_retains_two_newest_generations(spark, tmp_path):
-    ev = _events(spark)
-    state = str(tmp_path / "card")
-    thirds = [ev.filter(F.col("event_id") % 3 == i) for i in range(3)]
-    for i, part in enumerate(thirds):
-        apply_sketch_batch(part, state, i, "event_type", "user_id")
-    assert _committed_gens(spark, state) == [1, 2]
-    # the newest snapshot still carries ALL folded epochs
-    want = _regs(hll_sketch_by(ev, "event_type", "user_id"))
-    assert _regs(read_registers(spark, state)) == want
 
 
 def test_served_estimates_within_five_sigma(spark, tmp_path):
@@ -134,50 +85,7 @@ def test_real_stream_run_end_to_end(spark, tmp_path):
     assert _regs(read_registers(spark, state)) == want
 
 
-def test_reader_refuses_empty_state(spark, tmp_path):
-    with pytest.raises(FileNotFoundError):
-        read_registers(spark, str(tmp_path / "nope"))
-
-
 # -- theta ledger (live per-source set samples) ---------------------
-
-
-def _theta_regs(df):
-    return {(r["group"], r["h"]) for r in df.collect()}
-
-
-def test_theta_epochs_fold_to_the_batch_sketch(spark, tmp_path):
-    from outboxx_spark.dataops.theta import theta_sketch_by
-    from outboxx_spark.streaming.sketch_stream import (
-        apply_theta_batch,
-        read_theta_state,
-    )
-
-    ev, h1, h2 = _halves(spark)
-    state = str(tmp_path / "theta")
-    apply_theta_batch(h1, state, 0, "event_type", "user_id")
-    apply_theta_batch(h2, state, 1, "event_type", "user_id")
-    want = _theta_regs(theta_sketch_by(ev, "event_type", "user_id"))
-    assert _theta_regs(read_theta_state(spark, state)) == want
-
-
-def test_theta_replay_and_torn_gen(spark, tmp_path):
-    from outboxx_spark.streaming.sketch_stream import (
-        apply_theta_batch,
-        read_theta_state,
-    )
-
-    _, h1, h2 = _halves(spark)
-    state = str(tmp_path / "theta")
-    apply_theta_batch(h1, state, 0, "event_type", "user_id")
-    apply_theta_batch(h2, state, 1, "event_type", "user_id")
-    want = _theta_regs(read_theta_state(spark, state))
-    apply_theta_batch(h2, state, 1, "event_type", "user_id")  # replay
-    assert _theta_regs(read_theta_state(spark, state)) == want
-    (Path(state) / "gen=1" / _GEN_COMMIT).unlink()  # crash window
-    assert _committed_gens(spark, state) == [0]
-    apply_theta_batch(h2, state, 1, "event_type", "user_id")
-    assert _theta_regs(read_theta_state(spark, state)) == want
 
 
 def test_live_overlap_matrix_matches_batch(spark, tmp_path):
@@ -204,3 +112,10 @@ def test_live_overlap_matrix_matches_batch(spark, tmp_path):
         p: est for p, (est, _) in _pairwise_intersections(per, K_DEFAULT).items()
     }
     assert read_overlap_matrix(spark, state) == want
+
+
+# the crash walk in tests/test_epochs.py asserts these windows
+test_two_epochs_fold_to_the_batch_registers = test_replay_of_committed_epoch_is_a_noop = \
+    test_torn_generation_falls_back_then_recommits = test_gc_retains_two_newest_generations = \
+    test_reader_refuses_empty_state = walk_test("hll")
+test_theta_epochs_fold_to_the_batch_sketch = test_theta_replay_and_torn_gen = walk_test("theta")

@@ -195,12 +195,6 @@ def test_snapshot_and_stream_key_each_row_on_its_own_stream(spark, multi_file_fe
     assert all(key == json.loads(data)[keys[dest]] for dest, key, data in snap)
 
 
-@pytest.mark.xfail(
-    strict=True,
-    raises=AssertionError,
-    reason="known defect (FOUND in CHANGES.md): delivery_frame serializes the envelope into "
-    "`value` before routed_key reads it, so routing_key='value' keys on the whole envelope",
-)
 def test_routing_key_value_keys_on_the_payload_column(spark):
     """A stream keyed on the payload column ``value`` is keyed on that
     column, not on the serialized envelope that shares its name. Batch,
