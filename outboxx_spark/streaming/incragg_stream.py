@@ -166,6 +166,9 @@ def _ledger_parts(spark: SparkSession, ledger_dir: str):
     every committed epoch ABOVE it. Epochs at or below a fold's
     horizon are ignored whether present or not — which is exactly what
     makes compaction GC crash-safe at any interruption point."""
+    done = epochs.committed(spark, ledger_dir, EPOCH)
+    # folds are listed second: a fold published between the two
+    # listings covers every epoch its compaction then deletes
     folds = epochs.committed(spark, ledger_dir, FOLD)
     horizon = max(folds) if folds else None
     paths = []
@@ -173,7 +176,7 @@ def _ledger_parts(spark: SparkSession, ledger_dir: str):
         paths.append(epochs.epoch_dir(ledger_dir, FOLD, horizon))
     paths += [
         epochs.epoch_dir(ledger_dir, EPOCH, e)
-        for e in epochs.committed(spark, ledger_dir, EPOCH)
+        for e in done
         if horizon is None or e > horizon
     ]
     return horizon, paths
