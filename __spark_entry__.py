@@ -963,19 +963,19 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "cdc_snapshot_read": q_snapshot_read,
         "cdc_sessions": q_sessions,
         "cdc_materialize": q_materialize,
+        "docs_incremental_dedup": q_docs_incremental_dedup,
         "emb_near_dup_ivf": q_emb_near_dup_ivf,
         "emb_kmeans_assign": q_emb_kmeans_assign,
-        "emb_diversity_sample": q_emb_diversity_sample,
         # ---- tail (positions 51+): green at their latest check in
         # unchanged formulation; the staleness policy rotates each
         # back within MAX_STALENESS rounds ----
+        "emb_diversity_sample": q_emb_diversity_sample,
         "docs_corpus_diff": corpus_diff_mod.planted_corpus_diff,
         "docs_normalize": normalize_mod.planted_normalize,
         "docs_bloom_filter": bloom.bloom_filter_check,
         "olap_hll_relational": hll.hll_relational_check,
         "docs_dedup_survivors": q_docs_dedup_survivors,
         "docs_curate": q_docs_curate,
-        "docs_incremental_dedup": q_docs_incremental_dedup,
         "docs_lang_id": q_docs_lang_id,
         "docs_quality": q_docs_quality,
         "docs_fingerprint": q_docs_fingerprint,

@@ -278,9 +278,9 @@ def validate_kafka_sink(sink: KafkaSinkConfig) -> KafkaSinkConfig:
 
 def kafka_security_options(sink: KafkaSinkConfig) -> dict[str, str]:
     """The validated security axes rendered as Spark Kafka-connector
-    options (``kafka.``-prefixed -> passed to the Java client verbatim).
-    Merges over ``streaming.job.kafka_writer_options`` for a secured
-    producer. The SASL secret is resolved from the environment AT CALL
+    options (``kafka.``-prefixed -> passed to the Java client verbatim);
+    ``kafka_wire.wire_security_kwargs`` turns them into the wire
+    producer's TLS and SASL arguments. The SASL secret is resolved from the environment AT CALL
     TIME and lands only in the in-memory options map, never in config
     files (V4)."""
     validate_kafka_sink(sink)

@@ -68,6 +68,7 @@ from outboxx_spark.dataops.dedup import (
 from outboxx_spark.dataops.text import shingles
 from outboxx_spark.dataops.util import parallelized as _parallelized
 from outboxx_spark.fsutil import fs_exists, fs_read_text, fs_write_text, hadoop_fs
+from outboxx_spark.streaming import epochs
 
 DEFAULT_STORE_BUCKETS = 64
 # Below this many verified pairs, the dropped-id set is collected and
@@ -580,7 +581,6 @@ def start_incremental_dedup_stream(
     threshold: float = 0.5,
     text_col: str = "text",
     n_store_buckets: int = DEFAULT_STORE_BUCKETS,
-    available_now: bool = True,
 ):
     """Run incremental dedup over a streaming document feed. Offsets
     commit after the batch's store writes land (foreachBatch contract);
@@ -599,9 +599,4 @@ def start_incremental_dedup_stream(
             n_store_buckets=n_store_buckets,
         )
 
-    writer = stream.writeStream.foreachBatch(_apply).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return epochs.start(stream, _apply, checkpoint_dir)

@@ -68,22 +68,33 @@ def envelope_json(op: Column, data: Column, resource: Column, timestamp: Column,
     )
 
 
+def is_map_payload(df: DataFrame, data_cols: list[str]) -> bool:
+    """Whether the payload is one ``map<string,string>`` row image (the
+    Debezium decode's ``data``), whose columns are known per row, not
+    per query."""
+    return len(data_cols) == 1 and isinstance(df.schema[data_cols[0]].dataType, T.MapType)
+
+
 def feed_envelope(df: DataFrame, data_cols: list[str]) -> Column:
     """The JSON envelope of each row of a flat feed frame.
 
     ``data_cols`` is the new-image payload (R4: for UPDATE the feed
     carries only the new image downstream). Double columns get the
-    non-finite hard-error guard.
+    non-finite hard-error guard. A map payload (``is_map_payload``) is
+    ``data`` as it stands; its values are strings, so it needs no guard.
     """
-    types = dict(zip(df.schema.names, df.schema.fields))
-    cols = []
-    for c in data_cols:
-        f = types.get(c)
-        if f is not None and isinstance(f.dataType, (T.DoubleType, T.FloatType)):
-            cols.append(_finite_guard(F.col(c), c).alias(c))
-        else:
-            cols.append(F.col(c).alias(c))
-    data = F.struct(*cols)
+    if is_map_payload(df, data_cols):
+        data = F.col(data_cols[0])
+    else:
+        types = dict(zip(df.schema.names, df.schema.fields))
+        cols = []
+        for c in data_cols:
+            f = types.get(c)
+            if f is not None and isinstance(f.dataType, (T.DoubleType, T.FloatType)):
+                cols.append(_finite_guard(F.col(c), c).alias(c))
+            else:
+                cols.append(F.col(c).alias(c))
+        data = F.struct(*cols)
     return envelope_json(F.col("op"), data, F.col("resource"), F.col("commit_ts"), F.col("lsn"))
 
 

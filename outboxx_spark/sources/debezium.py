@@ -222,3 +222,18 @@ def parse_debezium(df: DataFrame, value_col: str = "value") -> DataFrame:
             F.col("p.source.snapshot").alias("snapshot"),
         )
     )
+
+
+def debezium_feed(df: DataFrame) -> DataFrame:
+    """Debezium change-event JSON ``value`` strings -> the flat feed
+    contract ``pipeline.delivery_frame`` takes: op, resource, lsn,
+    ``commit_ts`` in unix seconds (the envelope's ``meta.timestamp`` and
+    the lag gauge; Debezium's clock is ms) and the row image ``data``, a
+    ``map<string,string>`` payload."""
+    return parse_debezium(df).select(
+        "op",
+        "resource",
+        "lsn",
+        F.floor(F.col("commit_ts") / 1000).alias("commit_ts"),
+        "data",
+    )

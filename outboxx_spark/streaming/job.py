@@ -1,75 +1,58 @@
-"""Streaming CDC job: bootstrap snapshot + foreachBatch delivery loop.
+"""Streaming CDC jobs: the served query, the file-feed stream and the
+bootstrap snapshot.
 
 Reproduces the reference's orchestration (SURVEY §2.6/§3):
 
-- O3 bootstrap: if any stream opts into ``read``, write the snapshot
-  (op=READ, shared start LSN) FIRST, with a hard barrier (the batch write
-  either completes or the job fails — the flush-barrier analog), then
-  start the streaming query.
 - O1 batch loop: routing is declared once per query; each micro-batch
   body only delivers — the body of `processChangesToKafka`
-  (`src/processor/processor.zig:150-184`).
+  (`src/processor/processor.zig:150-184`). ``serve`` (Debezium JSON, the
+  deployed program) and ``start_stream`` (the file feed, the measured
+  drain) build that body in one place, ``_delivery``.
 - O2 at-least-once: Structured Streaming's checkpoint commits offsets
   only after the foreachBatch body returns — exactly the reference's
   'confirm LSN to Postgres only after Kafka flush' contract. Replays
   re-produce a suffix; consumers dedup on (resource, lsn) (O4).
+- O3 bootstrap: ``run_snapshot_phase`` writes the READ events of every
+  read-opted resource with a hard barrier before a file-feed stream
+  starts. On the served path the source orders it: Debezium's initial
+  snapshot puts its ``r`` events on the topic before the changes.
 - O6 graceful shutdown: ``query.stop()``; checkpoint makes restart safe.
 - M1/M4: per-batch tally + lag observed on the delivering write
   (``metrics.tally_delivered``), for stream and snapshot alike; the
   tally's Columns are built once per query, not per micro-batch.
+- M2/M3/O7: ``serve`` attaches ``CdcQueryListener`` and the
+  ``/metrics`` server for the life of its query.
 
-The stream and the snapshot build their output with
-``pipeline.delivery_frame``, the same frame the batch pipeline uses.
-Sink: ``sink_fn`` delivers to Kafka (``kafka_sink.make_kafka_sink``);
-without it the output is partitioned parquet per destination.
+Every path builds its output with ``pipeline.delivery_frame``, the same
+frame the batch pipeline uses. Sink: ``sink_fn`` delivers to Kafka
+(``kafka_sink.make_kafka_sink``); ``start_stream`` without it writes
+partitioned parquet per destination.
 """
 
 from __future__ import annotations
 
 import os
-import time
+from collections.abc import Callable, Iterator
+from contextlib import ExitStack, contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
-from outboxx_spark.config import PipelineConfig
+from outboxx_spark.config import PipelineConfig, StreamConfig
 from outboxx_spark.fsutil import fs_exists
 from outboxx_spark.pipeline import DELIVERY_COLS, FEED_DATA_COLS, delivery_frame
+from outboxx_spark.sources.debezium import debezium_feed
 from outboxx_spark.sources.feed import read_feed_stream
 from outboxx_spark.sources.snapshot import snapshot_table
-from outboxx_spark.streaming.metrics import MetricsRegistry, tally_columns, tally_delivered
-
-
-def kafka_writer_options(
-    bootstrap_servers: str, security=None
-) -> dict[str, str]:
-    """The reference producer's delivery-guarantee configs
-    (`src/sink/kafka/producer.zig:111-176`), as Spark Kafka sink options.
-
-    ``security``: an optional ``config.KafkaSinkConfig`` — its validated
-    TLS x SASL axes (security.protocol derivation, JAAS config, CA
-    truststore) merge in LAST, so the secured options win. Its broker
-    list also overrides ``bootstrap_servers`` (one source of truth for
-    a secured sink)."""
-    opts = {
-        "kafka.bootstrap.servers": bootstrap_servers,
-        "kafka.enable.idempotence": "true",
-        "kafka.acks": "all",
-        "kafka.max.in.flight.requests.per.connection": "5",
-        "kafka.retries": "3",
-        "kafka.retry.backoff.ms": "500",
-        "kafka.linger.ms": "50",
-        "kafka.batch.size": "262144",
-        "kafka.delivery.timeout.ms": "30000",
-        "kafka.request.timeout.ms": "15000",
-        # fail-fast on startup, same as the reference
-        "kafka.socket.connection.setup.timeout.ms": "10000",
-    }
-    if security is not None:
-        from outboxx_spark.config import kafka_security_options
-
-        opts.update(kafka_security_options(security))
-    return opts
+from outboxx_spark.streaming import epochs
+from outboxx_spark.streaming.http import ObservabilityServer
+from outboxx_spark.streaming.metrics import (
+    CdcQueryListener,
+    MetricsRegistry,
+    tally_columns,
+    tally_delivered,
+)
 
 
 def snapshot_tables_preflight(
@@ -142,6 +125,65 @@ def run_snapshot_phase(
     return total
 
 
+def _delivery(
+    feed: DataFrame,
+    streams: list[StreamConfig],
+    data_cols: list[str],
+    registry: MetricsRegistry,
+    sink_fn: Callable[[DataFrame, int], None],
+) -> tuple[DataFrame, Callable[[DataFrame, int], None]]:
+    """The delivered frame of a streaming ``feed`` and the foreachBatch
+    body that delivers it. The frame, the tally's Columns and the
+    delivery Columns are built once per query; the body only observes
+    the tally on ``sink_fn``'s write and delivers. Checkpoint commit
+    after the body = the at-least-once core (O2).
+
+    ``sink_fn(delivery, epoch_id)``'s first DataFrame action on
+    ``delivery`` must consume every row (write, ``count``, ``collect``,
+    ``mapInPandas``), as every in-repo sink does: the tally is observed
+    on that action and read after the sink returns. A leading
+    ``isEmpty``/``take`` guard undercounts; a sink that runs no
+    DataFrame action fails the micro-batch before its commit
+    (``metrics.tally_delivered``)."""
+    tally = tally_columns(streams)
+    delivery_cols = [F.col(c) for c in DELIVERY_COLS]
+
+    def process_batch(batch: DataFrame, epoch_id: int) -> None:
+        # One write per micro-batch, one job regardless of destination
+        # count (no loop per stream). ``sink_fn`` is the
+        # producer-injection seam (the reference tests its producer
+        # against a mock cluster the same way, producer.zig:431-502); a
+        # raise there fails the micro-batch BEFORE the checkpoint
+        # commit -> fail-fast + replay (K6/O2).
+        tally_delivered(registry, batch, tally, lambda out: sink_fn(out.select(*delivery_cols), epoch_id))
+
+    delivered = delivery_frame(feed, streams, data_cols).select("stream", "commit_ts", *DELIVERY_COLS)
+    return delivered, process_batch
+
+
+def _parquet_sink(out_dir: str, exactly_once: bool) -> Callable[[DataFrame, int], None]:
+    """``start_stream``'s sink when it is given no ``sink_fn``: partitioned
+    parquet per destination, appended, or per (epoch, destination)
+    overwritten when ``exactly_once``."""
+
+    def sink(delivery: DataFrame, epoch_id: int) -> None:
+        if exactly_once:
+            (
+                delivery.select(F.lit(epoch_id).alias("epoch"), "*")
+                .write.mode("overwrite")
+                # per-write option, not session conf: a session-global
+                # partitionOverwriteMode=dynamic would silently change every
+                # later mode("overwrite") in the same SparkSession
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("epoch", "destination")
+                .parquet(out_dir)
+            )
+        else:
+            delivery.write.mode("append").partitionBy("destination").parquet(out_dir)
+
+    return sink
+
+
 def start_stream(
     spark: SparkSession,
     sf_dir: str,
@@ -153,92 +195,59 @@ def start_stream(
     exactly_once: bool = False,
     sink_fn=None,
 ):
-    """The streaming query: the delivery frame and the tally's Columns
-    are built once per query, the foreachBatch body only observes the
-    tally on its write and delivers; checkpoint commit after the body =
-    the at-least-once core (O2).
-
-    ``sink_fn(delivery, epoch_id)``'s first DataFrame action on
-    ``delivery`` must consume every row (write, ``count``, ``collect``,
-    ``mapInPandas``), as every in-repo sink does: the tally is observed
-    on that action and read after the sink returns. A leading
-    ``isEmpty``/``take`` guard undercounts; a sink that runs no
-    DataFrame action fails the micro-batch before its commit
-    (``metrics.tally_delivered``).
+    """The file-feed stream (the drain perfbench measures): drains the
+    feed under ``sf_dir`` once (``availableNow``) through ``_delivery``
+    into ``sink_fn``, whose contract ``_delivery`` states.
 
     ``exactly_once=True`` upgrades the file sink beyond the reference's
     guarantee: output is partitioned by (epoch, destination) and written
     with dynamic partition overwrite, so a replayed micro-batch
     *replaces* its own epoch partition instead of appending duplicates —
-    idempotent-producer semantics for files (the Kafka path gets the
-    same from ``enable.idempotence`` + checkpoint replay). It is a file
-    sink mode, so it cannot be combined with ``sink_fn``."""
+    idempotent-producer semantics for files. It is a file sink mode, so
+    it cannot be combined with ``sink_fn``."""
     if exactly_once and sink_fn is not None:
         raise ValueError("exactly_once is a file-sink mode; it cannot be combined with sink_fn")
-    registry = registry or MetricsRegistry()
-    streams = config.streams
-    tally = tally_columns(streams)
-    delivery_cols = [F.col(c) for c in DELIVERY_COLS]
-
-    def process_batch(batch: DataFrame, epoch_id: int) -> None:
-        def write(out: DataFrame) -> None:
-            # One write per micro-batch, one job regardless of
-            # destination count (no per-stream driver loop).
-            # ``sink_fn`` is the producer-injection seam (the reference
-            # tests its producer against a mock cluster the same way,
-            # producer.zig:431-502); a raise here fails the micro-batch
-            # BEFORE the checkpoint commit -> fail-fast + replay (K6/O2).
-            delivery = out.select(*delivery_cols)
-            if sink_fn is not None:
-                sink_fn(delivery, epoch_id)
-            elif exactly_once:
-                (
-                    delivery.select(F.lit(epoch_id).alias("epoch"), *delivery_cols)
-                    .write.mode("overwrite")
-                    # per-write option, not session conf: a session-global
-                    # partitionOverwriteMode=dynamic would silently change every
-                    # later mode("overwrite") in the same SparkSession
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("epoch", "destination")
-                    .parquet(out_dir)
-                )
-            else:
-                delivery.write.mode("append").partitionBy("destination").parquet(out_dir)
-
-        tally_delivered(registry, batch, tally, write)
-
     feed = read_feed_stream(spark, sf_dir, max_files_per_trigger)
-    return (
-        delivery_frame(feed, streams, FEED_DATA_COLS)
-        .select("stream", "commit_ts", *DELIVERY_COLS)
-        .writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    frame, body = _delivery(
+        feed,
+        config.streams,
+        FEED_DATA_COLS,
+        registry or MetricsRegistry(),
+        sink_fn or _parquet_sink(out_dir, exactly_once),
     )
+    return epochs.start(frame, body, checkpoint_dir)
 
 
-def run_pipeline(
-    spark: SparkSession,
-    sf_dir: str,
+@contextmanager
+def serve(
+    source: DataFrame,
     config: PipelineConfig,
-    out_dir: str,
     checkpoint_dir: str,
-    registry: MetricsRegistry | None = None,
+    sink_fn: Callable[[DataFrame, int], None],
     *,
-    snapshot_lsn: int = 0,
-    snapshot_ts: int | None = None,
-) -> None:
-    """Full bootstrap-then-stream ordering (O3): snapshot write completes
-    (or fails the job) before the first streaming offset commits."""
-    registry = registry or MetricsRegistry()
-    if config.snapshot_resources():
-        snap_ts = snapshot_ts if snapshot_ts is not None else int(time.time())
-        run_snapshot_phase(
-            spark, sf_dir, config, out_dir,
-            start_lsn=snapshot_lsn, snapshot_ts=snap_ts, registry=registry,
-        )
-    q = start_stream(
-        spark, sf_dir, config, out_dir, checkpoint_dir, registry
-    )
-    q.awaitTermination()
+    metrics_port: int = 0,
+) -> Iterator[tuple[StreamingQuery, int]]:
+    """The served program (SURVEY O1-O7): a streaming frame of Debezium
+    change-event JSON ``value`` strings (the source topic in
+    deployment) -> ``debezium_feed``, the flat feed contract with a
+    ``map<string,string>`` payload -> ``_delivery``, the body
+    ``start_stream`` runs -> ``sink_fn``. Started with Spark's default
+    trigger, because the source is unbounded.
+
+    Yields ``(query, port)``: the running query and the port its
+    ``/metrics``, ``/healthz`` and ``/readyz`` answer on
+    (``metrics_port``, or an ephemeral one for 0). ``CdcQueryListener``
+    feeds liveness and errors for as long as the block runs; leaving it
+    stops the server, the query and the listener."""
+    spark = source.sparkSession
+    registry = MetricsRegistry()
+    frame, body = _delivery(debezium_feed(source), config.streams, ["data"], registry, sink_fn)
+    listener = CdcQueryListener(registry)
+    with ExitStack() as stack:
+        spark.streams.addListener(listener)
+        stack.callback(spark.streams.removeListener, listener)
+        query = frame.writeStream.foreachBatch(body).option("checkpointLocation", checkpoint_dir).start()
+        stack.callback(query.stop)
+        server = ObservabilityServer(registry, lambda: query.isActive, metrics_port).start()
+        stack.callback(server.stop)
+        yield query, server.port

@@ -21,10 +21,14 @@ Scale shape (what K1 needs at 100 TB):
   consumer's per-key ordering matches what the reference's producer
   would deliver.
 
-Against a production cluster the same delivery frame goes through
-Spark's Kafka connector (`job.kafka_writer_options`, identical
-producer configs); this module is the dependency-free path the sandbox
-can actually EXECUTE, and the sink_fn seam makes them swappable.
+This is the one Kafka sink: the deployed program (``job.serve`` in
+``deploy/load-stand/run_cdc.py``), perfbench's drain and the broker-stand
+fault tests all produce through it. It is also the only sink whose
+action reports the tally's observed metrics: Spark's V1 Kafka connector
+write runs its query as a bare RDD job, which never does. Against the
+Java client it gives up ``enable.idempotence`` and in-flight 5: it keeps
+acks=all, bounded retries and the per-task flush barrier, with
+in-flight 1, so a retry cannot reorder a partition.
 """
 
 from __future__ import annotations

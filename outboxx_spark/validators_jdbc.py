@@ -136,22 +136,3 @@ def preflight_postgres(
     if errors:
         raise ConfigError("pre-flight validation failed:\n  " + "\n  ".join(errors))
     return ran
-
-
-def jdbc_executor(spark, jdbc_url: str, properties: dict[str, str] | None = None):
-    """``execute`` implementation over Spark's JDBC source: wraps each
-    pre-flight statement as a one-row pushdown query. Driver-side and
-    tiny — pre-flight runs once at startup, before any executor work."""
-
-    def execute(sql: str):
-        df = (
-            spark.read.format("jdbc")
-            .option("url", jdbc_url)
-            .option("query", sql.rstrip(";"))
-            .options(**(properties or {}))
-            .load()
-        )
-        row = df.first()
-        return None if row is None else row[0]
-
-    return execute

@@ -270,45 +270,3 @@ def test_preflight_rejects_scheme_path_without_session():
 
     with pytest.raises(ValueError, match="SparkSession"):
         snapshot_tables_preflight("hdfs://nn/data/sf1", default_config())
-
-
-def test_kafka_writer_options_pin_reference_producer_config(spark):
-    """K1 execution-surface pin (no broker in the sandbox): the option
-    dict must carry EXACTLY the client configs the reference producer
-    sets (`src/sink/kafka/producer.zig:142-163` + bootstrap), each
-    under the `kafka.`-prefix Spark's sink strips before handing them
-    to the Kafka client, and the dict must round-trip into a
-    writeStream builder unchanged (option() rejects nothing, so a typo
-    here would otherwise surface only against a live broker)."""
-    from outboxx_spark.streaming.job import kafka_writer_options
-
-    opts = kafka_writer_options("broker-1:9092,broker-2:9092")
-    assert opts == {
-        "kafka.bootstrap.servers": "broker-1:9092,broker-2:9092",
-        # reliability block
-        "kafka.enable.idempotence": "true",
-        "kafka.acks": "all",
-        "kafka.max.in.flight.requests.per.connection": "5",
-        # retry block
-        "kafka.retries": "3",
-        "kafka.retry.backoff.ms": "500",
-        # batching block (constants.zig KAFKA_LINGER_MS/KAFKA_BATCH_SIZE)
-        "kafka.linger.ms": "50",
-        "kafka.batch.size": "262144",
-        # timeout block
-        "kafka.delivery.timeout.ms": "30000",
-        "kafka.request.timeout.ms": "15000",
-        "kafka.socket.connection.setup.timeout.ms": "10000",
-    }
-    # every key must use the connector's passthrough prefix — an
-    # unprefixed client config is silently ignored by the Spark sink
-    assert all(k.startswith("kafka.") for k in opts)
-    # the builder accepts the full dict without starting (API shape);
-    # writeStream needs a streaming frame — the built-in rate source
-    stream = (
-        spark.readStream.format("rate")
-        .load()
-        .selectExpr("CAST(value AS STRING) AS key", "CAST(value AS STRING) AS value")
-    )
-    writer = stream.writeStream.format("kafka").options(**opts).option("topic", "t")
-    assert writer is not None

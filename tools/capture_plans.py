@@ -6,13 +6,18 @@ Usage:
 For each query name, builds the DataFrame via __spark_entry__.queries()
 (at $SPARK_GRAFT_SF_DIR, default sf0.1) and writes the formatted plan to
 <out_dir>/<query>_<suffix>.txt. The special name ``cdc_pipeline_full``
-captures the routed_envelopes pipeline plan (the bench headline leg).
+captures the routed_envelopes pipeline plan (the bench headline leg);
+``start_stream_<workload>`` drains a small seeded perfbench feed through
+``start_stream`` and captures its streaming physical plan, followed by
+the formatted plan of the frame its sink receives.
 """
 
 from __future__ import annotations
 
 import io
 import os
+import re
+import shutil
 import sys
 from contextlib import redirect_stdout
 from pathlib import Path
@@ -34,6 +39,32 @@ def main() -> None:
 
     qs = dict(E.queries())
 
+    def stream_plans(workload):
+        import tempfile
+
+        sys.path.insert(0, f"{repo}/perfbench")
+        from workloads import WORKLOADS, generate_feed, pipeline_config, write_feed
+
+        from outboxx_spark.streaming.job import start_stream
+
+        w = WORKLOADS[workload]
+        work = Path(tempfile.mkdtemp())
+        write_feed(generate_feed(w, 401, 4000), str(work / "feed"), 2000)
+        sunk = []
+        q = start_stream(
+            spark, str(work / "feed"), pipeline_config(list(w.streams)), str(work / "out"),
+            str(work / "ck"), sink_fn=lambda delivery, _: sunk.append(delivery) or delivery.count(),
+        )
+        q.awaitTermination()
+        buf = io.StringIO()
+        with redirect_stdout(buf):
+            q.explain()
+            sunk[-1].explain("formatted")
+        shutil.rmtree(work)
+        # the temp feed dir and the Observation's random name differ per run
+        text = buf.getvalue().replace(str(work), "<work>")
+        return re.sub(r"[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}", "<observation>", text)
+
     def build(name):
         if name == "cdc_pipeline_full":
             from outboxx_spark.pipeline import routed_envelopes
@@ -44,11 +75,14 @@ def main() -> None:
 
     for name in names:
         try:
-            df = build(name)
-            buf = io.StringIO()
-            with redirect_stdout(buf):
-                df.explain("formatted")
-            (out / f"{name}_{suffix}.txt").write_text(buf.getvalue())
+            if name.startswith("start_stream_"):
+                text = stream_plans(name.removeprefix("start_stream_"))
+            else:
+                buf = io.StringIO()
+                with redirect_stdout(buf):
+                    build(name).explain("formatted")
+                text = buf.getvalue()
+            (out / f"{name}_{suffix}.txt").write_text(text)
             print(f"ok {name}")
         except Exception as e:
             print(f"FAIL {name}: {type(e).__name__}: {e}")

@@ -24,9 +24,9 @@ Fault injection for delivery-semantics tests:
   reference's producer tests.
 
 This is TEST INFRASTRUCTURE: single process, in-memory logs, no
-replication — the production sink speaks to a real cluster through the
-same client (or Spark's Kafka connector; `streaming/job.py`
-kafka_writer_options carries the identical configs).
+replication — the production sink (``streaming/kafka_sink.py``, which
+``streaming/job.serve`` delivers through) speaks to a real cluster
+through the same client.
 """
 
 from __future__ import annotations
