@@ -23,6 +23,13 @@ Local testing runs on ``local[N]`` but every knob here is chosen for the
   was checked on all three versions. The JVM starts the daemon before any
   task runs, so the package's parent directory is appended to
   ``spark.executorEnv.PYTHONPATH``.
+- DataFrame debugging off (``spark.python.sql.dataFrameDebugging.enabled``):
+  PySpark otherwise records the Python call site of every DataFrame and
+  Column call over py4j. Measured on 4 vCPUs, 5 ``start_stream`` calls
+  each way, alternated in one JVM: 1,731 -> 604 py4j commands per query
+  start, 0.50 -> 0.35 s (medians).
+  Error messages keep their text and lose the Python call-site block.
+  PySpark reads the flag once per process.
 """
 
 from __future__ import annotations
@@ -56,6 +63,9 @@ def get_spark(app_name: str = "outboxx_spark", extra_conf: dict | None = None) -
         # (sources/tables.py).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.python.daemon.module", "outboxx_spark.pyworker_daemon")
+        # no Python call-site capture per DataFrame/Column API call
+        # (each costs py4j round trips; see the module docstring)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     extra_conf = extra_conf or {}
     for k, v in extra_conf.items():

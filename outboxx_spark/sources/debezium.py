@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from outboxx_spark.functions.typemap import lsn_text
+
 # Debezium Postgres connector payload (connector docs; envelope with
 # schemas.enable=false). With schemas.enable=true the same payload
 # nests under "payload" — parse_debezium handles both.
@@ -200,11 +202,6 @@ def parse_debezium(df: DataFrame, value_col: str = "value") -> DataFrame:
         )
     )
     lsn = F.col("p.source.lsn")
-    lsn_text = F.concat(
-        F.upper(F.hex(F.shiftrightunsigned(lsn, 32))),
-        F.lit("/"),
-        F.upper(F.hex(lsn.bitwiseAND(F.lit(0xFFFFFFFF)))),
-    )
     return (
         parsed.select(p.alias("p"))
         .select(
@@ -214,7 +211,7 @@ def parse_debezium(df: DataFrame, value_col: str = "value") -> DataFrame:
                 ".", F.col("p.source.schema"), F.col("p.source.table")
             ).alias("resource"),
             F.col("p.source.ts_ms").alias("commit_ts"),
-            lsn_text.alias("lsn_text"),
+            lsn_text(lsn).alias("lsn_text"),
             lsn.alias("lsn"),
             F.when(F.col("p.op") == "d", F.col("p.before"))
             .otherwise(F.col("p.after"))

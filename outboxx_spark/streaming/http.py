@@ -52,7 +52,9 @@ class ObservabilityServer:
             def log_message(self, *args) -> None:  # quiet
                 pass
 
-        self._server = ThreadingHTTPServer(("127.0.0.1", port), Handler)
+        # the wildcard address: a scraper in another container (the
+        # compose stand's Prometheus) or a published port must reach it
+        self._server = ThreadingHTTPServer(("0.0.0.0", port), Handler)
         self.port = self._server.server_port
         self._thread = threading.Thread(target=self._server.serve_forever, daemon=True)
 

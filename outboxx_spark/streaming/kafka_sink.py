@@ -6,11 +6,14 @@ DB→engine→Kafka path (`src/e2e/cdc_test.zig:25-441`).
 
 Scale shape (what K1 needs at 100 TB):
 
-- **Executor-side produce, no driver funnel**: ``mapInPandas`` gives
+- **Executor-side produce, no driver funnel**: ``mapInArrow`` gives
   every task its own ``WireProducer`` (one socket set per task, the
   reference is one socket per process) — produce throughput scales
-  with task count, the driver only coordinates. Rows reach Python as
-  Arrow batches with UTF-8 encoding already done JVM-side.
+  with task count, the driver only coordinates. Each Arrow
+  ``RecordBatch`` goes to ``WireProducer.send_batch`` whole: its string
+  columns are UTF-8 already and view as binary without a copy, and the
+  records are hashed, grouped and framed over the columns, with one
+  ``zlib.crc32`` call per record the only per-record Python work.
 - **Flush barrier inside the task** (K3): each task flushes and
   confirms delivery BEFORE it reports success; any DeliveryError fails
   the task → the micro-batch → the stream, all before the checkpoint
@@ -77,13 +80,12 @@ def make_kafka_sink(
     need at-least-once set-delivery skip it. Null keys hash to one
     partition — key-less streams should leave this off."""
     bootstrap = list(bootstrap or [])
-    # Arrow-batched transfer (mapInPandas) instead of pickled Rows
-    # (foreachPartition): the executor->Python hop is the dominant
-    # per-record cost at bench scale, and Arrow moves it ~an order of
-    # magnitude. UTF-8 encoding happens JVM-side (F.encode) so the
-    # Python loop touches ready-to-wire bytes only.
-    def produce_batches(pdf_iter):
-        import pandas as pd
+
+    # Arrow batches (mapInArrow), not pickled Rows: the frame's string
+    # columns arrive as Arrow buffers that are UTF-8 already, and
+    # send_batch frames them without a per-record Python object.
+    def produce_batches(batches):
+        import pyarrow as pa
 
         producer = WireProducer(
             host,
@@ -95,18 +97,14 @@ def make_kafka_sink(
             sasl=sasl,
         )
         try:
-            send = producer.send
-            for pdf in pdf_iter:
-                for dest, key, value in zip(
-                    pdf["destination"].values,
-                    pdf["key"].values,
-                    pdf["value"].values,
-                ):
-                    send(dest, key, value)
+            for batch in batches:
+                producer.send_batch(
+                    batch.column("destination"), batch.column("key"), batch.column("value")
+                )
             producer.flush()  # the task-local flush barrier (K3)
         finally:
             producer.close()
-        yield pd.DataFrame({"acked": [producer.sent]})
+        yield pa.RecordBatch.from_pydict({"acked": pa.array([producer.sent], pa.int64())})
 
     @functools.cache
     def columns() -> tuple[Column, ...]:
@@ -115,11 +113,7 @@ def make_kafka_sink(
         does not), then reused."""
         from pyspark.sql import functions as F
 
-        cols = (
-            F.col("destination"),
-            F.encode(F.col("key"), "UTF-8").alias("key"),
-            F.encode(F.col("value"), "UTF-8").alias("value"),
-        )
+        cols = (F.col("destination"), F.col("key"), F.col("value"))
         return cols if order_by is None else (*cols, F.col(order_by).alias("_ord"))
 
     def sink(delivery: DataFrame, epoch_id: int) -> None:
@@ -141,6 +135,6 @@ def make_kafka_sink(
             )
         # The one-row-per-task result both forces execution and carries
         # the per-task delivery count through the same flush barrier.
-        frame.mapInPandas(produce_batches, schema=ACKED_SCHEMA).collect()
+        frame.mapInArrow(produce_batches, schema=ACKED_SCHEMA).collect()
 
     return sink

@@ -33,8 +33,22 @@ versions chosen so the encoding is small and CRC-checkable):
   error path.
 
 The client is deliberately executor-friendly: `WireProducer` holds one
-socket set, no threads, no global state — the sink's `mapInPandas`
+socket set, no threads, no global state — the sink's `mapInArrow`
 opens one per task (see `streaming/kafka_sink.py`).
+
+Two ways in, one delivery path:
+
+- ``send(topic, key, value)`` buffers one record: scalar murmur2 (memoized
+  per key), one timestamp per record, ``encode_message_set`` at dispatch.
+  It is the reference the batch path is tested against.
+- ``send_batch(topics, keys, values)`` takes Arrow columns (the sink's
+  ``RecordBatch``) in chunks of ``batch_max_messages``: ``murmur2_array``
+  hashes a chunk in numpy, one stable argsort groups it by (topic,
+  partition), and ``frame_message_sets`` joins numpy header columns with
+  the key and value buffers in Arrow under one timestamp per chunk. The
+  per-record ``zlib.crc32`` is the one per-record Python call left; the
+  message sets are byte-identical to ``encode_message_set``. Only this
+  path needs numpy and pyarrow, and imports them itself.
 """
 
 from __future__ import annotations
@@ -229,6 +243,149 @@ def partition_for(key: bytes, n_partitions: int) -> int:
 
 
 # ---------------------------------------------------------------------------
+# vectorized encode over Arrow columns (WireProducer.send_batch). numpy and
+# pyarrow are imported inside these functions: the broker stand and the
+# scalar client import this module and need neither.
+# ---------------------------------------------------------------------------
+
+# keys longer than this hash through the scalar murmur2: the vectorized
+# hash pads every key of a chunk to the width of the longest one
+_VEC_KEY_MAX = 64
+
+
+def _as_binary(arr):
+    """A string or binary Arrow array as ``binary``. Arrow strings are
+    UTF-8 already, so a ``string`` array is a zero-copy view."""
+    import pyarrow as pa
+
+    if pa.types.is_string(arr.type):
+        return arr.view(pa.binary())
+    if pa.types.is_binary(arr.type):
+        return arr
+    return arr.cast(pa.binary())  # large_string / large_binary
+
+
+def _offsets_and_data(arr):
+    """(int64 offsets, uint8 data) of a ``binary`` array as numpy
+    views; offsets index ``data`` directly (the slice offset applied)."""
+    import numpy as np
+
+    _validity, offsets, data = arr.buffers()
+    offs = np.frombuffer(offsets, np.int32)[arr.offset : arr.offset + len(arr) + 1]
+    raw = np.frombuffer(data, np.uint8) if data is not None else np.zeros(0, np.uint8)
+    return offs.astype(np.int64), raw
+
+
+def murmur2_array(keys):
+    """``murmur2`` of every key of a ``binary`` Arrow array, as uint32;
+    a null key hashes as b"", as ``send`` hashes it. The keys are laid
+    out as a zero-padded matrix of little-endian uint32 blocks, so the
+    hash loops once per block column, not once per key."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    n = len(keys)
+    starts, data = _offsets_and_data(keys)
+    starts = starts[:-1]
+    lengths = pc.binary_length(keys).fill_null(0).to_numpy().astype(np.int64)
+    long_rows = np.flatnonzero(lengths > _VEC_KEY_MAX)
+    short = np.where(lengths > _VEC_KEY_MAX, 0, lengths)
+    # one spare block column: the tail bytes read as block nblocks
+    width = 4 * (int(short.max(initial=0)) // 4 + 1)
+    cols = np.arange(width)
+    inside = cols < short[:, None]
+    mat = np.zeros((n, width), np.uint8)
+    mat[inside] = data[(starts[:, None] + cols)[inside]]
+    blocks = mat.view("<u4")
+    m = np.uint32(0x5BD1E995)
+    h = np.uint32(0x9747B28C) ^ short.astype(np.uint32)
+    nblocks = short // 4
+    for j in range(int(nblocks.max(initial=0))):
+        k = blocks[:, j] * m
+        k ^= k >> np.uint32(24)
+        k *= m
+        h = np.where(nblocks > j, (h * m) ^ k, h)
+    # the 1-3 tail bytes are the next block with zero padding, so the
+    # scalar hash's three conditional xors are one xor here
+    tail = blocks[np.arange(n), nblocks]
+    h = np.where(short & 3, (h ^ tail) * m, h)
+    h ^= h >> np.uint32(13)
+    h *= m
+    h ^= h >> np.uint32(15)
+    for i in long_rows.tolist():
+        h[i] = murmur2(data[starts[i] : starts[i] + lengths[i]].tobytes())
+    return h
+
+
+def frame_message_sets(groups, keys, values, timestamp_ms: int) -> list:
+    """Frame one chunk of records into one message set per group.
+
+    ``groups`` holds an int64 group id per record (the caller's
+    (topic, partition) code); one stable argsort on it makes each group
+    a contiguous run in input order. ``keys`` and ``values`` are
+    ``binary`` Arrow arrays (null encodes as length -1). Every record is
+    stamped ``timestamp_ms``. Each run's bytes equal
+    ``encode_message_set`` of the same records: the fixed-width fields
+    are numpy columns joined with the keys and values by Arrow, and the
+    per-record CRC is the one per-record Python call.
+    -> [(group id, message_set, record_count)]"""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    n = len(groups)
+    order = np.argsort(groups, kind="stable")
+    grouped = groups[order]
+    starts = np.flatnonzero(np.r_[True, grouped[1:] != grouped[:-1]])
+    ends = np.r_[starts[1:], n]
+    take = pa.array(order)
+    keys, values = keys.take(take), values.take(take)
+    klen = pc.binary_length(keys).fill_null(-1).to_numpy()
+    vlen = pc.binary_length(values).fill_null(-1).to_numpy()
+    # offset | size | crc | magic | attributes | timestamp | key length
+    head = np.zeros(
+        n,
+        [("offset", ">i8"), ("size", ">i4"), ("crc", ">u4"), ("magic", "i1"),
+         ("attributes", "i1"), ("timestamp", ">i8"), ("key_length", ">i4")],
+    )
+    head["offset"] = np.arange(n) - np.repeat(starts, ends - starts)
+    head["size"] = 22 + np.maximum(klen, 0) + np.maximum(vlen, 0)
+    head["magic"] = 1
+    head["timestamp"] = timestamp_ms
+    head["key_length"] = klen
+
+    def fixed(cells, w):
+        return pa.BinaryArray.from_buffers(
+            pa.binary(), n, [None, pa.py_buffer(np.arange(n + 1, dtype=np.int32) * w),
+                             pa.py_buffer(cells)]
+        )
+
+    joined = pc.binary_join_element_wise(
+        fixed(head.view(np.uint8), head.itemsize),
+        keys.fill_null(b""),
+        fixed(vlen.astype(">i4").view(np.uint8), 4),
+        values.fill_null(b""),
+        b"",
+    )
+    offs, data = _offsets_and_data(joined)
+    out = bytearray(data[: offs[-1]])
+    view = memoryview(out)
+    bounds = offs.tolist()
+    crc32 = zlib.crc32
+    # the CRC covers each message after its 16-byte offset/size/crc head
+    crcs = np.array(
+        [crc32(view[a + 16 : b]) for a, b in zip(bounds, bounds[1:])], ">u4"
+    )
+    np.frombuffer(out, np.uint8)[(offs[:-1, None] + 12) + np.arange(4)] = (
+        crcs.view(np.uint8).reshape(n, 4)
+    )
+    return [
+        (int(grouped[s]), bytes(view[bounds[s] : bounds[e]]), int(e - s))
+        for s, e in zip(starts.tolist(), ends.tolist())
+    ]
+
+
+# ---------------------------------------------------------------------------
 # SASL/SCRAM primitives (RFC 5802 + RFC 7677), shared with the broker
 # stand — all stdlib (hashlib.pbkdf2_hmac / hmac), so the handshake the
 # reference delegates to librdkafka is EXECUTED here, not mocked.
@@ -278,14 +435,14 @@ def encode_produce_payload(batches: list[tuple[str, int, bytes]]) -> bytes:
     by_topic: dict[str, list[tuple[int, bytes]]] = {}
     for t, p, ms in batches:
         by_topic.setdefault(t, []).append((p, ms))
-    payload = struct.pack(">hi", ACKS_ALL, PRODUCE_TIMEOUT_MS) + struct.pack(
-        ">i", len(by_topic)
-    )
+    # pieces joined once: appending to one bytes object would copy the
+    # request so far per partition
+    out = [struct.pack(">hii", ACKS_ALL, PRODUCE_TIMEOUT_MS, len(by_topic))]
     for t, parts in by_topic.items():
-        payload += _enc_str(t) + struct.pack(">i", len(parts))
+        out += (_enc_str(t), struct.pack(">i", len(parts)))
         for p, ms in parts:
-            payload += struct.pack(">i", p) + _enc_bytes(ms)
-    return payload
+            out += (struct.pack(">ii", p, len(ms)), ms)
+    return b"".join(out)
 
 
 def parse_produce_response(r: _Reader) -> dict[tuple[str, int], dict]:
@@ -353,8 +510,8 @@ class KafkaConnection:
             struct.pack(">hhi", api_key, api_version, self._corr)
             + _enc_str(self._client_id)
         )
-        frame = header + payload
-        self._sock.sendall(struct.pack(">i", len(frame)) + frame)
+        size = struct.pack(">i", len(header) + len(payload))
+        self._sock.sendall(b"".join((size, header, payload)))  # one copy
         return self._corr
 
     def read_response(self, corr: int) -> _Reader:
@@ -533,7 +690,7 @@ class WireProducer:
     (`producer.zig:111-176` configs; `:286-378` send/flush contract).
 
     NOT thread-safe by design (one per task/partition — the sink's
-    mapInPandas gives each task its own)."""
+    mapInArrow gives each task its own)."""
 
     host: str
     port: int
@@ -695,6 +852,19 @@ class WireProducer:
             self._node_conns[node] = conn
         return conn
 
+    def _partition_count(self, topic: str) -> int:
+        """The topic's partition count, from metadata on first use."""
+        n = self._npart.get(topic)
+        if n is None:
+            self._refresh_metadata(topic)
+            n = self._npart.get(topic)
+        if n is None:
+            # a successful refresh that omits the topic is an anomaly
+            # (no auto-create / ACL hole) — surface it instead of
+            # silently funneling every record to partition 0 (r11 advice)
+            raise KafkaWireError(f"topic {topic!r} absent from metadata response")
+        return n
+
     def send(
         self,
         topic: str,
@@ -709,18 +879,7 @@ class WireProducer:
         Buffering past batch_max_messages flushes inline — the
         queue-full-is-backpressure contract (K2, `producer.zig:286`)."""
         if n_partitions is None:
-            n_partitions = self._npart.get(topic)
-            if n_partitions is None:
-                self._refresh_metadata(topic)
-                n_partitions = self._npart.get(topic)
-            if n_partitions is None:
-                # a successful refresh that omits the topic is an
-                # anomaly (no auto-create / ACL hole) — surface it
-                # instead of silently funneling every record to
-                # partition 0 (r11 advice)
-                raise KafkaWireError(
-                    f"topic {topic!r} absent from metadata response"
-                )
+            n_partitions = self._partition_count(topic)
         ck = (key or b"", n_partitions)
         partition = self._part_cache.get(ck)
         if partition is None:
@@ -741,6 +900,48 @@ class WireProducer:
             self._drain_pending()
             self._dispatch_buffered()
 
+    def send_batch(self, topics, keys, values) -> None:
+        """``send`` over Arrow arrays of one length: ``topics`` strings,
+        ``keys`` and ``values`` strings or binary. A null key is placed
+        as b"" and, like a null value, encoded with length -1.
+
+        Works in chunks of at most ``batch_max_messages`` records. Each
+        chunk is hashed with ``murmur2_array``, framed into one message
+        set per (topic, partition) by ``frame_message_sets`` (a stable
+        grouping, so each partition keeps input order) under one
+        timestamp, and sent like a ``send`` overflow: confirm the
+        previous dispatch, then dispatch this one. In-flight 1, the
+        retry budget, the NOT_LEADER reroute and ``DeliveryError`` are
+        those of ``send``; ``flush`` confirms the last chunk."""
+        import numpy as np
+        import pyarrow.compute as pc
+
+        if topics.null_count:
+            raise KafkaWireError("send_batch: null topic")
+        if self._buf:  # records from send() go first, to keep their order
+            self._drain_pending()
+            self._dispatch_buffered()
+        keys, values = _as_binary(keys), _as_binary(values)
+        topics = pc.dictionary_encode(topics)
+        names = topics.dictionary.to_pylist()
+        codes = topics.indices.to_numpy().astype(np.int64)
+        nparts = np.array([self._partition_count(t) for t in names], np.int64)
+        width = int(nparts.max(initial=1))
+        step = self.batch_max_messages
+        for lo in range(0, len(codes), step):
+            c = codes[lo : lo + step]
+            k = keys.slice(lo, step)
+            partitions = (murmur2_array(k) & 0x7FFFFFFF) % nparts[c]
+            runs = frame_message_sets(
+                c * width + partitions, k, values.slice(lo, step), int(time.time() * 1000)
+            )
+            encoded, counts = {}, {}
+            for group, message_set, count in runs:
+                tp = (names[group // width], group % width)
+                encoded[tp], counts[tp] = message_set, count
+            self._drain_pending()
+            self._dispatch(encoded, counts)
+
     def flush(self) -> None:
         """Produce every buffered batch and confirm delivery of every
         dispatched one. Raises DeliveryError (after counting it) if
@@ -760,19 +961,24 @@ class WireProducer:
         self._drain_pending()
 
     def _dispatch_buffered(self) -> None:
-        """Group buffered batches by partition LEADER and write ONE
-        multi-partition Produce request per broker — the protocol's
-        native request shape, so a flush over P partitions costs round
-        trips proportional to the broker count, not P (the
-        request-batching lever the reference gets from librdkafka).
-        Responses are NOT read here; ``_drain_pending`` confirms."""
         buf, self._buf = self._buf, {}
         self._buf_n = 0
-        if not buf:
+        self._dispatch(
+            {tp: encode_message_set(msgs) for tp, msgs in buf.items()},
+            {tp: len(msgs) for tp, msgs in buf.items()},
+        )
+
+    def _dispatch(
+        self, encoded: dict[tuple[str, int], bytes], counts: dict[tuple[str, int], int]
+    ) -> None:
+        """Group (topic, partition) message sets by partition LEADER and
+        write ONE multi-partition Produce request per broker — the
+        protocol's native request shape, so a flush over P partitions
+        costs round trips proportional to the broker count, not P (the
+        request-batching lever the reference gets from librdkafka).
+        Responses are NOT read here; ``_drain_pending`` confirms."""
+        if not encoded:
             return
-        encoded = {
-            tp: encode_message_set(msgs) for tp, msgs in buf.items()
-        }
         # resolve ALL unknown routes first, THEN group: a refresh for a
         # later topic can move an earlier topic's leader, and grouping
         # mid-refresh would tag a pending entry with a node the dispatch
@@ -791,7 +997,7 @@ class WireProducer:
             ).append((topic, partition))
         for node, tps in by_node.items():
             batches = [(t, p, encoded[(t, p)]) for t, p in tps]
-            counts = {tp: len(buf[tp]) for tp in tps}
+            node_counts = {tp: counts[tp] for tp in tps}
             try:
                 conn = self._node_conn(node)
                 corr = conn.send_request(
@@ -801,9 +1007,9 @@ class WireProducer:
                 )
             except (OSError, KafkaWireError):
                 self._drop_node_connection(node)
-                self._pending.append((node, None, None, batches, counts))
+                self._pending.append((node, None, None, batches, node_counts))
                 continue
-            self._pending.append((node, conn, corr, batches, counts))
+            self._pending.append((node, conn, corr, batches, node_counts))
 
     def _drain_pending(self) -> None:
         """Read every outstanding Produce response and confirm

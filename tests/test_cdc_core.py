@@ -30,11 +30,14 @@ from outboxx_spark.testbed import DEFAULT_STREAMS
 
 
 def test_lsn_text_form(spark):
-    # Postgres X/X text form incl. zero and >32-bit values
-    # (reference renders via `%X/%X`, converter.zig:95-100).
-    df = spark.createDataFrame([(0,), (5,), (0x1234567_89ABCDEF,)], "lsn long")
+    # Postgres X/X text form incl. zero, the 32-bit boundary, >32-bit
+    # values and null (reference renders via `%X/%X`,
+    # converter.zig:95-100; a null LSN is a JSON null, not "NULL/NULL").
+    df = spark.createDataFrame(
+        [(0,), (5,), (0xFFFFFFFF,), (2**32,), (0x1234567_89ABCDEF,), (None,)], "lsn long"
+    )
     out = [r[0] for r in df.select(lsn_text(F.col("lsn"))).collect()]
-    assert out == ["0/0", "0/5", "1234567/89ABCDEF"]
+    assert out == ["0/0", "0/5", "0/FFFFFFFF", "1/0", "1234567/89ABCDEF", None]
 
 
 def test_partition_key_stringifies(spark):

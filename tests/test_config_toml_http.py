@@ -101,6 +101,17 @@ def test_http_endpoints():
         srv.stop()
 
 
+def test_http_binds_every_interface():
+    # Prometheus scrapes /metrics from another container; a loopback
+    # bind would refuse it. The loopback address still answers.
+    srv = ObservabilityServer(MetricsRegistry()).start()
+    try:
+        assert srv._server.server_address[0] == "0.0.0.0"
+        assert _get(srv.port, "/metrics")[0] == 200
+    finally:
+        srv.stop()
+
+
 def test_materialize_semantics(spark):
     feed = spark.createDataFrame(
         [
