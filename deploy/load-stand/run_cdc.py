@@ -11,7 +11,9 @@ the query listener and ``/metrics`` (M2/M3). The sink is
 3 retries 500 ms apart, and a per-task flush barrier, so the checkpoint
 commits offsets only after every record of the micro-batch is acked
 (K3/O2 — a produce failure fails the micro-batch BEFORE the commit, so
-restart replays it). Configuration is the same TOML shape the reference
+restart replays it). The session writes its checkpoint logs through
+``session.CHECKPOINT_FILE_MANAGER``, as every ``get_spark`` session does.
+Configuration is the same TOML shape the reference
 uses (config_toml.load_config).
 
 Runs under spark-submit with the kafka package for the source read (see
@@ -28,6 +30,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from outboxx_spark.config_toml import load_config
+from outboxx_spark.session import CHECKPOINT_FILE_MANAGER, CHECKPOINT_FILE_MANAGER_CONF
 from outboxx_spark.streaming.job import serve
 from outboxx_spark.streaming.kafka_sink import make_kafka_sink
 
@@ -39,7 +42,11 @@ def main() -> None:
     checkpoint = os.environ.get("CHECKPOINT_DIR", "/checkpoints/cdc")
     metrics_port = int(os.environ.get("METRICS_PORT", "9108"))
 
-    spark = SparkSession.builder.appName("outboxx-spark-cdc").getOrCreate()
+    spark = (
+        SparkSession.builder.appName("outboxx-spark-cdc")
+        .config(CHECKPOINT_FILE_MANAGER_CONF, CHECKPOINT_FILE_MANAGER)
+        .getOrCreate()
+    )
     source = (
         spark.readStream.format("kafka")
         .option("kafka.bootstrap.servers", bootstrap)

@@ -8,8 +8,9 @@ plus liveness: no wire activity for 90 s => stalled
 (`src/constants.zig:43-53`, `processor.zig:393-399`) and health
 endpoints (`src/observability/http.zig`).
 
-Spark rebuild: a ``StreamingQueryListener`` feeds liveness and errors
-from query progress events; the tally itself is observed on the
+Spark rebuild: a ``StreamingQueryListener`` feeds liveness, errors and
+the last trigger's phase durations and input rows from query progress
+events; the tally itself is observed on the
 delivering write (``tally_delivered``: ``df.observe`` of one count per
 (stream, op) plus ``max(commit_ts)``, read after the write — the
 reference's per-batch metrics coalescing, `processor.zig:18-28`, done
@@ -49,6 +50,9 @@ class MetricsRegistry:
         self.produce_errors = 0
         self.replication_lag_seconds = 0.0
         self.last_activity_ts = time.time()
+        # the last trigger's StreamingQueryProgress.durationMs and numInputRows
+        self.trigger_phase_ms: dict[str, int] = {}
+        self.trigger_input_rows = 0
 
     def add_processed(self, stream: str, op: str, n: int) -> None:
         with self._lock:
@@ -62,6 +66,11 @@ class MetricsRegistry:
     def set_lag(self, seconds: float) -> None:
         with self._lock:
             self.replication_lag_seconds = max(0.0, seconds)
+
+    def set_trigger(self, phase_ms: dict[str, int], input_rows: int) -> None:
+        with self._lock:
+            self.trigger_phase_ms = dict(phase_ms)
+            self.trigger_input_rows = input_rows
 
     def mark_activity(self) -> None:
         with self._lock:
@@ -80,6 +89,7 @@ class MetricsRegistry:
             return s.replace("\\", "\\\\").replace('"', '\\"').replace("\n", "\\n")
 
         lines = [
+            "# HELP outboxx_events_processed_total Delivered events per stream and operation.",
             "# TYPE outboxx_events_processed_total counter",
         ]
         with self._lock:
@@ -87,10 +97,19 @@ class MetricsRegistry:
                 lines.append(
                     f'outboxx_events_processed_total{{stream="{esc(stream)}",operation="{esc(op)}"}} {n}'
                 )
+            lines.append("# HELP outboxx_produce_errors_total Queries terminated by an error.")
             lines.append("# TYPE outboxx_produce_errors_total counter")
             lines.append(f"outboxx_produce_errors_total {self.produce_errors}")
+            lines.append("# HELP outboxx_replication_lag_seconds Age of the newest delivered commit.")
             lines.append("# TYPE outboxx_replication_lag_seconds gauge")
             lines.append(f"outboxx_replication_lag_seconds {self.replication_lag_seconds}")
+            lines.append("# HELP outboxx_trigger_phase_ms Duration of each phase of the last trigger.")
+            lines.append("# TYPE outboxx_trigger_phase_ms gauge")
+            for phase, ms in sorted(self.trigger_phase_ms.items()):
+                lines.append(f'outboxx_trigger_phase_ms{{phase="{esc(phase)}"}} {ms}')
+            lines.append("# HELP outboxx_trigger_input_rows Input rows of the last trigger.")
+            lines.append("# TYPE outboxx_trigger_input_rows gauge")
+            lines.append(f"outboxx_trigger_input_rows {self.trigger_input_rows}")
         return "\n".join(lines) + "\n"
 
 
@@ -159,8 +178,9 @@ def tally_delivered(
 
 
 class CdcQueryListener(StreamingQueryListener):
-    """Watches query progress: marks activity (liveness), surfaces
-    exceptions as produce errors (K6 fail-fast analog)."""
+    """Watches query progress: marks activity (liveness), keeps the last
+    trigger's phase durations and input rows, surfaces exceptions as
+    produce errors (K6 fail-fast analog)."""
 
     def __init__(self, registry: MetricsRegistry) -> None:
         self.registry = registry
@@ -172,6 +192,8 @@ class CdcQueryListener(StreamingQueryListener):
     def onQueryProgress(self, event) -> None:
         # every trigger = wire activity, even with 0 rows (keepalive analog)
         self.registry.mark_activity()
+        progress = event.progress
+        self.registry.set_trigger(progress.durationMs, progress.numInputRows)
 
     def onQueryIdle(self, event) -> None:
         self.registry.mark_activity()

@@ -11,6 +11,7 @@ import json
 import re
 import socket
 import sys
+import time
 import urllib.request
 from pathlib import Path
 
@@ -93,7 +94,13 @@ def test_serve_delivers_debezium_files_to_the_broker(spark, sf_dir, tmp_path):
         with serve(spark.readStream.text(src), cfg, str(tmp_path / "ckpt"), sink) as (query, port):
             assert listeners() == n_listeners + 1
             query.processAllAvailable()
-            metrics = urllib.request.urlopen(f"http://127.0.0.1:{port}/metrics", timeout=10).read().decode()
+            # the listener hears of a trigger after its commit, so poll
+            deadline = time.time() + 30
+            while True:
+                metrics = urllib.request.urlopen(f"http://127.0.0.1:{port}/metrics", timeout=10).read().decode()
+                if 'phase="walCommit"' in metrics or time.time() > deadline:
+                    break
+                time.sleep(0.2)
         consumed = []
         for dest in {d for d, _ in want}:
             for m in consume_all(broker.host, broker.port, dest):
@@ -109,3 +116,4 @@ def test_serve_delivers_debezium_files_to_the_broker(spark, sf_dir, tmp_path):
     assert set(consumed) == want
     processed = re.findall(r"^outboxx_events_processed_total\{.*\} (\d+)$", metrics, re.M)
     assert sum(map(int, processed)) == len(consumed)
+    assert re.search(r'^outboxx_trigger_phase_ms\{phase="walCommit"\} \d+$', metrics, re.M)

@@ -6,7 +6,9 @@ snapshot-before-stream bootstrap ordering, metrics/liveness."""
 from __future__ import annotations
 
 import json
+import os
 import time
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -94,6 +96,24 @@ def test_tally_columns_are_built_once_per_query(spark, multi_file_feed, tmp_path
     }
 
 
+def _crash_mid_log_write(ckpt: str) -> None:
+    """Leave the checkpoint as a crash inside two log writes would: the
+    newest batch's commit never renamed into place, the next batch's
+    offsets half written. Each write leaves only its temp file
+    (``.<n>.<uuid>.tmp``) and that file's checksum sidecar."""
+    logs = {d: os.path.join(ckpt, d) for d in ("offsets", "commits")}
+    last = max(int(n) for n in os.listdir(logs["offsets"]) if n.isdigit())
+    for name in (str(last), f".{last}.crc"):
+        if os.path.exists(os.path.join(logs["commits"], name)):
+            os.remove(os.path.join(logs["commits"], name))
+    for d, n in (("commits", last), ("offsets", last + 1)):
+        tmp = f".{n}.{uuid.uuid4()}.tmp"
+        with open(os.path.join(logs[d], tmp), "w") as f:
+            f.write('v1\n{"batchWatermarkMs":0,"batchTimes')
+        with open(os.path.join(logs[d], f".{tmp}.crc"), "wb") as f:
+            f.write(b"crc")
+
+
 def test_checkpoint_restart_is_gap_free_and_no_reprocess(spark, multi_file_feed, tmp_path):
     out_dir = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
@@ -109,6 +129,7 @@ def test_checkpoint_restart_is_gap_free_and_no_reprocess(spark, multi_file_feed,
         time.sleep(0.3)
     q.stop()
     partial = _read_out(spark, out_dir).count()
+    _crash_mid_log_write(ckpt)
 
     # phase 2: restart from the same checkpoint, drain the rest
     q2 = start_stream(spark, multi_file_feed, cfg, out_dir, ckpt)
@@ -221,6 +242,36 @@ def test_registry_liveness_window():
     assert reg.is_live()
 
 
+def test_registry_renders_the_last_trigger_phases():
+    reg = MetricsRegistry()
+    listener = CdcQueryListener(reg)
+
+    class Progress:
+        durationMs = {"walCommit": 11, "addBatch": 240, "triggerExecution": 290}
+        numInputRows = 2000
+
+    class Ev:
+        progress = Progress()
+
+    listener.onQueryProgress(Ev())
+    Progress.durationMs = {"walCommit": 9, "latestOffset": 12}
+    Progress.numInputRows = 0
+    listener.onQueryProgress(Ev())
+    text = reg.render_prometheus()
+    # only the last trigger's phases, each under its own label
+    assert [line for line in text.splitlines() if "trigger_phase" in line] == [
+        "# HELP outboxx_trigger_phase_ms Duration of each phase of the last trigger.",
+        "# TYPE outboxx_trigger_phase_ms gauge",
+        'outboxx_trigger_phase_ms{phase="latestOffset"} 12',
+        'outboxx_trigger_phase_ms{phase="walCommit"} 9',
+    ]
+    assert "\noutboxx_trigger_input_rows 0\n" in text
+    # every metric family carries its HELP and TYPE lines
+    families = {line.split()[2] for line in text.splitlines() if line.startswith("# TYPE")}
+    helped = {line.split()[2] for line in text.splitlines() if line.startswith("# HELP")}
+    assert families == helped and len(families) == 5
+
+
 def test_listener_counts_termination_errors(spark):
     reg = MetricsRegistry()
     listener = CdcQueryListener(reg)
@@ -256,8 +307,6 @@ def test_streamable_dir_handles_file_uri_single_file(spark):
     bare = _streamable_dir(f"{SF}/events.parquet")
     uri = _streamable_dir(f"file://{SF}/events.parquet")
     assert bare == uri  # same shim directory for both spellings
-    import os
-
     assert os.path.isdir(uri)
     assert _streamable_dir("hdfs://nn/data/feed") == "hdfs://nn/data/feed"
 
