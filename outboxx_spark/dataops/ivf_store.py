@@ -39,7 +39,6 @@ multi-segment scan and is pinned equal to it file-for-file by test
 from __future__ import annotations
 
 import json
-from typing import Sequence
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window as W
@@ -79,32 +78,16 @@ def committed_generations(spark: SparkSession, store_dir: str) -> list[int]:
     return _generations(spark, store_dir)[0]
 
 
-def committed_add_tags(spark: SparkSession, store_dir: str) -> set[str]:
-    """The ``tag`` of every COMMITTED generation — the idempotence
-    check streaming ingest replays against (a torn generation has no
-    commit json, so its tag is invisible and the replay re-adds)."""
-    tags: set[str] = set()
-    for gen in committed_generations(spark, store_dir):
-        raw = fs_read_text(spark, f"{store_dir}/{_GEN_PREFIX}{gen}/{_GEN_COMMIT}")
-        tag = json.loads(raw).get("tag") if raw else None
-        if tag is not None:
-            tags.add(tag)
-    return tags
-
-
 def ivf_index_add(
     emb: DataFrame,
     store_dir: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    tag: str | None = None,
 ) -> int:
     """Append ``emb`` to the index as a new sealed generation using the
     STORED quantizer. Returns the generation id. Fail-stops on
     dimension drift (the add that 'works' by truncating or padding
-    vectors would silently poison every later probe). ``tag`` rides in
-    the commit json so replay-driven callers (streaming ingest) can
-    recognize an already-committed addition."""
+    vectors would silently poison every later probe)."""
     spark = emb.sparkSession
     meta = _load_meta(spark, store_dir)
     dim = int(meta["dim"])
@@ -135,8 +118,6 @@ def ivf_index_add(
     )
     # marker LAST = the segment's commit mark
     commit = {"n_vectors": int(n_new), "dim": dim}
-    if tag is not None:
-        commit["tag"] = tag
     fs_write_text(spark, f"{gen_dir}/{_GEN_COMMIT}", json.dumps(commit))
     return gen
 

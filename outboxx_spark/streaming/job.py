@@ -31,7 +31,6 @@ partitioned parquet per destination.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable, Iterator
 from contextlib import ExitStack, contextmanager
 
@@ -55,9 +54,7 @@ from outboxx_spark.streaming.metrics import (
 )
 
 
-def snapshot_tables_preflight(
-    sf_dir: str, config: PipelineConfig, spark: SparkSession | None = None
-) -> list[str]:
+def snapshot_tables_preflight(sf_dir: str, config: PipelineConfig, spark: SparkSession) -> list[str]:
     """V3-analog pre-flight: a read-opted resource must exist as a
     snapshot source (the reference validates table existence against
     pg_catalog before starting, `src/source/postgres/validator.zig:
@@ -65,29 +62,15 @@ def snapshot_tables_preflight(
     virtual ``public.tN`` tables) have no snapshot source and are
     skipped — their READ events arrive in-band.
 
-    With a session, existence probes go through Hadoop's FileSystem —
-    the SAME path resolution ``snapshot_table``'s ``spark.read.parquet``
-    will use (bare paths resolve against fs.defaultFS on a cluster), so
-    the probe can never disagree with the read that follows it.
-    Driver-local os.path is the sessionless fallback for local bare
-    paths only; a scheme-qualified sf_dir without a session raises
-    instead of silently misreporting False for every resource."""
-    if spark is None and "://" in sf_dir:
-        raise ValueError(
-            f"snapshot_tables_preflight needs a SparkSession to probe "
-            f"scheme-qualified locations (got {sf_dir!r}): os.path would "
-            f"silently report every resource absent"
-        )
-    out = []
-    for resource in config.snapshot_resources():
-        table = resource.split(".", 1)[1]
-        path = f"{sf_dir}/{table}.parquet"
-        present = (
-            fs_exists(spark, path) if spark is not None else os.path.exists(path)
-        )
-        if present:
-            out.append(resource)
-    return out
+    Existence probes go through Hadoop's FileSystem — the SAME path
+    resolution ``snapshot_table``'s ``spark.read.parquet`` will use
+    (bare paths resolve against fs.defaultFS on a cluster), so the probe
+    can never disagree with the read that follows it."""
+    return [
+        resource
+        for resource in config.snapshot_resources()
+        if fs_exists(spark, f"{sf_dir}/{resource.split('.', 1)[1]}.parquet")
+    ]
 
 
 def run_snapshot_phase(
@@ -161,25 +144,24 @@ def _delivery(
     return delivered, process_batch
 
 
-def _parquet_sink(out_dir: str, exactly_once: bool) -> Callable[[DataFrame, int], None]:
-    """``start_stream``'s sink when it is given no ``sink_fn``: partitioned
-    parquet per destination, appended, or per (epoch, destination)
-    overwritten when ``exactly_once``."""
+def epoch_overwrite_sink(out_dir: str) -> Callable[[DataFrame, int], None]:
+    """An exactly-once file ``sink_fn``, beyond the reference's
+    at-least-once guarantee: output is partitioned by (epoch,
+    destination) and written with dynamic partition overwrite, so a
+    replayed micro-batch *replaces* its own epoch partition instead of
+    appending duplicates — idempotent-producer semantics for files."""
 
     def sink(delivery: DataFrame, epoch_id: int) -> None:
-        if exactly_once:
-            (
-                delivery.select(F.lit(epoch_id).alias("epoch"), "*")
-                .write.mode("overwrite")
-                # per-write option, not session conf: a session-global
-                # partitionOverwriteMode=dynamic would silently change every
-                # later mode("overwrite") in the same SparkSession
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("epoch", "destination")
-                .parquet(out_dir)
-            )
-        else:
-            delivery.write.mode("append").partitionBy("destination").parquet(out_dir)
+        (
+            delivery.select(F.lit(epoch_id).alias("epoch"), "*")
+            .write.mode("overwrite")
+            # per-write option, not session conf: a session-global
+            # partitionOverwriteMode=dynamic would silently change every
+            # later mode("overwrite") in the same SparkSession
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("epoch", "destination")
+            .parquet(out_dir)
+        )
 
     return sink
 
@@ -192,28 +174,20 @@ def start_stream(
     checkpoint_dir: str,
     registry: MetricsRegistry | None = None,
     max_files_per_trigger: int = 1,
-    exactly_once: bool = False,
     sink_fn=None,
 ):
     """The file-feed stream (the drain perfbench measures): drains the
     feed under ``sf_dir`` once (``availableNow``) through ``_delivery``
-    into ``sink_fn``, whose contract ``_delivery`` states.
-
-    ``exactly_once=True`` upgrades the file sink beyond the reference's
-    guarantee: output is partitioned by (epoch, destination) and written
-    with dynamic partition overwrite, so a replayed micro-batch
-    *replaces* its own epoch partition instead of appending duplicates —
-    idempotent-producer semantics for files. It is a file sink mode, so
-    it cannot be combined with ``sink_fn``."""
-    if exactly_once and sink_fn is not None:
-        raise ValueError("exactly_once is a file-sink mode; it cannot be combined with sink_fn")
+    into ``sink_fn``, whose contract ``_delivery`` states. Without
+    ``sink_fn`` it appends partitioned parquet per destination under
+    ``out_dir``."""
     feed = read_feed_stream(spark, sf_dir, max_files_per_trigger)
     frame, body = _delivery(
         feed,
         config.streams,
         FEED_DATA_COLS,
         registry or MetricsRegistry(),
-        sink_fn or _parquet_sink(out_dir, exactly_once),
+        sink_fn or (lambda delivery, _: delivery.write.mode("append").partitionBy("destination").parquet(out_dir)),
     )
     return epochs.start(frame, body, checkpoint_dir)
 

@@ -79,92 +79,3 @@ def streaming_materialize(feed_stream: DataFrame, key: str = "user_id") -> DataF
         "update",
         GroupStateTimeout.NoTimeout,
     )
-
-
-# ---------------------------------------------------------------------------
-# transformWithStateInPandas variant (Spark 4 arbitrary-state API)
-# ---------------------------------------------------------------------------
-
-
-def _tws_available() -> bool:
-    # The API itself ships with Spark >= 4.0, but its Python state
-    # server speaks protobuf to the JVM — absent protobuf, the runner
-    # crashes at init. Gate on both so callers get a clean
-    # NotImplementedError instead of a mid-query worker crash.
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-        from pyspark.sql.streaming.stateful_processor import StatefulProcessor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-if _tws_available():
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class MaterializeProcessor(StatefulProcessor):
-        """Same semantics as :func:`streaming_materialize`, on the
-        Spark 4 ``transformWithStateInPandas`` API: typed ValueState per
-        (resource, key) holding the winning event; emits only on winner
-        advance. The new API gives the engine-managed state store
-        (RocksDB in deployment), typed state handles, and timers —
-        the successor to applyInPandasWithState for custom operators.
-        """
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("winner", STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            resource, user_id = key
-            best = tuple(self._state.get()) if self._state.exists() else None
-            prev_lsn = best[0] if best else -1
-            for pdf in rows:
-                for rec in pdf.itertuples(index=False):
-                    if rec.lsn is None or pd.isna(rec.lsn):
-                        continue
-                    if best is None or int(rec.lsn) > best[0]:
-                        best = (
-                            int(rec.lsn),
-                            rec.op,
-                            None if pd.isna(rec.commit_ts) else int(rec.commit_ts),
-                            rec.event_type,
-                            None if pd.isna(rec.value) else float(rec.value),
-                            rec.props,
-                        )
-            if best is not None and best[0] > prev_lsn:
-                self._state.update(best)
-                yield pd.DataFrame(
-                    [
-                        {
-                            "resource": resource,
-                            "key": int(user_id),
-                            "op": best[1],
-                            "lsn": best[0],
-                            "commit_ts": best[2],
-                            "event_type": best[3],
-                            "value": best[4],
-                            "props": best[5],
-                        }
-                    ]
-                )
-
-        def close(self) -> None:
-            pass
-
-
-def streaming_materialize_tws(feed_stream: DataFrame, key: str = "user_id") -> DataFrame:
-    """:func:`streaming_materialize` on transformWithStateInPandas —
-    identical output contract (pinned by the equivalence test); requires
-    Spark >= 4.0."""
-    if not _tws_available():
-        raise NotImplementedError("transformWithStateInPandas requires Spark >= 4.0")
-    return feed_stream.groupBy("resource", key).transformWithStateInPandas(
-        MaterializeProcessor(),
-        OUTPUT_SCHEMA,
-        "update",
-        "processingTime",
-    )

@@ -1,6 +1,6 @@
-"""The marker-last epoch protocol (streaming/epochs.py): its listing,
-newest and retention rules on a hand-built directory, and the
-crash-window matrix over every side stream that commits through it.
+"""The marker-last epoch protocol (streaming/epochs.py): its listing
+rule on a hand-built directory, and the crash-window matrix over every
+stream that commits through it.
 
 A stream's row of the matrix is one walk: epoch 0 commits, then epoch 1
 crashes at each window in turn, each attempt being the replay of the
@@ -21,23 +21,9 @@ from typing import Any, Callable
 import pytest
 from pyspark.sql.readwriter import DataFrameWriter
 
-import outboxx_spark.dataops.export as export_mod
-from outboxx_spark.dataops.hll import hll_sketch_by
-from outboxx_spark.dataops.linededup import dedup_paragraphs
-from outboxx_spark.dataops.theta import theta_sketch_by
-from outboxx_spark.operators.drift import schema_drift_report
 from outboxx_spark.operators.incragg import incremental_group_totals
 from outboxx_spark.streaming import epochs
-from outboxx_spark.streaming.drift_stream import apply_drift_batch, read_drift_report
-from outboxx_spark.streaming.export_stream import batch_dir, make_export_batch_processor, read_export
 from outboxx_spark.streaming.incragg_stream import apply_incremental_totals_batch, read_group_totals
-from outboxx_spark.streaming.paragraph_dedup_stream import (
-    _gen_dir,
-    _out_dir,
-    make_paragraph_dedup_processor,
-    read_deduped,
-)
-from outboxx_spark.streaming.sketch_stream import apply_sketch_batch, apply_theta_batch, read_registers
 
 
 def _epoch(root, name, marker=True):
@@ -60,21 +46,15 @@ def test_committed_newest_and_retain_see_only_committed_epochs(spark, tmp_path):
 
     assert epochs.committed(spark, r, "gen=") == [0, 2, 10]  # numeric order
     assert epochs.committed(spark, r, "other=") == [7]
-    assert epochs.newest(spark, r) == f"{r}/gen=10"
+    assert epochs.is_committed(spark, f"{r}/gen=10")
+    assert not epochs.is_committed(spark, f"{r}/gen=5")
     assert not epochs.is_committed(spark, f"{r}/gen=11")
-    epochs.retain(spark, r)
-    assert epochs.committed_dirs(spark, r, "gen=") == [f"{r}/gen=2", f"{r}/gen=10"]
-    # only committed epochs are pruned: torn, sibling and temp dirs stay
-    assert sorted(os.listdir(r)) == ["gen=10", "gen=11", "gen=2", "gen=3.tmp", "gen=5", "other=7"]
 
 
 def test_nothing_committed_means_no_newest(spark, tmp_path):
     assert epochs.committed(spark, str(tmp_path / "missing"), "gen=") == []
-    with pytest.raises(FileNotFoundError):
-        epochs.newest(spark, str(tmp_path / "missing"))
     _epoch(tmp_path, "gen=0", marker=False)
-    with pytest.raises(FileNotFoundError):
-        epochs.newest(spark, str(tmp_path))
+    assert epochs.committed(spark, str(tmp_path), "gen=") == []
 
 
 def test_discard_torn_then_publish_commits(spark, tmp_path):
@@ -96,68 +76,15 @@ class Case:
     read: Callable[[Any, str], Any]  # the served answer, comparable
     batch: Callable[[Any], Any]  # the batch answer over one frame
     dirs: Callable[[str, int], list[str]]  # what an epoch writes
-    snapshot: bool = False  # whole-state generations under root, two kept
 
 
 def _rows(df, *cols):
     return sorted(tuple(r[c] for c in cols) for r in df.collect())
 
 
-def _gen(root, e):
-    return [epochs.epoch_dir(root, epochs.GEN, e)]
-
-
-DRIFT_COLS = ("resource", "key", "n_events", "first_lsn", "last_lsn", "added", "dropped")
-KEYS = (
-    [(g, k) for g in "ab" for k in range(0, 12)],
-    [(g, k) for g in "bc" for k in range(8, 20)],
-    [("a", k) for k in range(18, 26)],
-)
 TOTALS = ("resource", "n_live", "sum_value_cents")
 
 CASES = {
-    "drift": Case(
-        "resource string, lsn long, props string",
-        (
-            [("t0", 1, '{"k": 1, "legacy": 1}'), ("t1", 2, '{"k": 2}')],
-            [("t0", 3, '{"k": 3}'), ("t0", 4, "not json")],
-            [("t0", 5, '{"k": 5, "v2": 1}'), ("t1", 6, '{"k": 6, "v2": 1}')],
-        ),
-        apply_drift_batch,
-        lambda spark, root: _rows(read_drift_report(spark, root), *DRIFT_COLS),
-        lambda df: _rows(schema_drift_report(df), *DRIFT_COLS),
-        _gen,
-        snapshot=True,
-    ),
-    "hll": Case(
-        "g string, k long",
-        KEYS,
-        lambda b, root, e: apply_sketch_batch(b, root, e, "g", "k"),
-        lambda spark, root: _rows(read_registers(spark, root), "group", "bucket", "max_rho"),
-        lambda df: _rows(hll_sketch_by(df, "g", "k"), "group", "bucket", "max_rho"),
-        _gen,
-        snapshot=True,
-    ),
-    "theta": Case(
-        "g string, k long",
-        KEYS,
-        lambda b, root, e: apply_theta_batch(b, root, e, "g", "k"),
-        lambda spark, root: _rows(read_registers(spark, root), "group", "h"),
-        lambda df: _rows(theta_sketch_by(df, "g", "k"), "group", "h"),
-        _gen,
-        snapshot=True,
-    ),
-    "export": Case(
-        "doc_id long, text string",
-        tuple(
-            [(i, " ".join(f"w{i}_{j}" for j in range(1 + i % 5))) for i in ids]
-            for ids in (range(0, 10), range(10, 16), range(16, 20))
-        ),
-        lambda b, root, e: make_export_batch_processor(root, target=20, n_buckets=4)(b, e),
-        lambda spark, root: _rows(read_export(spark, root), "doc_id", "text"),
-        lambda df: _rows(df, "doc_id", "text"),
-        lambda root, e: [batch_dir(root, e)],
-    ),
     "incragg": Case(
         "op string, resource string, lsn long, commit_ts long, user_id long, "
         "event_type string, value double, props string",
@@ -175,18 +102,6 @@ CASES = {
         lambda spark, root: _rows(read_group_totals(spark, f"{root}/ledger"), *TOTALS),
         lambda df: _rows(incremental_group_totals(df), *TOTALS),
         lambda root, e: [f"{root}/ledger/epoch={e}"],
-    ),
-    "paragraph": Case(
-        "doc_id long, text string",
-        (
-            [(1, "a b c d e f"), (2, "d e f g h i")],
-            [(3, "a b c x y z"), (4, "g h i")],  # seen in epoch 0: dropped
-            [(5, "x y z j k l")],  # seen in the replayed epoch 1
-        ),
-        lambda b, root, e: make_paragraph_dedup_processor(root)(b, e),
-        lambda spark, root: _rows(read_deduped(spark, root), "doc_id", "new_text"),
-        lambda df: _rows(dedup_paragraphs(df), "doc_id", "new_text"),
-        lambda root, e: [_out_dir(root, e), _gen_dir(root, e)],
     ),
 }
 
@@ -211,7 +126,6 @@ def _crash_at(m, point):
         raise Crash(point)
 
     m.setattr(epochs, "fs_write_text", marker)
-    m.setattr(export_mod, "fs_write_text", marker)  # export's manifest
 
 
 def _files(dirs):
@@ -254,7 +168,6 @@ def _walk(spark, root, name):
 
     case.apply(frames[2], root, 2)  # on what the replays left behind
     assert case.read(spark, root) == three
-    assert epochs.committed(spark, root, epochs.GEN) == ([1, 2] if case.snapshot else [])
 
 
 _WALKS: dict[str, Exception | None] = {}

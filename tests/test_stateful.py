@@ -219,78 +219,6 @@ def test_stream_stream_join_converges_to_batch(spark, multi_file_feed):
     assert got == expect and got
 
 
-def _protobuf_available() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _protobuf_available(),
-    reason="transformWithState's Python state server requires protobuf, "
-    "not installed in this container (the operator is implemented and "
-    "gated; applyInPandasWithState is the tested path here). "
-    "`pip install protobuf` re-attempted r8 2026-08-15: the sandbox "
-    "has no network route to any pypi index (NewConnectionError on "
-    "every retry), so vendoring via pip is impossible here",
-)
-def test_tws_materialize_converges_to_batch(spark, multi_file_feed, tmp_path):
-    """transformWithStateInPandas variant must produce the same final
-    winners as both the applyInPandasWithState form and the batch
-    materialize()."""
-    from outboxx_spark.streaming.stateful import streaming_materialize_tws
-
-    out_dir = str(tmp_path / "tws_out")
-    # transformWithState requires the RocksDB state store provider
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    stream = read_feed_stream(spark, multi_file_feed, max_files_per_trigger=2)
-
-    q = (
-        streaming_materialize_tws(stream)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", str(tmp_path / "tws_ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-
-    emitted = spark.read.parquet(out_dir)
-    # final winner per key = highest-lsn emission
-    w_rows = emitted.collect()
-    final: dict = {}
-    for r in w_rows:
-        cur = final.get((r.resource, r.key))
-        if cur is None or r.lsn > cur.lsn:
-            final[(r.resource, r.key)] = r
-    batch = {
-        (r.resource, r.user_id): r
-        for r in materialize(read_feed(spark, multi_file_feed), drop_deleted=False).collect()
-    }
-    assert set(final) == set(batch)
-    for k, r in final.items():
-        assert (r.lsn, r.op) == (batch[k].lsn, batch[k].op)
-
-
-def test_tws_gate_raises_cleanly_when_unavailable(spark, multi_file_feed):
-    """When the runtime lacks the transformWithState prerequisites the
-    operator must fail at call time with NotImplementedError, not crash
-    a running query."""
-    from outboxx_spark.streaming.stateful import _tws_available, streaming_materialize_tws
-
-    if _tws_available():
-        pytest.skip("runtime supports transformWithState; gate not exercised")
-    with pytest.raises(NotImplementedError):
-        streaming_materialize_tws(read_feed_stream(spark, multi_file_feed))
-
-
 @pytest.mark.slow
 def test_stream_stream_join_survives_restart(spark, multi_file_feed, tmp_path):
     """Kill the watermarked stream-stream join mid-feed; the restart

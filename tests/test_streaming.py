@@ -14,7 +14,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from outboxx_spark.config import PipelineConfig, make_stream, validate
-from outboxx_spark.operators.dedup import dedup_events
 from outboxx_spark.pipeline import FEED_DATA_COLS, routed_envelopes
 from outboxx_spark.streaming.job import run_snapshot_phase, start_stream
 from outboxx_spark.streaming.metrics import CdcQueryListener, MetricsRegistry
@@ -310,12 +309,3 @@ def test_streamable_dir_handles_file_uri_single_file(spark):
     assert os.path.isdir(uri)
     assert _streamable_dir("hdfs://nn/data/feed") == "hdfs://nn/data/feed"
 
-
-def test_preflight_rejects_scheme_path_without_session():
-    """os.path.exists silently reports every scheme-qualified resource
-    absent — the sessionless fallback must refuse rather than skip."""
-    from outboxx_spark.streaming.job import snapshot_tables_preflight
-    from outboxx_spark.testbed import default_config
-
-    with pytest.raises(ValueError, match="SparkSession"):
-        snapshot_tables_preflight("hdfs://nn/data/sf1", default_config())
